@@ -733,7 +733,7 @@ def embedding_cosine_dups(
         # one parsed expression for all bands' codes (see
         # similarity.lsh_codes: the Column form paid ~10 py4j round
         # trips per fold and made driver plan-building dominate)
-        codes = lsh_codes("`__v`", dim, bucket_bits, bands)
+        codes = lsh_codes("__v", dim, bucket_bits, bands)
         keyed = base.select(
             F.col(id_col), F.explode(codes).alias("__bucket")
         )
@@ -755,7 +755,7 @@ def embedding_cosine_dups(
     elif bucket_bits > 0:
         dim = len(emb.select(vec_col).first()[0])
         coded = base.withColumn(
-            "__bucket", lsh_code("`__v`", dim, bucket_bits, 0)
+            "__bucket", lsh_code("__v", dim, bucket_bits, 0)
         )
         if max_bucket_size is not None:
             coded = _drop_mega_buckets(coded, ["__bucket"], max_bucket_size)

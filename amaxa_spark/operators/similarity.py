@@ -1181,7 +1181,7 @@ def knn_join_lsh(
         return df.select(
             F.col(id_col),
             F.explode(
-                lsh_codes(f"`{vec_col}`", dim, bits, bands)
+                lsh_codes(vec_col, dim, bits, bands)
             ).alias("bucket"),
         )
 
@@ -1313,8 +1313,15 @@ def _hyperplane(dim: int, plane_idx: int) -> list[float]:
     return comps
 
 
-def _lsh_band_sql(vec_sql: str, dim: int, bits: int, band: int) -> str:
-    """The SQL text of one band's sign-LSH code: per bit, the same
+def _quote_ident(name: str) -> str:
+    """A column name as a backticked SQL identifier, inner backticks
+    doubled — a user-supplied name never becomes SQL text as it is."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lsh_band_sql(vec_col: str, dim: int, bits: int, band: int) -> str:
+    """The SQL text of one band's sign-LSH code over the column named
+    ``vec_col`` (quoted by :func:`_quote_ident`): per bit, the same
     ``aggregate(zip_with(vec, plane))`` fold the Column form built —
     identical expressions after parsing, so codes are byte-identical —
     but rendered as TEXT so the whole band parses in ONE py4j call
@@ -1322,6 +1329,7 @@ def _lsh_band_sql(vec_sql: str, dim: int, bits: int, band: int) -> str:
     bits × bands = 36 folds per call site that made driver-side plan
     BUILDING the dominant cost of the LSH queries: measured ~1.9 s of
     ann_lsh_recall's 3.2 s before any job ran)."""
+    vec_sql = _quote_ident(vec_col)
     bit_sqls = []
     for b in range(bits):
         plane = ", ".join(
@@ -1339,15 +1347,15 @@ def _lsh_band_sql(vec_sql: str, dim: int, bits: int, band: int) -> str:
     )
 
 
-def lsh_codes(vec_sql: str, dim: int, bits: int, bands: int):
+def lsh_codes(vec_col: str, dim: int, bits: int, bands: int):
     """ALL band codes as one parsed ``array<string>`` expression —
     one py4j round trip for the whole bits × bands construction (see
-    :func:`_lsh_band_sql`). ``vec_sql`` is the vector column's SQL
-    name/text."""
+    :func:`_lsh_band_sql`). ``vec_col`` is the vector column's name,
+    any characters allowed."""
     return F.expr(
         "array({})".format(
             ", ".join(
-                _lsh_band_sql(vec_sql, dim, bits, band)
+                _lsh_band_sql(vec_col, dim, bits, band)
                 for band in range(bands)
             )
         )
@@ -1363,7 +1371,8 @@ def lsh_code(vec_col, dim: int, bits: int, band: int):
     ``dim``-term chained-addition expression, whose tree the optimizer
     and codegen would otherwise have to walk per bit (bits × dim terms
     made plan compilation the dominant cost at small scale). A string
-    ``vec_col`` takes the one-parse SQL path (:func:`_lsh_band_sql`);
+    ``vec_col`` names a column and takes the one-parse SQL path
+    (:func:`_lsh_band_sql`, which quotes the name);
     a Column keeps the element-wise construction for expressions that
     have no SQL name."""
     if isinstance(vec_col, str):
@@ -1411,7 +1420,7 @@ def lsh_cosine_topk(
     per side row instead of once per pair, byte-identical sims."""
     codes = emb.select(
         F.col(id_col),
-        F.explode(lsh_codes(f"`{vec_col}`", dim, bits, bands)).alias("bucket"),
+        F.explode(lsh_codes(vec_col, dim, bits, bands)).alias("bucket"),
     )
     qcodes = codes.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), "bucket"

@@ -21,6 +21,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class TableCatalog:
@@ -630,7 +631,7 @@ def _merge_target_frame(
     spark, root: str, meta: dict, cur_paths: list[str], upd, pk, set_cols
 ):
     """The frame a MERGE rewrites (shared by both layouts): the
-    affected buckets' current rows (merged-schema read + added-column
+    affected buckets' current rows (recorded-schema read + added-column
     fill — the rewrite MATERIALIZES metadata-added columns, the
     deferred ALTER backfill), or a SCHEMA-ONLY frame when every
     affected bucket is brand new — taken from any existing bucket if
@@ -660,10 +661,12 @@ def _merge_target_frame(
 
             from pyspark.sql.types import StructType
 
+            # an init frame read back from a versioned table recorded
+            # the bucket column too; the rewrite re-derives it
             return _fill_added_columns(
                 spark.createDataFrame(
                     [], StructType.fromJson(_json.loads(schema_json))
-                ),
+                ).drop(MERGE_BUCKET_COL),
                 meta,
             )
         return _fill_added_columns(upd.select(pk, *set_cols).limit(0), meta)
@@ -1306,7 +1309,8 @@ def write_versioned_table(
     if constraints:
         # the new baseline must satisfy the constraints it will carry
         _check_constraints_frame(
-            df.sparkSession.read.parquet(os.path.join(path, gen)),
+            df.sparkSession.read.schema(out.drop(MERGE_BUCKET_COL).schema)
+            .parquet(os.path.join(path, gen)),
             constraints,
             path,
         )
@@ -1456,7 +1460,7 @@ def _column_map(entry: dict) -> dict:
     mapping, the machinery behind metadata-only RENAME COLUMN).
     Parquet files always carry a column's ORIGINAL name — stable for
     the life of the table — so generations written before and after
-    any number of renames stay schema-uniform (mergeSchema never sees
+    any number of renames stay schema-uniform (a scan never sees
     two names for one column) and rewrites never have to migrate old
     files. Empty (the common case) until the first rename."""
     return entry.get("column_map") or {}
@@ -1501,13 +1505,17 @@ def _to_physical(df: DataFrame, entry: dict) -> DataFrame:
 
 
 def _read_logical(
-    spark: SparkSession, manifest: dict, *paths
+    spark: SparkSession, manifest: dict, *paths,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """The standard logical read of committed bucket paths:
-    merged-schema parquet scan, then physical→logical translation.
-    Everything downstream of this call — predicates, SET expressions,
-    constraints, added-column fill — speaks logical names only."""
-    return _to_logical(_read_maybe_merged(spark, manifest, *paths), manifest)
+    recorded-schema parquet scan (:func:`_read_physical`), then
+    physical→logical translation. Everything downstream of this call —
+    predicates, SET expressions, constraints, added-column fill —
+    speaks logical names only."""
+    return _to_logical(
+        _read_physical(spark, manifest, *paths, schema=schema), manifest
+    )
 
 
 DV_PK_COL = "__dv_pk"
@@ -1572,7 +1580,7 @@ def _apply_dv(
             for b, g in sorted(dv.items())
         ]
         dead = (
-            spark.read.parquet(*paths)
+            _read_dv(spark, entry, *paths)
             .select(F.col(DV_PK_COL).alias(pk))
             .distinct()
         )
@@ -1654,6 +1662,13 @@ def read_versioned_table(
     entry names — a consistent point-in-time view regardless of any
     in-flight merge.
 
+    Planning is manifest-only: the scan takes the schema the manifest
+    records (init schema, ALTERs and widenings applied —
+    :func:`_manifest_read_schema`), so opening a snapshot reads no
+    parquet footer and starts no Spark job; the first job is the
+    caller's action. Only pre-format manifests without a recorded
+    schema still infer from footers.
+
     Data skipping (both optional, composable, and EXACT — the same
     predicate is re-applied to the surviving rows, so the result
     always equals the unpruned read with a ``.where`` on top):
@@ -1670,10 +1685,11 @@ def read_versioned_table(
       values); uniform columns span every bucket and prune nothing —
       the honest limit of stats over a hash layout.
     - ``pk_in``: a BOUNDED list of key values (point-lookup shape,
-      driver cost O(|values|)); the exact pk-hash buckets are
-      computed with the engine's own bucket expression, so a k-key
-      lookup on a 10⁵-bucket 100 TB table reads ≤ k buckets — always
-      exact, no stats needed.
+      driver cost O(|values|)); the exact pk-hash buckets come from
+      :func:`pk_value_buckets` — on the driver, without a Spark job,
+      for string keys and in-range ``int`` keys of an integer pk — so
+      a k-key lookup on a 10⁵-bucket 100 TB table reads ≤ k buckets —
+      always exact, no stats needed.
     - ``eq``: ``(col, value)`` equality conjuncts answered by the
       per-bucket Bloom filters (``bloom_cols`` opt-in) — point
       predicates on NON-pk columns of any distribution, where range
@@ -1693,10 +1709,6 @@ def read_versioned_table(
     if not paths:
         df = _empty_versioned_frame(spark, path, manifest)
     else:
-        # mergeSchema only when an ALTER happened: generations written
-        # after it carry the added columns while older ones do not — the
-        # unioned schema sees both. Alter-free tables (the common case)
-        # skip the all-footers merge pass on every scan.
         # Reading the leaf `<bucket>=N` dirs directly loses the partition
         # column — re-derive it so the versioned and non-versioned merge
         # layouts expose the SAME schema (it is a pure pk-hash expression,
@@ -1884,14 +1896,189 @@ def _apply_skipping_residual(
     return df
 
 
-def _read_maybe_merged(spark: SparkSession, manifest: dict, *paths) -> DataFrame:
+def _manifest_read_schema(entry: dict) -> StructType | None:
+    """The PHYSICAL read schema of a committed snapshot, from the
+    manifest alone (Delta's rule: the schema lives in the log, never
+    in data-file footers): the recorded ``schema_json`` plus the typed
+    ALTER-added columns, mapped through ``column_map``, minus dropped
+    columns and the bucket column. It is a superset of every
+    generation's file schema, so a column a file lacks (pre-ALTER
+    generations) reads as NULL — what the merged-schema footer pass
+    used to compute with one Spark job per scan. ``None`` for
+    pre-format manifests that recorded no schema."""
+    import json as _json
+
+    from pyspark.sql.types import StructField, _parse_datatype_string
+
+    sj = entry.get("schema_json")
+    if sj is None:
+        return None
+    added = entry.get("added_columns") or {}
+    skip = set(entry.get("dropped_columns") or []) | {MERGE_BUCKET_COL}
+    fields = [
+        StructField(_phys_name(entry, f.name), f.dataType)
+        for f in StructType.fromJson(_json.loads(sj)).fields
+        if f.name not in skip and f.name not in added
+    ]
+    fields += [
+        StructField(_phys_name(entry, c), _parse_datatype_string(spec["type"]))
+        for c, spec in added.items()
+        if c not in skip
+    ]
+    return StructType(fields)
+
+
+def _read_physical(
+    spark: SparkSession, manifest: dict, *paths,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Scan committed bucket paths under an EXPLICIT schema — ``schema``
+    (the physical schema a caller just wrote) or the manifest's
+    recorded one (:func:`_manifest_read_schema`): no footer read and no
+    Spark job at plan time. Only pre-format manifests without a
+    recorded schema still infer from footers (merged across files once
+    an ALTER made generations differ in columns)."""
+    if schema is None:
+        schema = _manifest_read_schema(manifest)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
     reader = spark.read
     if manifest.get("added_columns") or manifest.get("dropped_columns"):
-        # either ALTER direction makes generations differ in columns:
-        # added columns appear only in post-alter rewrites, dropped
-        # columns disappear from them — the union schema needs both
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(*paths)
+
+
+def _read_dv(spark: SparkSession, entry: dict, *paths) -> DataFrame:
+    """Scan deletion-vector sidecars: one ``__dv_pk`` column of the
+    recorded pk type (inferred only for pre-format manifests)."""
+    from pyspark.sql.types import StructField
+
+    dt = _recorded_col_type(entry, entry["pk"])
+    reader = spark.read
+    if dt is not None:
+        reader = reader.schema(StructType([StructField(DV_PK_COL, dt)]))
+    return reader.parquet(*paths).select(DV_PK_COL)
+
+
+# Type changes Spark's Parquet reader applies to OLD files when the
+# read schema is wider (checked on Spark 4.1, vectorized and parquet-mr
+# readers alike): physical type -> the types it can be read as.
+# Decimals widen by precision at the same scale (_type_widens).
+_READ_WIDENINGS = {
+    "tinyint": {"smallint", "int", "bigint", "double"},
+    "smallint": {"int", "bigint", "double"},
+    "int": {"bigint", "double"},
+    "float": {"double"},
+}
+
+
+def _type_widens(old, new, same_rendering: bool) -> bool:
+    """Can files written as ``old`` be read as ``new``? With
+    ``same_rendering``, only widenings that keep the string rendering
+    (integers, decimals at the same scale) qualify: the pk's rendering
+    is its bucket hash, and Bloom sidecars hash rendered values, so a
+    ``5`` that reads back as ``5.0`` would land in another bucket."""
+    from pyspark.sql.types import DecimalType
+
+    if isinstance(old, DecimalType) and isinstance(new, DecimalType):
+        return new.scale == old.scale and new.precision > old.precision
+    wider = _READ_WIDENINGS.get(old.simpleString(), set())
+    if same_rendering:
+        wider = wider - {"double"}
+    return new.simpleString() in wider
+
+
+def _adopt_written_schema(entry: dict, written: StructType | None) -> dict:
+    """Keep the recorded schema TRUE after a bucket write: ``written``
+    is the physical schema of the frame the commit wrote. A column
+    whose written type is the recorded one — or narrower in a way the
+    reader widens (a rebase onto a head that already widened) — needs
+    nothing; a column written WIDER in a way the reader applies to the
+    old files (long into int, double into float) has the wider type
+    recorded in the returned entry, committed atomically with the
+    data; anything else raises before the commit, since no single
+    read schema could serve both the old files and the new ones.
+    Pre-format manifests (no recorded schema) pass through."""
+    import json as _json
+
+    recorded = None if written is None else _manifest_read_schema(entry)
+    if recorded is None:
+        return entry
+    rec = {f.name: f.dataType for f in recorded.fields}
+    rev = {p: c for c, p in _column_map(entry).items()}
+    # bytes of a column a concurrent DROP removed are projected out by
+    # every reader, like the old generations' copies of it
+    dropped = {
+        _phys_name(entry, c) for c in entry.get("dropped_columns") or []
+    }
+    pinned = {_phys_name(entry, entry["pk"])} | {
+        _phys_name(entry, c)
+        for key in entry.get("bloom_cols") or []
+        for c in _bloom_key_cols(key)
+    }
+    wider: dict = {}
+    for f in written.fields:
+        if f.name == MERGE_BUCKET_COL or f.name in dropped:
+            continue
+        old = rec.get(f.name)
+        if old is None:
+            raise ValueError(
+                f"write produced column {f.name!r}, which the table's "
+                f"recorded schema does not have ({sorted(rec)})"
+            )
+        keep = f.name in pinned
+        if old.simpleString() == f.dataType.simpleString() or _type_widens(
+            f.dataType, old, keep
+        ):
+            continue
+        if not _type_widens(old, f.dataType, keep):
+            raise ValueError(
+                f"write changes column {rev.get(f.name, f.name)!r} from "
+                f"{old.simpleString()} to {f.dataType.simpleString()}, "
+                "which the parquet reader cannot apply to the files "
+                "already committed; cast the input to "
+                f"{old.simpleString()}"
+            )
+        wider[rev.get(f.name, f.name)] = f.dataType
+    if not wider:
+        return entry
+    out = dict(entry)
+    doc = _json.loads(entry["schema_json"])
+    for fld in doc["fields"]:
+        if fld["name"] in wider:
+            fld["type"] = wider.pop(fld["name"]).jsonValue()
+    out["schema_json"] = _json.dumps(doc)
+    if wider:
+        # what is left widened ALTER-added columns
+        out["added_columns"] = {
+            c: {**spec, "type": wider[c].simpleString()} if c in wider else spec
+            for c, spec in entry["added_columns"].items()
+        }
+    return out
+
+
+def _write_generation(
+    df: DataFrame, root: str, gen: str, entry: dict
+) -> StructType:
+    """Write a logical frame as one new generation of bucket files
+    under ``<root>/<gen>`` — THE bucket writer of every rewriting verb
+    — and return the physical schema written, which the verb hands to
+    its commit loop so the recorded schema follows it
+    (:func:`_adopt_written_schema`). A type change the reader cannot
+    apply raises here, before any file is written. A frame that
+    already carries the bucket column (OPTIMIZE's clustered layout)
+    is written as it is partitioned."""
+    if MERGE_BUCKET_COL not in df.columns:
+        df = df.withColumn(
+            MERGE_BUCKET_COL, _bucket_expr(entry["pk"], entry["n_buckets"])
+        )
+    out = _to_physical(df, entry)
+    written = out.drop(MERGE_BUCKET_COL).schema
+    _adopt_written_schema(entry, written)
+    out.write.mode("errorifexists").partitionBy(MERGE_BUCKET_COL).parquet(
+        os.path.join(root, gen)
+    )
+    return written
 
 
 # ---------------------------------------------------------------------------
@@ -1985,7 +2172,8 @@ def _stats_cmp(a, b):
 
 
 def _harvest_bucket_stats(
-    spark: SparkSession, root: str, gen: str, manifest: dict
+    spark: SparkSession, root: str, gen: str, manifest: dict,
+    schema: StructType | None = None,
 ) -> dict[str, dict]:
     """Per-bucket min/max/null-count for the manifest's ``stats_cols``
     over one freshly written generation: a single column-pruned
@@ -2001,7 +2189,10 @@ def _harvest_bucket_stats(
     values). Sidecars inherit the generation's immutability: a bucket
     rewrite points the manifest at a new generation whose sidecar
     carries the new bloom, so a stale bloom is structurally
-    impossible, and vacuum reclaims sidecars with their generation."""
+    impossible, and vacuum reclaims sidecars with their generation.
+
+    ``schema`` is the physical schema the generation was written with
+    (default: the manifest's recorded one) — the scan infers nothing."""
     cols = manifest.get("stats_cols") or []
     bloom_cols = manifest.get("bloom_cols") or []
     if not cols and not bloom_cols:
@@ -2019,7 +2210,7 @@ def _harvest_bucket_stats(
     # names (rewritten on every RENAME commit); immutable per-file /
     # bloom SIDECARS key by PHYSICAL names — stable for the life of
     # the table, so sidecars written before and after a rename agree
-    df = spark.read.parquet(gen_dir)
+    df = _read_physical(spark, manifest, gen_dir, schema=schema)
     dtypes = dict(df.dtypes)
     added = set(manifest.get("added_columns", {}))
     pairs = [(c, _phys_name(manifest, c)) for c in cols]
@@ -2587,6 +2778,10 @@ def _xxh64(data: bytes, seed: int = 42) -> int:
     return h
 
 
+# integer pk types by Spark typeName() -> bit width
+_INT_PK_BITS = {"byte": 8, "short": 16, "integer": 32, "long": 64}
+
+
 def pk_value_buckets(
     spark: SparkSession, manifest: dict, values: list
 ) -> list[int]:
@@ -2596,40 +2791,53 @@ def pk_value_buckets(
     the COLUMN type renders it — a Decimal literal inferred as
     decimal(38,18) renders '5.000000000000000000' while a
     decimal(10,2) column renders '5.00', a different bucket and a
-    silently-empty lookup. Hence: string keys of a RECORDED-string pk
-    resolve in pure driver Python (:func:`_xxh64` — zero Spark jobs,
-    the O(1)-latency point-lookup path); everything else goes through
-    one tiny Spark job that first casts the literals to the
-    manifest's recorded pk type, so the rendering is the layout's
-    own. Pre-format manifests (no recorded schema) fall back to
+    silently-empty lookup.
+
+    Two key shapes resolve in pure driver Python (:func:`_xxh64` —
+    zero Spark jobs, the O(1)-latency point-lookup path): ``str``
+    values of a recorded-string pk, and Python ``int`` values (not
+    ``bool``) of a recorded tinyint/smallint/int/bigint pk that fit
+    its range — ``str(v)`` is then exactly what ``cast(v as string)``
+    renders. Every other key (decimals, floats, timestamps, bools,
+    out-of-range ints) goes through one tiny Spark job per Python
+    type that first casts the literals to the
+    recorded pk type, so the rendering is the layout's own.
+    Pre-format manifests (no recorded schema) fall back to
     inferred-type hashing — best effort, exact for string keys.
     Driver cost is O(|values|) either way — for unbounded key sets
     use a left-semi join against the full read."""
     pk = manifest["pk"]
     n = manifest["n_buckets"]
     vals = [v for v in dict.fromkeys(values) if v is not None]
-    if not vals:
-        return []
     pk_dt = _recorded_col_type(manifest, pk)
-    if (
-        (pk_dt is None or pk_dt.typeName() == "string")
-        and all(isinstance(v, str) for v in vals)
-    ):
-        # Spark's xxhash64 returns a SIGNED long; pmod re-maps the
-        # negative half — Python's % on a positive modulus is pmod
-        return sorted({
-            ((h - (1 << 64)) if h >= (1 << 63) else h) % n
-            for h in (_xxh64(v.encode("utf-8")) for v in vals)
-        })
+    kind = "string" if pk_dt is None else pk_dt.typeName()
+    bits = _INT_PK_BITS.get(kind)
+
+    def on_driver(v) -> bool:
+        if kind == "string":
+            return isinstance(v, str)
+        return (
+            bits is not None
+            and isinstance(v, int)
+            and not isinstance(v, bool)
+            and -(1 << (bits - 1)) <= v < 1 << (bits - 1)
+        )
+
+    # Spark's xxhash64 returns a SIGNED long; pmod re-maps the
+    # negative half — Python's % on a positive modulus is pmod
+    out = {
+        ((h - (1 << 64)) if h >= (1 << 63) else h) % n
+        for h in (_xxh64(str(v).encode("utf-8")) for v in vals if on_driver(v))
+    }
     # one tiny job per PYTHON type group — a mixed Decimal+float list
     # cannot share one inferred frame (CANNOT_MERGE_TYPE), and each
     # group still lands on the recorded column type via the cast
     groups: dict[type, list] = {}
     for v in vals:
-        groups.setdefault(type(v), []).append(v)
+        if not on_driver(v):
+            groups.setdefault(type(v), []).append(v)
     col = F.col(pk).cast(pk_dt) if pk_dt is not None else None
     bucket = _bucket_expr(pk, n, col=col)
-    out: set[int] = set()
     for vs in groups.values():
         df = spark.createDataFrame([(v,) for v in vs], [pk])
         out |= {
@@ -2755,17 +2963,19 @@ def _db_harvest_stats(
     gen: str,
     manifest: dict,
     ours: dict[str, dict],
+    written: dict[str, StructType],
 ) -> dict[str, dict] | None:
     """Per-table stats harvest for the buckets a db transaction
     rewrote — the db twin of the per-commit harvest: only tables that
     opted into ``stats_cols`` pay the (column-pruned, page-cache-hot)
-    aggregation, and only over their own fresh generation."""
+    aggregation, and only over their own fresh generation, scanned
+    with the schema it was written with (``written[name]``)."""
     out: dict[str, dict] = {}
     for name in ours:
         t = manifest["tables"][name]
         if _wants_stats(t):
             out[name] = _harvest_bucket_stats(
-                spark, os.path.join(path, name), gen, t
+                spark, os.path.join(path, name), gen, t, written[name]
             )
     return out or None
 
@@ -2797,8 +3007,8 @@ def _footer_columns(*bucket_dirs: str) -> set[str]:
                 return set(pq.read_schema(os.path.join(bdir, f)).names)
     raise FileNotFoundError(
         "no parquet footer found to verify the physical schema against "
-        "(damaged table: registered buckets without data files) — pass "
-        "spark= or repair the table"
+        "(damaged table: registered buckets without data files) — "
+        "repair the table"
     )
 
 
@@ -2853,7 +3063,8 @@ def _check_constraints_frame(df: DataFrame, constraints: dict, context: str) -> 
 
 
 def _enforce_constraints(
-    spark: SparkSession, root: str, entry: dict, gen: str
+    spark: SparkSession, root: str, entry: dict, gen: str,
+    schema: StructType | None = None,
 ) -> None:
     """Validate ONE freshly written generation against the table's
     CHECK constraints before its commit is claimed — the write-side
@@ -2862,7 +3073,8 @@ def _enforce_constraints(
     checked (untouched buckets were validated when written, and
     ALTER ADD CONSTRAINT validates the whole table once): cost tracks
     change volume, not table size. DELETE and OPTIMIZE skip it — they
-    only remove or re-arrange rows that already passed."""
+    only remove or re-arrange rows that already passed. ``schema`` is
+    the physical schema the generation was written with."""
     cons = entry.get("constraints")
     if not cons:
         return
@@ -2872,7 +3084,9 @@ def _enforce_constraints(
             return
     except FileNotFoundError:
         return
-    df = _fill_added_columns(_read_logical(spark, entry, gen_dir), entry)
+    df = _fill_added_columns(
+        _read_logical(spark, entry, gen_dir, schema=schema), entry
+    )
     _check_constraints_frame(df, cons, root)
 
 
@@ -3020,7 +3234,7 @@ def _strip_dropped_metadata(m: dict, cols: set[str]) -> None:
 
 
 def _validate_drop_columns(
-    entry: dict, root: str, columns: list[str], spark
+    entry: dict, root: str, columns: list[str]
 ) -> None:
     """Shared DROP COLUMN validation: reserved/key columns refused,
     the column must exist (recorded schema, ALTER-added, or physical
@@ -3059,7 +3273,7 @@ def _validate_drop_columns(
         if col not in known:
             if physical is None:
                 physical = _alter_collision_columns(
-                    spark, root, entry, repair="write_versioned_table"
+                    root, entry, repair="write_versioned_table"
                 )
             if col not in physical:
                 raise ValueError(
@@ -3102,7 +3316,7 @@ def alter_versioned_drop_columns(
     token = uuid.uuid4().hex[:12]
     while True:
         manifest = _bucket_manifest(path)
-        _validate_drop_columns(manifest, path, columns, spark)
+        _validate_drop_columns(manifest, path, columns)
         new_manifest = {
             **{k: v for k, v in manifest.items() if k != "committed_at"},
             "token": token,
@@ -3153,7 +3367,7 @@ def alter_versioned_db_drop_columns(
                 f"(has: {sorted(manifest['tables'])})"
             )
         t = manifest["tables"][table]
-        _validate_drop_columns(t, os.path.join(path, table), columns, spark)
+        _validate_drop_columns(t, os.path.join(path, table), columns)
         new_t = {
             **t,
             "dropped_columns": sorted(
@@ -3183,9 +3397,7 @@ def alter_versioned_db_drop_columns(
     return new_manifest
 
 
-def _renamed_table_entry(
-    t: dict, root: str, old: str, new: str, spark: SparkSession | None
-) -> dict:
+def _renamed_table_entry(t: dict, root: str, old: str, new: str) -> dict:
     """Validate one RENAME COLUMN and build the renamed table entry —
     shared by both layouts. The rename is METADATA-ONLY (Delta's
     column-mapping idea, `delta/protocol` §column mapping): parquet
@@ -3249,7 +3461,7 @@ def _renamed_table_entry(
     # no live logical column claims (shed columns, historic re-inits)
     # must not re-surface under the new name — the read-side rename
     # would produce two columns with one name
-    coll = _alter_collision_columns(spark, root, t)
+    coll = _alter_collision_columns(root, t)
     claimed = set(_column_map(t).values())
     if new in (coll - logical - claimed - {MERGE_BUCKET_COL}):
         raise ValueError(
@@ -3316,7 +3528,7 @@ def alter_versioned_rename_column(
     token = uuid.uuid4().hex[:12]
     while True:
         manifest = _bucket_manifest(path)
-        new_t = _renamed_table_entry(manifest, path, old, new, spark)
+        new_t = _renamed_table_entry(manifest, path, old, new)
         new_manifest = {
             **{k: v for k, v in new_t.items() if k != "committed_at"},
             "token": token,
@@ -3353,8 +3565,7 @@ def alter_versioned_db_rename_column(
                 f"(has: {sorted(manifest['tables'])})"
             )
         new_t = _renamed_table_entry(
-            manifest["tables"][table], os.path.join(path, table),
-            old, new, spark,
+            manifest["tables"][table], os.path.join(path, table), old, new
         )
         new_manifest = {
             **{k: v for k, v in manifest.items() if k != "committed_at"},
@@ -3372,15 +3583,16 @@ def alter_versioned_db_rename_column(
 
 
 def _alter_collision_columns(
-    spark: SparkSession | None,
     root: str,
     meta: dict,
     repair: str = "write_versioned_table",
 ) -> set[str]:
     """The column set an ALTER must not collide with, shared by both
     layouts: the manifest-recorded init schema plus — when data exists
-    — the session schema or one parquet footer, both resolved against
-    the SAME bucket map as the rest of the validation (``meta``), so a
+    — the columns PHYSICALLY present in one parquet footer (read on
+    the driver: the recorded schema cannot say what bytes exist),
+    resolved against the SAME bucket map as the rest of the
+    validation (``meta``), so a
     concurrent re-init cannot swap the head mid-check (callers run
     this INSIDE the claim loop, against the exact head they extend). A
     zero-bucket table whose manifest predates the recorded-schema
@@ -3392,10 +3604,7 @@ def _alter_collision_columns(
             os.path.join(root, gen, f"{MERGE_BUCKET_COL}={b}")
             for b, gen in sorted(meta["buckets"].items())
         ]
-        if spark is not None:
-            physical |= set(_read_maybe_merged(spark, meta, *paths).columns)
-        else:
-            physical |= _footer_columns(*paths)
+        physical |= _footer_columns(*paths)
     elif "columns" not in meta:
         raise ValueError(
             f"{root}: cannot verify column collisions — this zero-bucket "
@@ -3484,9 +3693,8 @@ def alter_versioned_add_columns(
     merge traffic), the reserved bucket column is rejected, and
     collisions with the table's physical columns are ALWAYS rejected
     (their existing NULLs would silently become the default on every
-    read) — via the live session's schema when ``spark`` is supplied,
-    else by reading one parquet footer directly (pyarrow), so calling
-    without a session is no less safe.
+    read) — by reading one parquet footer on the driver (pyarrow; no
+    Spark job). ``spark`` is accepted for compatibility and unused.
 
     At 100 TB this is the only sane ALTER: a physical backfill of a
     new column is a full-table rewrite; deferring materialization to
@@ -3507,7 +3715,7 @@ def alter_versioned_add_columns(
         # re-addable as metadata against the stale physical set)
         manifest = _bucket_manifest(path)
         physical = _alter_collision_columns(
-            spark, path, manifest, repair="write_versioned_table"
+            path, manifest, repair="write_versioned_table"
         )
         added = _merged_added_columns(
             columns, manifest.get("added_columns", {}), physical,
@@ -4531,15 +4739,7 @@ def merge_into_versioned(
         merged = merged.unionByName(_unmatched_inserts(table, upd, pk, set_cols))
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
-    (
-        _to_physical(
-            merged.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets)),
-            manifest,
-        )
-        .write.mode("errorifexists")
-        .partitionBy(MERGE_BUCKET_COL)
-        .parquet(os.path.join(path, gen))
-    )
+    written = _write_generation(merged, path, gen, manifest)
     # Deletion vectors break the "affected bucket has >=1 logical row"
     # invariant: a mode='dv' delete can empty a bucket logically, and a
     # not_matched='ignore' merge touching it writes NO partition dir for
@@ -4549,15 +4749,15 @@ def merge_into_versioned(
     # None, which _live_buckets drops from the manifest.
     present = set(_present_buckets(os.path.join(path, gen)))
     ours = {str(b): (gen if b in present else None) for b in affected}
-    _enforce_constraints(spark, path, manifest, gen)
+    _enforce_constraints(spark, path, manifest, gen, written)
     our_stats = (
-        _harvest_bucket_stats(spark, path, gen, manifest)
+        _harvest_bucket_stats(spark, path, gen, manifest, written)
         if _wants_stats(manifest)
         else None
     )
     new_manifest = _commit_bucket_update(
         path, manifest, base_buckets, ours, token, extra_meta,
-        our_stats=our_stats, adds_rows=True,
+        our_stats=our_stats, adds_rows=True, written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest
@@ -4640,25 +4840,30 @@ def delete_from_versioned(
         )
         if res is None:
             return _commit_meta_only(path, manifest, extra_meta)
-        ours_dv, ours_patch = res
+        ours_dv, ours_patch, written = res
         new_manifest = _commit_bucket_update(
             path, manifest, dict(manifest["buckets"]), {}, token,
             extra_meta, ours_dv=ours_dv, ours_patch=ours_patch or None,
+            written=written,
         )
         _publish_manifest(path, new_manifest)
         return new_manifest
-    ours = _delete_keys_from_table(spark, path, manifest, keys, f"gen-{token}")
-    if ours is None:
+    res = _delete_keys_from_table(spark, path, manifest, keys, f"gen-{token}")
+    if res is None:
         return _commit_meta_only(path, manifest, extra_meta)
+    ours, written = res
     new_manifest = _commit_bucket_update(
         path, manifest, dict(manifest["buckets"]), ours, token, extra_meta,
         # emptied buckets have no dir in the new generation, so they
         # simply have no harvest row — _carry_bucket_stats drops them
         our_stats=(
-            _harvest_bucket_stats(spark, path, f"gen-{token}", manifest)
+            _harvest_bucket_stats(
+                spark, path, f"gen-{token}", manifest, written
+            )
             if _wants_stats(manifest)
             else None
         ),
+        written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest
@@ -4666,11 +4871,12 @@ def delete_from_versioned(
 
 def _delete_keys_from_table(
     spark: SparkSession, root: str, t: dict, keys: DataFrame, gen: str
-) -> dict | None:
+) -> tuple[dict, StructType] | None:
     """Per-table DELETE body shared by both layouts: writes the
     affected buckets' remaining rows under ``<root>/<gen>`` and
     returns the ours bucket map (``None`` generations mark emptied
-    buckets), or ``None`` when no key matched (nothing written)."""
+    buckets) with the written schema, or ``None`` when no key matched
+    (nothing written)."""
     pk, n_buckets = t["pk"], t["n_buckets"]
     base_buckets = t["buckets"]
     # fused materialize + bucket set (see _ckpt_with_buckets): the
@@ -4689,7 +4895,7 @@ def _delete_keys_from_table(
         for b in candidates
     ]
     # cur_paths is non-empty here, so this is exactly the shared
-    # existing-buckets read (merged-schema + added-column fill)
+    # existing-buckets read (recorded schema + added-column fill)
     table = _merge_target_frame(spark, root, t, cur_paths, k, pk, [])
     # rewrite only buckets that actually CONTAIN a key to delete — a
     # candidate bucket whose keys all miss would otherwise be
@@ -4707,22 +4913,16 @@ def _delete_keys_from_table(
     remaining = table.where(
         _bucket_expr(pk, n_buckets).isin(affected)
     ).join(k.select(pk), pk, "left_anti")
-    (
-        _to_physical(
-            remaining.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets)),
-            t,
-        )
-        .write.mode("errorifexists")
-        .partitionBy(MERGE_BUCKET_COL)
-        .parquet(os.path.join(root, gen))
-    )
+    written = _write_generation(remaining, root, gen, t)
     present = set(_present_buckets(os.path.join(root, gen)))
-    return {str(b): (gen if b in present else None) for b in affected}
+    return {
+        str(b): (gen if b in present else None) for b in affected
+    }, written
 
 
 def _dv_delete_table_body(
     spark: SparkSession, root: str, t: dict, keys: DataFrame, gen: str
-) -> dict | None:
+) -> tuple[dict, dict, StructType | None] | None:
     """Per-table merge-on-read DELETE body shared by both layouts:
     writes ONE small parquet per affected bucket under
     ``<root>/<gen>/<bucket dir>`` holding the UNION of that bucket's
@@ -4734,7 +4934,8 @@ def _dv_delete_table_body(
     sidecar write, versus the rewrite path's full bucket rewrite.
     The matched-keys refinement keeps DV size proportional to rows
     actually deleted (a replayed or miss-heavy key feed does not
-    bloat the vector)."""
+    bloat the vector). Also returns the overlay map of the UPDATE
+    overlays it rewrote and their written schema (``None`` if none)."""
     pk, n_buckets = t["pk"], t["n_buckets"]
     # ONE job materializes the key frame and yields its bucket set
     # (the old distinct-collect action, fused); every later consumer
@@ -4776,9 +4977,7 @@ def _dv_delete_table_body(
     ]
     out = matched.select(F.col(pk).alias(DV_PK_COL))
     if old_paths:
-        out = out.unionByName(
-            spark.read.parquet(*old_paths).select(DV_PK_COL)
-        ).distinct()
+        out = out.unionByName(_read_dv(spark, t, *old_paths)).distinct()
     (
         out.withColumn(
             MERGE_BUCKET_COL,
@@ -4793,6 +4992,7 @@ def _dv_delete_table_body(
     # affected patched bucket is rewritten minus the deleted keys
     # (dropped entirely when emptied)
     ours_patch: dict = {}
+    written = None
     patch = _patch_map(t)
     patched_aff = [b for b in affected if str(b) in patch]
     if patched_aff:
@@ -4813,23 +5013,13 @@ def _dv_delete_table_body(
             t,
         )
         remaining = prior.join(k.select(pk), pk, "left_anti")
-        (
-            _to_physical(
-                remaining.withColumn(
-                    MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets)
-                ),
-                t,
-            )
-            .write.mode("errorifexists")
-            .partitionBy(MERGE_BUCKET_COL)
-            .parquet(os.path.join(root, patch_gen))
-        )
+        written = _write_generation(remaining, root, patch_gen, t)
         present = set(_present_buckets(os.path.join(root, patch_gen)))
         ours_patch = {
             str(b): (patch_gen if b in present else None)
             for b in patched_aff
         }
-    return {str(b): gen for b in affected}, ours_patch
+    return {str(b): gen for b in affected}, ours_patch, written
 
 
 def _dv_update_table_body(
@@ -4841,7 +5031,7 @@ def _dv_update_table_body(
     prune,
     eq,
     gen: str,
-) -> tuple[dict, dict] | None:
+) -> tuple[dict, dict, StructType] | None:
     """Per-table merge-on-read UPDATE body shared by both layouts
     (``update_versioned(mode="dv")``): instead of rewriting whole
     buckets for a few matched rows, write per affected bucket (a) a
@@ -4849,9 +5039,10 @@ def _dv_update_table_body(
     DV — the base versions are dead) and (b) an UPDATE OVERLAY file
     under ``<root>/<gen>/<bucket dir>`` holding the NEW row versions
     plus the bucket's carried-over prior overlay rows, then return
-    ``(ours_dv, ours_patch)`` maps — or ``None`` when nothing
-    matched. Readers compose ``(base \\ DV) ∪ patch``
-    (:func:`_apply_dv`); any rewrite materializes and sheds both.
+    ``(ours_dv, ours_patch)`` maps and the overlay's written schema —
+    or ``None`` when nothing matched. Readers compose
+    ``(base \\ DV) ∪ patch`` (:func:`_apply_dv`); any rewrite
+    materializes and sheds both.
 
     At 100 TB this is the UPDATE twin of the DV DELETE: a 100-row
     reprice costs a candidate-bucket read plus KB-scale sidecars,
@@ -4947,17 +5138,7 @@ def _dv_update_table_body(
             _read_logical(spark, t, *prior_dirs), t
         ).join(matched.select(pk).distinct(), pk, "left_anti")
         new_patch = new_patch.unionByName(carry.select(*new_patch.columns))
-    (
-        _to_physical(
-            new_patch.withColumn(
-                MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets)
-            ),
-            t,
-        )
-        .write.mode("errorifexists")
-        .partitionBy(MERGE_BUCKET_COL)
-        .parquet(os.path.join(root, gen))
-    )
+    written = _write_generation(new_patch, root, gen, t)
     # DV union: matched pks (base versions now dead; pks matched via
     # a prior overlay are already in the vector — union dedups) plus
     # the affected buckets' existing vectors
@@ -4972,9 +5153,7 @@ def _dv_update_table_body(
         if str(b) in dvm
     ]
     if old_paths:
-        out = out.unionByName(
-            spark.read.parquet(*old_paths).select(DV_PK_COL)
-        )
+        out = out.unionByName(_read_dv(spark, t, *old_paths))
     (
         out.distinct()
         .withColumn(MERGE_BUCKET_COL, _bucket_expr(DV_PK_COL, n_buckets))
@@ -4985,6 +5164,7 @@ def _dv_update_table_body(
     return (
         {str(b): dv_gen for b in affected},
         {str(b): gen for b in affected},
+        written,
     )
 
 
@@ -5025,16 +5205,17 @@ def _update_table_body(
     prune,
     eq,
     gen: str,
-) -> dict | None:
+) -> tuple[dict, StructType] | None:
     """Per-table UPDATE body shared by both layouts: rewrites the
     buckets that CONTAIN a matching row (non-matching rows in those
     buckets are carried unchanged) under ``<root>/<gen>`` and returns
-    the ours bucket map, or ``None`` when nothing matched (nothing
-    written). Bucket targeting is two-tier: manifest-level skipping
-    first (stats ranges, Bloom equalities — buckets PROVEN free of
-    matches are never opened), then an exact contains-a-match
-    refinement so a candidate bucket whose rows all miss is not
-    identity-rewritten (no wasted IO, no phantom change-feed entry)."""
+    the ours bucket map with the written schema, or ``None`` when
+    nothing matched (nothing written). Bucket targeting is two-tier:
+    manifest-level skipping first (stats ranges, Bloom equalities —
+    buckets PROVEN free of matches are never opened), then an exact
+    contains-a-match refinement so a candidate bucket whose rows all
+    miss is not identity-rewritten (no wasted IO, no phantom
+    change-feed entry)."""
     pk, n_buckets = t["pk"], t["n_buckets"]
     bad = {pk, MERGE_BUCKET_COL} & set(set_exprs)
     if bad:
@@ -5107,15 +5288,8 @@ def _update_table_body(
         else:
             cols.append(F.col(c))
     out = table.where(_bucket_expr(pk, n_buckets).isin(affected)).select(*cols)
-    (
-        _to_physical(
-            out.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets)), t
-        )
-        .write.mode("errorifexists")
-        .partitionBy(MERGE_BUCKET_COL)
-        .parquet(os.path.join(root, gen))
-    )
-    return {str(b): gen for b in affected}
+    written = _write_generation(out, root, gen, t)
+    return {str(b): gen for b in affected}, written
 
 
 def update_versioned(
@@ -5167,31 +5341,33 @@ def update_versioned(
         )
         if res is None:
             return _commit_meta_only(path, manifest, extra_meta)
-        ours_dv, ours_patch = res
+        ours_dv, ours_patch, written = res
         # the overlay generation holds every NEW row version — the
         # same write-side CHECK enforcement as a rewrite commit
-        _enforce_constraints(spark, path, manifest, gen)
+        _enforce_constraints(spark, path, manifest, gen, written)
         new_manifest = _commit_bucket_update(
             path, manifest, dict(manifest["buckets"]), {}, token,
             extra_meta, adds_rows=True, ours_dv=ours_dv,
-            ours_patch=ours_patch,
+            ours_patch=ours_patch, written=written,
         )
         _publish_manifest(path, new_manifest)
         return new_manifest
-    ours = _update_table_body(
+    res = _update_table_body(
         spark, path, manifest, set_exprs, where, prune, eq, gen
     )
-    if ours is None:
+    if res is None:
         return _commit_meta_only(path, manifest, extra_meta)
-    _enforce_constraints(spark, path, manifest, gen)
+    ours, written = res
+    _enforce_constraints(spark, path, manifest, gen, written)
     new_manifest = _commit_bucket_update(
         path, manifest, dict(manifest["buckets"]), ours, token, extra_meta,
         our_stats=(
-            _harvest_bucket_stats(spark, path, gen, manifest)
+            _harvest_bucket_stats(spark, path, gen, manifest, written)
             if _wants_stats(manifest)
             else None
         ),
         adds_rows=True,
+        written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest
@@ -5224,20 +5400,24 @@ def apply_changes_versioned(
 
     manifest = _bucket_manifest(path, base_token)
     token = uuid.uuid4().hex[:12]
-    ours = _apply_changes_to_table(
+    res = _apply_changes_to_table(
         spark, path, manifest, changes, f"gen-{token}"
     )
-    if ours is None:
+    if res is None:
         return _commit_meta_only(path, manifest, extra_meta)
-    _enforce_constraints(spark, path, manifest, f"gen-{token}")
+    ours, written = res
+    _enforce_constraints(spark, path, manifest, f"gen-{token}", written)
     new_manifest = _commit_bucket_update(
         path, manifest, dict(manifest["buckets"]), ours, token, extra_meta,
         our_stats=(
-            _harvest_bucket_stats(spark, path, f"gen-{token}", manifest)
+            _harvest_bucket_stats(
+                spark, path, f"gen-{token}", manifest, written
+            )
             if _wants_stats(manifest)
             else None
         ),
         adds_rows=True,
+        written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest
@@ -5245,12 +5425,13 @@ def apply_changes_versioned(
 
 def _apply_changes_to_table(
     spark: SparkSession, root: str, t: dict, changes: DataFrame, gen: str
-) -> dict | None:
+) -> tuple[dict, StructType] | None:
     """Per-table CDC-apply body shared by both layouts: validates the
     feed, writes the affected buckets' new state under
     ``<root>/<gen>``, and returns the ours bucket map (``None``
-    generations mark emptied buckets), or ``None`` when no row of the
-    feed touches this table (nothing written)."""
+    generations mark emptied buckets) with the written schema, or
+    ``None`` when no row of the feed touches this table (nothing
+    written)."""
     pk = t["pk"]
     if "_change_type" not in changes.columns:
         raise ValueError(
@@ -5292,7 +5473,7 @@ def _apply_changes_body(
     ch: DataFrame,
     gen: str,
     data_cols: list[str],
-) -> dict | None:
+) -> tuple[dict, StructType] | None:
     pk, n_buckets = t["pk"], t["n_buckets"]
     base_buckets = t["buckets"]
     # ONE grouped validation job replaces FIVE driver actions over the
@@ -5413,16 +5594,11 @@ def _apply_changes_body(
         .join(keys, pk, "left_anti")
         .unionByName(upserts)
     )
-    (
-        _to_physical(
-            out.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets)), t
-        )
-        .write.mode("errorifexists")
-        .partitionBy(MERGE_BUCKET_COL)
-        .parquet(os.path.join(root, gen))
-    )
+    written = _write_generation(out, root, gen, t)
     present = set(_present_buckets(os.path.join(root, gen)))
-    return {str(b): (gen if b in present else None) for b in affected}
+    return {
+        str(b): (gen if b in present else None) for b in affected
+    }, written
 
 
 def replicate_versioned(
@@ -5482,6 +5658,7 @@ def delete_from_versioned_db(
             )
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
+    written: dict = {}
     if mode == "dv":
         ours_dv: dict[str, dict] = {}
         ours_patch: dict[str, dict] = {}
@@ -5493,28 +5670,29 @@ def delete_from_versioned_db(
             if res is not None:
                 ours_dv[name] = res[0]
                 if res[1]:
-                    ours_patch[name] = res[1]
+                    ours_patch[name], written[name] = res[1], res[2]
         if not ours_dv:
             return _commit_db_meta_only(path, manifest, extra_meta)
         new_manifest = _commit_db_update(
             path, manifest, {}, token, extra_meta, ours_dv=ours_dv,
-            ours_patch=ours_patch or None,
+            ours_patch=ours_patch or None, written=written,
         )
         _publish_manifest(path, new_manifest)
         return new_manifest
     ours: dict[str, dict] = {}
     for name, keys_df in keys.items():
         t = manifest["tables"][name]
-        table_ours = _delete_keys_from_table(
+        res = _delete_keys_from_table(
             spark, os.path.join(path, name), t, keys_df, gen
         )
-        if table_ours is not None:
-            ours[name] = table_ours
+        if res is not None:
+            ours[name], written[name] = res
     if not ours:
         return _commit_db_meta_only(path, manifest, extra_meta)
     new_manifest = _commit_db_update(
         path, manifest, ours, token, extra_meta,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours),
+        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
+        written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest
@@ -5565,6 +5743,7 @@ def update_versioned_db(
             )
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
+    written: dict = {}
     if mode == "dv":
         ours_dv: dict[str, dict] = {}
         ours_patch: dict[str, dict] = {}
@@ -5576,24 +5755,24 @@ def update_versioned_db(
                 gen,
             )
             if res is not None:
-                ours_dv[name], ours_patch[name] = res
+                ours_dv[name], ours_patch[name], written[name] = res
         if not ours_dv:
             return _commit_db_meta_only(path, manifest, extra_meta)
         for name in ours_patch:
             _enforce_constraints(
                 spark, os.path.join(path, name),
-                manifest["tables"][name], gen,
+                manifest["tables"][name], gen, written[name],
             )
         new_manifest = _commit_db_update(
             path, manifest, {}, token, extra_meta, adds_rows=True,
-            ours_dv=ours_dv, ours_patch=ours_patch,
+            ours_dv=ours_dv, ours_patch=ours_patch, written=written,
         )
         _publish_manifest(path, new_manifest)
         return new_manifest
     ours: dict[str, dict] = {}
     for name, spec in updates.items():
         t = manifest["tables"][name]
-        table_ours = _update_table_body(
+        res = _update_table_body(
             spark,
             os.path.join(path, name),
             t,
@@ -5603,18 +5782,20 @@ def update_versioned_db(
             spec.get("eq"),
             gen,
         )
-        if table_ours is not None:
-            ours[name] = table_ours
+        if res is not None:
+            ours[name], written[name] = res
     if not ours:
         return _commit_db_meta_only(path, manifest, extra_meta)
     for name in ours:
         _enforce_constraints(
-            spark, os.path.join(path, name), manifest["tables"][name], gen
+            spark, os.path.join(path, name), manifest["tables"][name], gen,
+            written[name],
         )
     new_manifest = _commit_db_update(
         path, manifest, ours, token, extra_meta,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours),
+        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
         adds_rows=True,
+        written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest
@@ -5646,23 +5827,26 @@ def apply_changes_versioned_db(
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
     ours: dict[str, dict] = {}
+    written: dict = {}
     for name, ch in changes.items():
         t = manifest["tables"][name]
-        table_ours = _apply_changes_to_table(
+        res = _apply_changes_to_table(
             spark, os.path.join(path, name), t, ch, gen
         )
-        if table_ours is not None:
-            ours[name] = table_ours
+        if res is not None:
+            ours[name], written[name] = res
     if not ours:
         return _commit_db_meta_only(path, manifest, extra_meta)
     for name in ours:
         _enforce_constraints(
-            spark, os.path.join(path, name), manifest["tables"][name], gen
+            spark, os.path.join(path, name), manifest["tables"][name], gen,
+            written[name],
         )
     new_manifest = _commit_db_update(
         path, manifest, ours, token, extra_meta,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours),
+        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
         adds_rows=True,
+        written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest
@@ -5758,6 +5942,7 @@ def _commit_bucket_update(
     adds_rows: bool = False,
     ours_dv: dict | None = None,
     ours_patch: dict | None = None,
+    written: StructType | None = None,
 ) -> dict:
     """The single-table CAS commit loop shared by MERGE, UPDATE,
     OPTIMIZE, DELETE (both modes), and CDC-apply: claim the next seq;
@@ -5792,7 +5977,13 @@ def _commit_bucket_update(
     An ``ours`` value of ``None`` DROPS that bucket from the manifest
     (a delete emptied it, :func:`_live_buckets`) — still a touched
     bucket for conflict detection, but the committed map carries no
-    entry, which is exactly how a zero-bucket init looks."""
+    entry, which is exactly how a zero-bucket init looks.
+
+    ``written`` is the physical schema of the generation the verb
+    wrote (:func:`_write_generation`); it is reconciled with the
+    recorded schema of the base AND of every rebase head
+    (:func:`_adopt_written_schema`), so a widening commits atomically
+    with the data and an incompatible type never commits."""
     def stamped(src: dict, seq: int, buckets: dict) -> dict:
         # carry every manifest field (kind/pk/n_buckets/added_columns/
         # future metadata) from the newest known state; committed_at is
@@ -5835,6 +6026,7 @@ def _commit_bucket_update(
             out["bucket_stats"] = _carry_bucket_stats(
                 src, set(ours) | set(ours_patch or {}), our_stats, buckets
             )
+        out = _adopt_written_schema(out, written)
         _apply_extra_meta(out, extra_meta)
         return out
 
@@ -6062,10 +6254,10 @@ def optimize_versioned(
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
     out = (
-        # merged-schema read: candidate buckets can span pre- and
-        # post-ALTER generations — without the union schema, a column
-        # present only in newer files would be silently DROPPED from
-        # the compacted rewrite (physical data loss). Logical read so
+        # recorded-schema read: candidate buckets can span pre- and
+        # post-ALTER generations — without the superset schema, a
+        # column present only in newer files would be silently DROPPED
+        # from the compacted rewrite (physical data loss). Logical read so
         # cluster_by/zorder_by take the user-facing (post-RENAME)
         # names; the write translates back to physical. DV-filtered:
         # compaction MATERIALIZES merge-on-read deletes (the commit
@@ -6113,12 +6305,7 @@ def optimize_versioned(
             )
         elif zorder_by:
             out = out.sortWithinPartitions(MERGE_BUCKET_COL, zkey)
-    (
-        _to_physical(out, manifest)
-        .write.mode("errorifexists")
-        .partitionBy(MERGE_BUCKET_COL)
-        .parquet(os.path.join(path, gen))
-    )
+    written = _write_generation(out, path, gen, manifest)
     ours = {str(b): gen for b in candidates}
     if cluster_by:
         # cluster_kind is stamped on BOTH branches: extra_meta merges
@@ -6137,10 +6324,11 @@ def optimize_versioned(
         path, manifest, dict(manifest["buckets"]), ours, token,
         extra_meta=cluster_meta,
         our_stats=(
-            _harvest_bucket_stats(spark, path, gen, manifest)
+            _harvest_bucket_stats(spark, path, gen, manifest, written)
             if _wants_stats(manifest)
             else None
         ),
+        written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest, candidates
@@ -6723,6 +6911,7 @@ def write_versioned_db(
         for k, v in ((write_options or {}).get(name) or {}).items():
             w = w.option(k, v)
         w.partitionBy(MERGE_BUCKET_COL).parquet(tdir)
+        written = out.drop(MERGE_BUCKET_COL).schema
         entry[name] = {
             "pk": pk,
             "n_buckets": nb,
@@ -6731,7 +6920,7 @@ def write_versioned_db(
             "buckets": {str(b): gen for b in _present_buckets(tdir)},
             # counting the WRITTEN parquet is footer-metadata-only —
             # callers report row counts without re-running load lineage
-            "rows": spark.read.parquet(tdir).count(),
+            "rows": spark.read.schema(written).parquet(tdir).count(),
         }
         t_stats = (stats_cols or {}).get(name)
         t_blooms = (bloom_cols or {}).get(name)
@@ -6750,7 +6939,9 @@ def write_versioned_db(
             entry[name]["constraints"] = dict(t_cons)
             # the new baseline must satisfy the constraints it carries
             _check_constraints_frame(
-                spark.read.parquet(tdir), t_cons, os.path.join(path, name)
+                spark.read.schema(written).parquet(tdir),
+                t_cons,
+                os.path.join(path, name),
             )
         if _wants_stats(entry[name]):
             entry[name]["bucket_stats"] = _harvest_bucket_stats(
@@ -6863,7 +7054,7 @@ def read_versioned_db(
         # every bucket) — the shared typed-empty reader applies
         df = _empty_versioned_frame(spark, os.path.join(path, table), t)
     else:
-        # the table entry carries the same shape _read_maybe_merged /
+        # the table entry carries the same shape _read_physical /
         # _fill_added_columns expect (its own added_columns map), so
         # the single-table schema-evolution read path applies per table
         df = _fill_added_columns(
@@ -6909,7 +7100,7 @@ def alter_versioned_db_add_columns(
             )
         t = manifest["tables"][table]
         physical = _alter_collision_columns(
-            spark, os.path.join(path, table), t,
+            os.path.join(path, table), t,
             repair="write_versioned_db (at the database root)",
         )
         added = _merged_added_columns(
@@ -7078,6 +7269,7 @@ def merge_into_versioned_db(
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
     ours: dict[str, dict[str, str]] = {}
+    written: dict = {}
     for name, upd_df in updates.items():
         t = manifest["tables"][name]
         pk, nb = t["pk"], t["n_buckets"]
@@ -7103,13 +7295,8 @@ def merge_into_versioned_db(
             merged = merged.unionByName(
                 _unmatched_inserts(table, upd, pk, set_cols[name])
             )
-        (
-            _to_physical(
-                merged.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb)), t
-            )
-            .write.mode("errorifexists")
-            .partitionBy(MERGE_BUCKET_COL)
-            .parquet(os.path.join(path, name, gen))
+        written[name] = _write_generation(
+            merged, os.path.join(path, name), gen, t
         )
         # Same DV-emptied-bucket hole as the single-table merge: a
         # bucket with zero logical rows after a not_matched='ignore'
@@ -7121,12 +7308,14 @@ def merge_into_versioned_db(
         return _commit_db_meta_only(path, manifest, extra_meta)
     for name in ours:
         _enforce_constraints(
-            spark, os.path.join(path, name), manifest["tables"][name], gen
+            spark, os.path.join(path, name), manifest["tables"][name], gen,
+            written[name],
         )
     new_manifest = _commit_db_update(
         path, manifest, ours, token, extra_meta,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours),
+        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
         adds_rows=True,
+        written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest
@@ -7142,6 +7331,7 @@ def _commit_db_update(
     adds_rows: bool = False,
     ours_dv: dict[str, dict] | None = None,
     ours_patch: dict[str, dict] | None = None,
+    written: dict[str, StructType] | None = None,
 ) -> dict:
     """The database-level CAS commit loop shared by transactional
     MERGE, OPTIMIZE, and DELETE (both modes): claim the next seq; on
@@ -7155,7 +7345,10 @@ def _commit_db_update(
     against the exact manifest being extended, on the base and on
     every rebase. A ``None`` generation in ``ours`` DROPS that bucket
     from its table's map (a delete emptied it), with the same
-    conflict-detection standing as a rewrite."""
+    conflict-detection standing as a rewrite. ``written`` maps table
+    name to the physical schema of the generation written for it,
+    reconciled per table and per rebase exactly like the single-table
+    loop's."""
     base_tables = {
         n: dict(t["buckets"]) for n, t in base_manifest["tables"].items()
     }
@@ -7194,7 +7387,7 @@ def _commit_db_update(
                 t_stats,
                 live,
             )
-        return out
+        return _adopt_written_schema(out, (written or {}).get(n))
 
     def stamped(src: dict, seq: int) -> dict:
         # the (head) snapshot defines the table set AND the top-level
@@ -7355,6 +7548,7 @@ def optimize_versioned_db(
     token = uuid.uuid4().hex[:12]
     gen = f"gen-{token}"
     ours: dict[str, dict[str, str]] = {}
+    written: dict = {}
     compacted: list[str] = []
     clustering: dict[str, dict] = {}
     for name, t in manifest["tables"].items():
@@ -7409,8 +7603,8 @@ def optimize_versioned_db(
             for b in candidates
         ]
         pk, nb = t["pk"], t["n_buckets"]
-        # merged-schema read: candidate buckets can span pre- and
-        # post-ALTER generations — without the union schema, a
+        # recorded-schema read: candidate buckets can span pre- and
+        # post-ALTER generations — without the superset schema, a
         # column present only in newer files would be silently
         # DROPPED from the compacted rewrite (physical data loss)
         out = _apply_dv(
@@ -7439,11 +7633,8 @@ def optimize_versioned_db(
                 )
             elif t_zorder:
                 out = out.sortWithinPartitions(MERGE_BUCKET_COL, zkey)
-        (
-            _to_physical(out, t)
-            .write.mode("errorifexists")
-            .partitionBy(MERGE_BUCKET_COL)
-            .parquet(os.path.join(path, name, gen))
+        written[name] = _write_generation(
+            out, os.path.join(path, name), gen, t
         )
         ours[name] = {str(b): gen for b in candidates}
         compacted.extend(f"{name}/{b}" for b in candidates)
@@ -7456,7 +7647,8 @@ def optimize_versioned_db(
     new_manifest = _commit_db_update(
         path, manifest, ours, token,
         extra_meta={"clustering": clustering} if clustering else None,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours),
+        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
+        written=written,
     )
     _publish_manifest(path, new_manifest)
     return new_manifest, compacted

@@ -46,7 +46,7 @@ from .catalog import (
     _bucket_expr,
     _bucket_manifest,
     _fill_added_columns,
-    _read_maybe_merged,
+    _read_physical,
     apply_changes_versioned,
     diff_versioned,
     read_versioned_table,
@@ -228,7 +228,7 @@ def _delta_rows(
     ]
     if paths:
         cur = _fill_added_columns(
-            _read_maybe_merged(spark, dst_head, *paths), dst_head
+            _read_physical(spark, dst_head, *paths), dst_head
         ).join(delta.select(group_col), group_col, "left_semi")
     else:
         cur = None

@@ -433,8 +433,8 @@ def _is_table_column(
         try:
             cols.update(_footer_columns(leaf))
         except FileNotFoundError as e:
-            # _footer_columns' generic hint says "pass spark=", which
-            # this path does not accept — name the real remediation
+            # _footer_columns' generic hint does not name this path's
+            # remediation — say it
             raise FileNotFoundError(
                 f"{leaf}: cannot resolve this pre-format table's "
                 "schema (registered bucket without a readable parquet "
