@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1147,10 +1148,10 @@ def _claim_next_commit(path: str, manifest: dict) -> tuple[int, int]:
     the read-head / set-seq / claim / retry loop shared by full-rewrite
     commits (:func:`write_versioned_table`) and the stress harness
     (tools/cas_stress.py). Mutates ``manifest["seq"]`` and returns
-    ``(seq, retries)``. `merge_into_versioned` keeps its OWN loop
-    because its retries must first check the intervening commits for
-    bucket conflicts — a semantic this unconditional claim does not
-    have."""
+    ``(seq, retries)``. Data commits use the commit core's CAS loop
+    (:func:`_commit_tables`) instead, because their retries must first
+    check the intervening commits for conflicts — a semantic this
+    unconditional claim does not have."""
     retries = 0
     while True:
         head = _commit_chain_head(path)
@@ -1704,25 +1705,39 @@ def read_versioned_table(
             raise ValueError("pass token OR as_of, not both")
         token = token_as_of(path, as_of)
     manifest = _bucket_manifest(path, token)
-    keep = _skipping_keep(spark, path, manifest, prune, pk_in, eq)
-    paths = _pruned_bucket_paths(path, manifest, keep, prune, eq)
+    return _read_entry(spark, path, manifest, prune, pk_in, eq)
+
+
+def _read_entry(
+    spark: SparkSession,
+    root: str,
+    t: dict,
+    prune: list[tuple] | None = None,
+    pk_in: list | None = None,
+    eq: list[tuple] | None = None,
+) -> DataFrame:
+    """Read one table entry of either layout (a single table's
+    manifest, or a database's table entry with ``root`` its
+    directory): skipping, the recorded-schema scan, added-column
+    fill, DV/overlay composition and the exact residual."""
+    keep = _skipping_keep(spark, root, t, prune, pk_in, eq)
+    paths = _pruned_bucket_paths(root, t, keep, prune, eq)
     if not paths:
-        df = _empty_versioned_frame(spark, path, manifest)
+        # zero buckets is a legitimate EMPTY table (empty-frame init,
+        # a DELETE that removed every row, or skipping eliminated
+        # every bucket) — the shared typed-empty reader applies
+        df = _empty_versioned_frame(spark, root, t)
     else:
         # Reading the leaf `<bucket>=N` dirs directly loses the partition
         # column — re-derive it so the versioned and non-versioned merge
         # layouts expose the SAME schema (it is a pure pk-hash expression,
         # so re-deriving is exact, no directory-name parsing needed)
-        df = (
-            _read_logical(spark, manifest, *paths)
-            .withColumn(
-                MERGE_BUCKET_COL,
-                _bucket_expr(manifest["pk"], manifest["n_buckets"]),
-            )
+        df = _read_logical(spark, t, *paths).withColumn(
+            MERGE_BUCKET_COL, _bucket_expr(t["pk"], t["n_buckets"])
         )
-        df = _fill_added_columns(df, manifest)
-        df = _apply_dv(spark, path, df, manifest, keep)
-    return _apply_skipping_residual(df, manifest, prune, pk_in, eq)
+        df = _fill_added_columns(df, t)
+        df = _apply_dv(spark, root, df, t, keep)
+    return _apply_skipping_residual(df, t, prune, pk_in, eq)
 
 
 def _skipping_keep(
@@ -2063,7 +2078,7 @@ def _write_generation(
     """Write a logical frame as one new generation of bucket files
     under ``<root>/<gen>`` — THE bucket writer of every rewriting verb
     — and return the physical schema written, which the verb hands to
-    its commit loop so the recorded schema follows it
+    the commit core so the recorded schema follows it
     (:func:`_adopt_written_schema`). A type change the reader cannot
     apply raises here, before any file is written. A frame that
     already carries the bucket column (OPTIMIZE's clustered layout)
@@ -2086,10 +2101,10 @@ def _write_generation(
 # atomically with the data they describe (the Delta/Iceberg
 # manifest-stats idea on the engine's own commit chain). Stats are
 # maintained by EVERY bucket-rewriting commit — merge, delete,
-# CDC-apply, compaction — and _commit_bucket_update purges the entries
-# of any bucket it rewrites before overlaying fresh ones, so a stale
-# stat (which would prune live rows: data loss at read time) is
-# impossible by construction, not by caller discipline.
+# CDC-apply, compaction — and the commit core (_stamp_table) purges
+# the entries of any bucket it rewrites before overlaying fresh ones,
+# so a stale stat (which would prune live rows: data loss at read
+# time) is impossible by construction, not by caller discipline.
 # ---------------------------------------------------------------------------
 
 # types whose min/max round-trip JSON without precision traps.
@@ -2957,29 +2972,6 @@ def _table_stats_from_manifest(manifest: dict) -> dict:
     return out
 
 
-def _db_harvest_stats(
-    spark: SparkSession,
-    path: str,
-    gen: str,
-    manifest: dict,
-    ours: dict[str, dict],
-    written: dict[str, StructType],
-) -> dict[str, dict] | None:
-    """Per-table stats harvest for the buckets a db transaction
-    rewrote — the db twin of the per-commit harvest: only tables that
-    opted into ``stats_cols`` pay the (column-pruned, page-cache-hot)
-    aggregation, and only over their own fresh generation, scanned
-    with the schema it was written with (``written[name]``)."""
-    out: dict[str, dict] = {}
-    for name in ours:
-        t = manifest["tables"][name]
-        if _wants_stats(t):
-            out[name] = _harvest_bucket_stats(
-                spark, os.path.join(path, name), gen, t, written[name]
-            )
-    return out or None
-
-
 def _footer_columns(*bucket_dirs: str) -> set[str]:
     """Physical column names read straight from one parquet footer
     (pyarrow — no SparkSession needed). One footer is representative:
@@ -3109,75 +3101,55 @@ def alter_versioned_add_constraint(
     whenever a lost race reveals a head whose bucket map changed —
     a concurrent merge may have committed rows the first validation
     never saw."""
-    import uuid
+    return _add_constraint(spark, path, None, name, expr)
 
+
+def _add_constraint(
+    spark: SparkSession, path: str, table: str | None, name: str, expr: str
+) -> dict:
     if not isinstance(expr, str) or not expr.strip():
         raise ValueError("constraint expression must be a non-empty SQL string")
-    token = uuid.uuid4().hex[:12]
     validated: dict | None = None
-    while True:
-        manifest = _bucket_manifest(path)
-        cons = dict(manifest.get("constraints") or {})
+
+    def edit(t: dict, root: str) -> dict:
+        nonlocal validated
+        cons = dict(t.get("constraints") or {})
         if name in cons:
             raise ValueError(
-                f"{path}: constraint {name!r} already exists ({cons[name]})"
+                f"{root}: constraint {name!r} already exists ({cons[name]})"
             )
-        if validated != manifest["buckets"]:
+        if validated != t["buckets"]:
             _check_constraints_frame(
-                read_versioned_table(spark, path, token=manifest["token"]),
-                {name: expr},
-                path,
+                _read_entry(spark, root, t), {name: expr}, root
             )
-            validated = dict(manifest["buckets"])
-        new_manifest = {
-            **{k: v for k, v in manifest.items() if k != "committed_at"},
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
-            "constraints": {**cons, name: expr},
-        }
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+            validated = dict(t["buckets"])
+        return {**t, "constraints": {**cons, name: expr}}
+
+    return _commit_meta_edit(path, edit, table)
 
 
 def alter_versioned_drop_constraint(path: str, name: str) -> dict:
     """Drop a named CHECK constraint — metadata-only chain commit;
     raises if the constraint does not exist (a silent no-op would hide
     typos from operators disabling enforcement on purpose)."""
-    import uuid
+    return _commit_meta_edit(path, _drop_constraint_edit(name))
 
-    token = uuid.uuid4().hex[:12]
-    while True:
-        manifest = _bucket_manifest(path)
-        cons = dict(manifest.get("constraints") or {})
+
+def _drop_constraint_edit(name: str):
+    def edit(t: dict, root: str) -> dict:
+        cons = dict(t.get("constraints") or {})
         if name not in cons:
             raise ValueError(
-                f"{path}: no constraint {name!r} "
+                f"{root}: no constraint {name!r} "
                 f"(has: {sorted(cons) or 'none'})"
             )
         del cons[name]
-        new_manifest = {
-            **{
-                k: v
-                for k, v in manifest.items()
-                if k not in ("committed_at", "constraints")
-            },
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
-        }
+        out = {k: v for k, v in t.items() if k != "constraints"}
         if cons:
-            new_manifest["constraints"] = cons
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+            out["constraints"] = cons
+        return out
+
+    return edit
 
 
 def _constraint_references(constraints: dict, col: str) -> list[str]:
@@ -3309,39 +3281,34 @@ def alter_versioned_drop_columns(
     The key column cannot drop (it pins the bucket layout), and a
     column referenced by a CHECK constraint must lose the constraint
     first."""
-    import uuid
+    return _commit_meta_edit(path, _drop_columns_edit(columns))
 
+
+def _drop_columns_edit(columns: list[str]):
     if not columns:
         raise ValueError("no columns to drop")
-    token = uuid.uuid4().hex[:12]
-    while True:
-        manifest = _bucket_manifest(path)
-        _validate_drop_columns(manifest, path, columns)
-        new_manifest = {
-            **{k: v for k, v in manifest.items() if k != "committed_at"},
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
+
+    def edit(t: dict, root: str) -> dict:
+        _validate_drop_columns(t, root, columns)
+        out = {
+            **t,
             "dropped_columns": sorted(
-                set(manifest.get("dropped_columns") or []) | set(columns)
+                set(t.get("dropped_columns") or []) | set(columns)
             ),
         }
-        # deep-copy the stats map before stripping: the head manifest
-        # dict may be cached upstream
-        if new_manifest.get("bucket_stats"):
-            new_manifest["bucket_stats"] = {
+        # deep-copy the maps before stripping: the head manifest dict
+        # may be cached upstream
+        if out.get("bucket_stats"):
+            out["bucket_stats"] = {
                 b: {**e, "cols": dict(e.get("cols") or {})}
-                for b, e in new_manifest["bucket_stats"].items()
+                for b, e in out["bucket_stats"].items()
             }
-        if new_manifest.get("added_columns"):
-            new_manifest["added_columns"] = dict(new_manifest["added_columns"])
-        _strip_dropped_metadata(new_manifest, set(columns))
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+        if out.get("added_columns"):
+            out["added_columns"] = dict(out["added_columns"])
+        _strip_dropped_metadata(out, set(columns))
+        return out
+
+    return edit
 
 
 def alter_versioned_db_drop_columns(
@@ -3354,47 +3321,7 @@ def alter_versioned_db_drop_columns(
     twin of :func:`alter_versioned_drop_columns`, identical semantics;
     other tables are untouched and the ALTER is one transaction on
     the shared chain."""
-    import uuid
-
-    if not columns:
-        raise ValueError("no columns to drop")
-    token = uuid.uuid4().hex[:12]
-    while True:
-        manifest = _db_manifest(path)
-        if table not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {table!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
-        t = manifest["tables"][table]
-        _validate_drop_columns(t, os.path.join(path, table), columns)
-        new_t = {
-            **t,
-            "dropped_columns": sorted(
-                set(t.get("dropped_columns") or []) | set(columns)
-            ),
-        }
-        if new_t.get("bucket_stats"):
-            new_t["bucket_stats"] = {
-                b: {**e, "cols": dict(e.get("cols") or {})}
-                for b, e in new_t["bucket_stats"].items()
-            }
-        if new_t.get("added_columns"):
-            new_t["added_columns"] = dict(new_t["added_columns"])
-        _strip_dropped_metadata(new_t, set(columns))
-        new_manifest = {
-            **{k: v for k, v in manifest.items() if k != "committed_at"},
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
-            "tables": {**manifest["tables"], table: new_t},
-        }
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+    return _commit_meta_edit(path, _drop_columns_edit(columns), table)
 
 
 def _renamed_table_entry(t: dict, root: str, old: str, new: str) -> dict:
@@ -3523,24 +3450,9 @@ def alter_versioned_rename_column(
     has the full contract). Pre-rename tokens time-travel with the
     old name; concurrent bucket rewrites racing the rename raise
     :class:`ConcurrentMergeError` on their rebase path."""
-    import uuid
-
-    token = uuid.uuid4().hex[:12]
-    while True:
-        manifest = _bucket_manifest(path)
-        new_t = _renamed_table_entry(manifest, path, old, new)
-        new_manifest = {
-            **{k: v for k, v in new_t.items() if k != "committed_at"},
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
-        }
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+    return _commit_meta_edit(
+        path, lambda t, root: _renamed_table_entry(t, root, old, new)
+    )
 
 
 def alter_versioned_db_rename_column(
@@ -3554,32 +3466,9 @@ def alter_versioned_db_rename_column(
     db twin of :func:`alter_versioned_rename_column`, identical
     semantics; other tables are untouched and the ALTER is one
     transaction on the shared chain."""
-    import uuid
-
-    token = uuid.uuid4().hex[:12]
-    while True:
-        manifest = _db_manifest(path)
-        if table not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {table!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
-        new_t = _renamed_table_entry(
-            manifest["tables"][table], os.path.join(path, table), old, new
-        )
-        new_manifest = {
-            **{k: v for k, v in manifest.items() if k != "committed_at"},
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
-            "tables": {**manifest["tables"], table: new_t},
-        }
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+    return _commit_meta_edit(
+        path, lambda t, root: _renamed_table_entry(t, root, old, new), table
+    )
 
 
 def _alter_collision_columns(
@@ -3700,40 +3589,27 @@ def alter_versioned_add_columns(
     new column is a full-table rewrite; deferring materialization to
     the buckets the merge traffic touches anyway makes the ALTER O(1)
     and the backfill incremental and free."""
-    import uuid
+    return _commit_meta_edit(path, _add_columns_edit(columns))
 
+
+def _add_columns_edit(
+    columns: dict[str, tuple[str, object]], repair: str = "write_versioned_table"
+):
     _parse_added_column_types(columns)
-    token = uuid.uuid4().hex[:12]
-    while True:
-        # the head IS the base — re-read and rebuild EVERYTHING on
-        # every claim attempt, the collision set included: a lost race
-        # would otherwise commit this ALTER's stale bucket map and
-        # revert concurrent merges (data loss), drop concurrent
-        # ALTERs' columns, or validate against a schema a concurrent
-        # re-init just changed (a column it physically materialized —
-        # and therefore dropped from added_columns — must not be
-        # re-addable as metadata against the stale physical set)
-        manifest = _bucket_manifest(path)
-        physical = _alter_collision_columns(
-            path, manifest, repair="write_versioned_table"
-        )
+
+    def edit(t: dict, root: str) -> dict:
+        # rebuilt per claim attempt, the collision set included: a
+        # column a concurrent re-init physically materialized — and
+        # therefore dropped from added_columns — must not be re-addable
+        # as metadata against the stale physical set
+        physical = _alter_collision_columns(root, t, repair=repair)
         added = _merged_added_columns(
-            columns, manifest.get("added_columns", {}), physical,
-            dropped=set(manifest.get("dropped_columns") or []),
+            columns, t.get("added_columns", {}), physical,
+            dropped=set(t.get("dropped_columns") or []),
         )
-        new_manifest = {
-            **{k: v for k, v in manifest.items() if k != "committed_at"},
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
-            "added_columns": added,
-        }
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+        return {**t, "added_columns": added}
+
+    return edit
 
 
 def _diff_snapshot_tables(spark: SparkSession, root: str, tf: dict, tt: dict):
@@ -4695,6 +4571,10 @@ def merge_into_versioned(
     keys outside every existing bucket still commit atomically on the
     same chain.
 
+    ``pk`` must be the table's key (the manifest's): buckets are the
+    key's hash, so merging on any other column would rewrite the
+    wrong buckets — a mismatch raises ``ValueError``.
+
     Concurrency: the merge reads its snapshot (``base_token`` pins an
     explicit one — the optimistic-concurrency hook; default = current
     head), rewrites only its affected buckets, then claims the next
@@ -4708,88 +4588,73 @@ def merge_into_versioned(
     existing values of the same keys, surviving rebases) — the hook
     the streaming sink uses to pin per-stream progress (exactly-once)
     into the same atomic commit as the data."""
-    import uuid
+    _check_not_matched(not_matched)
+    manifest = _bucket_manifest(path, base_token)
+    if pk != manifest["pk"]:
+        raise ValueError(
+            f"{path}: merge key {pk!r} is not the table key "
+            f"({manifest['pk']!r})"
+        )
+    token = _new_token()
+    res = _merge_table_body(
+        spark, path, manifest, updates, set_cols, not_matched, f"gen-{token}"
+    )
+    return _commit_dml(
+        spark, path, manifest, {"": res}, token, extra_meta, adds_rows=True
+    )
 
+
+def _check_not_matched(not_matched: str) -> None:
     if not_matched not in ("ignore", "insert"):
         raise ValueError(
             f"not_matched must be 'ignore' or 'insert', got {not_matched!r}"
         )
-    manifest = _bucket_manifest(path, base_token)
-    base_buckets = dict(manifest["buckets"])
-    n_buckets = manifest["n_buckets"]
-    upd = updates.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets))
+
+
+def _merge_table_body(
+    spark: SparkSession,
+    root: str,
+    t: dict,
+    updates: DataFrame,
+    set_cols: list[str],
+    not_matched: str,
+    gen: str,
+) -> _TableWrite | None:
+    """Per-table MERGE body shared by both layouts: rewrites the
+    buckets the update keys hash to (only existing ones unless
+    ``not_matched="insert"``) under ``<root>/<gen>``, keyed on the
+    manifest's own pk, or returns ``None`` when no bucket is
+    affected."""
+    pk, nb = t["pk"], t["n_buckets"]
+    upd = updates.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
     upd_buckets = _nonnull_update_buckets(upd, pk)
     affected = (
         upd_buckets
         if not_matched == "insert"
-        else [b for b in upd_buckets if str(b) in manifest["buckets"]]
+        else [b for b in upd_buckets if str(b) in t["buckets"]]
     )
     if not affected:
-        return _commit_meta_only(path, manifest, extra_meta)
-    cur_paths = [
-        os.path.join(path, manifest["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
+        return None
+    cur = [
+        os.path.join(root, t["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
         for b in affected
-        if str(b) in manifest["buckets"]
+        if str(b) in t["buckets"]
     ]
-    table = _merge_target_frame(
-        spark, path, manifest, cur_paths, upd, pk, set_cols
-    )
+    table = _merge_target_frame(spark, root, t, cur, upd, pk, set_cols)
     merged = _apply_matched_updates(table, upd, pk, set_cols)
     if not_matched == "insert":
         merged = merged.unionByName(_unmatched_inserts(table, upd, pk, set_cols))
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    written = _write_generation(merged, path, gen, manifest)
+    written = _write_generation(merged, root, gen, t)
     # Deletion vectors break the "affected bucket has >=1 logical row"
     # invariant: a mode='dv' delete can empty a bucket logically, and a
     # not_matched='ignore' merge touching it writes NO partition dir for
     # it — mapping it to `gen` anyway would commit a dangling pointer
     # (and shed the DV), making every subsequent read PATH_NOT_FOUND.
-    # Mirror _delete_keys_from_table: absent-from-gen buckets map to
-    # None, which _live_buckets drops from the manifest.
-    present = set(_present_buckets(os.path.join(path, gen)))
-    ours = {str(b): (gen if b in present else None) for b in affected}
-    _enforce_constraints(spark, path, manifest, gen, written)
-    our_stats = (
-        _harvest_bucket_stats(spark, path, gen, manifest, written)
-        if _wants_stats(manifest)
-        else None
+    # Absent-from-gen buckets map to None, which the commit drops.
+    present = set(_present_buckets(os.path.join(root, gen)))
+    return _TableWrite(
+        {str(b): (gen if b in present else None) for b in affected}, written
     )
-    new_manifest = _commit_bucket_update(
-        path, manifest, base_buckets, ours, token, extra_meta,
-        our_stats=our_stats, adds_rows=True, written=written,
-    )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
-
-
-def _live_buckets(base: dict, ours: dict) -> dict:
-    """Overlay rewritten buckets onto a base map; a ``None``
-    generation DROPS the bucket (a delete emptied it) — the one
-    None-drop invariant shared by BOTH commit loops."""
-    out = {**base, **ours}
-    return {b: g for b, g in out.items() if g is not None}
-
-
-def _commit_meta_only(
-    path: str, manifest: dict, extra_meta: dict | None
-) -> dict:
-    """The no-data-change commit rule shared by MERGE, DELETE, and
-    CDC-apply: when nothing touches a bucket but the caller supplied
-    metadata (e.g. a stream's batch marker), that metadata must still
-    commit on the chain — otherwise "the marker rides with the data"
-    breaks for exactly the batches that matched nothing. Without
-    metadata, the head manifest is simply returned."""
-    import uuid
-
-    if extra_meta:
-        new_manifest = _commit_bucket_update(
-            path, manifest, dict(manifest["buckets"]), {},
-            uuid.uuid4().hex[:12], extra_meta,
-        )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    return manifest
 
 
 def delete_from_versioned(
@@ -4823,60 +4688,31 @@ def delete_from_versioned(
     DELETE's equality never matches NULL). Concurrency and
     ``extra_meta`` follow the MERGE rules (same CAS commit loop; DV
     and rewrite commits on the same bucket conflict symmetrically)."""
-    import uuid
-
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+    body = _delete_body(mode)
     manifest = _bucket_manifest(path, base_token)
     if pk != manifest["pk"]:
         raise ValueError(
             f"{path}: delete key {pk!r} is not the table key "
             f"({manifest['pk']!r})"
         )
-    token = uuid.uuid4().hex[:12]
-    if mode == "dv":
-        res = _dv_delete_table_body(
-            spark, path, manifest, keys, f"gen-{token}"
-        )
-        if res is None:
-            return _commit_meta_only(path, manifest, extra_meta)
-        ours_dv, ours_patch, written = res
-        new_manifest = _commit_bucket_update(
-            path, manifest, dict(manifest["buckets"]), {}, token,
-            extra_meta, ours_dv=ours_dv, ours_patch=ours_patch or None,
-            written=written,
-        )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    res = _delete_keys_from_table(spark, path, manifest, keys, f"gen-{token}")
-    if res is None:
-        return _commit_meta_only(path, manifest, extra_meta)
-    ours, written = res
-    new_manifest = _commit_bucket_update(
-        path, manifest, dict(manifest["buckets"]), ours, token, extra_meta,
-        # emptied buckets have no dir in the new generation, so they
-        # simply have no harvest row — _carry_bucket_stats drops them
-        our_stats=(
-            _harvest_bucket_stats(
-                spark, path, f"gen-{token}", manifest, written
-            )
-            if _wants_stats(manifest)
-            else None
-        ),
-        written=written,
-    )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+    token = _new_token()
+    res = body(spark, path, manifest, keys, f"gen-{token}")
+    return _commit_dml(spark, path, manifest, {"": res}, token, extra_meta)
+
+
+def _delete_body(mode: str):
+    if mode not in ("rewrite", "dv"):
+        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+    return _dv_delete_table_body if mode == "dv" else _delete_keys_from_table
 
 
 def _delete_keys_from_table(
     spark: SparkSession, root: str, t: dict, keys: DataFrame, gen: str
-) -> tuple[dict, StructType] | None:
+) -> _TableWrite | None:
     """Per-table DELETE body shared by both layouts: writes the
     affected buckets' remaining rows under ``<root>/<gen>`` and
-    returns the ours bucket map (``None`` generations mark emptied
-    buckets) with the written schema, or ``None`` when no key matched
-    (nothing written)."""
+    returns them (``None`` generations mark emptied buckets), or
+    ``None`` when no key matched (nothing written)."""
     pk, n_buckets = t["pk"], t["n_buckets"]
     base_buckets = t["buckets"]
     # fused materialize + bucket set (see _ckpt_with_buckets): the
@@ -4915,19 +4751,19 @@ def _delete_keys_from_table(
     ).join(k.select(pk), pk, "left_anti")
     written = _write_generation(remaining, root, gen, t)
     present = set(_present_buckets(os.path.join(root, gen)))
-    return {
-        str(b): (gen if b in present else None) for b in affected
-    }, written
+    return _TableWrite(
+        {str(b): (gen if b in present else None) for b in affected}, written
+    )
 
 
 def _dv_delete_table_body(
     spark: SparkSession, root: str, t: dict, keys: DataFrame, gen: str
-) -> tuple[dict, dict, StructType | None] | None:
+) -> _TableWrite | None:
     """Per-table merge-on-read DELETE body shared by both layouts:
     writes ONE small parquet per affected bucket under
     ``<root>/<gen>/<bucket dir>`` holding the UNION of that bucket's
     previously-committed DV pks and the newly matched keys (column
-    ``__dv_pk``), and returns the ours DV map ``{bucket: gen}`` — or
+    ``__dv_pk``), and returns the DV map ``{bucket: gen}`` — or
     ``None`` when no key matched. No data file is read beyond the
     candidate buckets and no data file is WRITTEN at all: at 100 TB a
     10-key erasure costs a candidate-bucket read plus a few-KB
@@ -4996,9 +4832,7 @@ def _dv_delete_table_body(
     patch = _patch_map(t)
     patched_aff = [b for b in affected if str(b) in patch]
     if patched_aff:
-        import uuid as _uuid
-
-        patch_gen = f"gen-{_uuid.uuid4().hex[:12]}"
+        patch_gen = f"gen-{_new_token()}"
         prior = _fill_added_columns(
             _read_logical(
                 spark,
@@ -5019,7 +4853,10 @@ def _dv_delete_table_body(
             str(b): (patch_gen if b in present else None)
             for b in patched_aff
         }
-    return {str(b): gen for b in affected}, ours_patch, written
+    return _TableWrite(
+        {}, written, dv={str(b): gen for b in affected},
+        patch=ours_patch or None,
+    )
 
 
 def _dv_update_table_body(
@@ -5031,7 +4868,7 @@ def _dv_update_table_body(
     prune,
     eq,
     gen: str,
-) -> tuple[dict, dict, StructType] | None:
+) -> _TableWrite | None:
     """Per-table merge-on-read UPDATE body shared by both layouts
     (``update_versioned(mode="dv")``): instead of rewriting whole
     buckets for a few matched rows, write per affected bucket (a) a
@@ -5039,8 +4876,8 @@ def _dv_update_table_body(
     DV — the base versions are dead) and (b) an UPDATE OVERLAY file
     under ``<root>/<gen>/<bucket dir>`` holding the NEW row versions
     plus the bucket's carried-over prior overlay rows, then return
-    ``(ours_dv, ours_patch)`` maps and the overlay's written schema —
-    or ``None`` when nothing matched. Readers compose
+    the DV and overlay maps with the overlay's written schema — or
+    ``None`` when nothing matched. Readers compose
     ``(base \\ DV) ∪ patch`` (:func:`_apply_dv`); any rewrite
     materializes and sheds both.
 
@@ -5142,9 +4979,7 @@ def _dv_update_table_body(
     # DV union: matched pks (base versions now dead; pks matched via
     # a prior overlay are already in the vector — union dedups) plus
     # the affected buckets' existing vectors
-    import uuid as _uuid
-
-    dv_gen = f"gen-{_uuid.uuid4().hex[:12]}"
+    dv_gen = f"gen-{_new_token()}"
     dvm = _dv_map(t)
     out = matched.select(F.col(pk).alias(DV_PK_COL))
     old_paths = [
@@ -5161,10 +4996,9 @@ def _dv_update_table_body(
         .partitionBy(MERGE_BUCKET_COL)
         .parquet(os.path.join(root, dv_gen))
     )
-    return (
-        {str(b): dv_gen for b in affected},
-        {str(b): gen for b in affected},
-        written,
+    return _TableWrite(
+        {}, written, dv={str(b): dv_gen for b in affected},
+        patch={str(b): gen for b in affected},
     )
 
 
@@ -5205,11 +5039,11 @@ def _update_table_body(
     prune,
     eq,
     gen: str,
-) -> tuple[dict, StructType] | None:
+) -> _TableWrite | None:
     """Per-table UPDATE body shared by both layouts: rewrites the
     buckets that CONTAIN a matching row (non-matching rows in those
     buckets are carried unchanged) under ``<root>/<gen>`` and returns
-    the ours bucket map with the written schema, or ``None`` when
+    the rewritten buckets with the written schema, or ``None`` when
     nothing matched (nothing written). Bucket targeting is two-tier:
     manifest-level skipping first (stats ranges, Bloom equalities —
     buckets PROVEN free of matches are never opened), then an exact
@@ -5289,7 +5123,7 @@ def _update_table_body(
             cols.append(F.col(c))
     out = table.where(_bucket_expr(pk, n_buckets).isin(affected)).select(*cols)
     written = _write_generation(out, root, gen, t)
-    return {str(b): gen for b in affected}, written
+    return _TableWrite({str(b): gen for b in affected}, written)
 
 
 def update_versioned(
@@ -5327,50 +5161,22 @@ def update_versioned(
     (killing the base versions) and the new row versions land in an
     UPDATE OVERLAY sidecar — KB-scale writes for a few-row UPDATE on
     a 100 TB table (:func:`_dv_update_table_body`); OPTIMIZE
-    materializes both back to pure files."""
-    import uuid
+    materializes both back to pure files; its overlay generation
+    holds every NEW row version, so it gets the same write-side CHECK
+    enforcement as a rewrite commit."""
+    body = _update_body(mode)
+    manifest = _bucket_manifest(path, base_token)
+    token = _new_token()
+    res = body(spark, path, manifest, set_exprs, where, prune, eq, f"gen-{token}")
+    return _commit_dml(
+        spark, path, manifest, {"": res}, token, extra_meta, adds_rows=True
+    )
 
+
+def _update_body(mode: str):
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-    manifest = _bucket_manifest(path, base_token)
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    if mode == "dv":
-        res = _dv_update_table_body(
-            spark, path, manifest, set_exprs, where, prune, eq, gen
-        )
-        if res is None:
-            return _commit_meta_only(path, manifest, extra_meta)
-        ours_dv, ours_patch, written = res
-        # the overlay generation holds every NEW row version — the
-        # same write-side CHECK enforcement as a rewrite commit
-        _enforce_constraints(spark, path, manifest, gen, written)
-        new_manifest = _commit_bucket_update(
-            path, manifest, dict(manifest["buckets"]), {}, token,
-            extra_meta, adds_rows=True, ours_dv=ours_dv,
-            ours_patch=ours_patch, written=written,
-        )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    res = _update_table_body(
-        spark, path, manifest, set_exprs, where, prune, eq, gen
-    )
-    if res is None:
-        return _commit_meta_only(path, manifest, extra_meta)
-    ours, written = res
-    _enforce_constraints(spark, path, manifest, gen, written)
-    new_manifest = _commit_bucket_update(
-        path, manifest, dict(manifest["buckets"]), ours, token, extra_meta,
-        our_stats=(
-            _harvest_bucket_stats(spark, path, gen, manifest, written)
-            if _wants_stats(manifest)
-            else None
-        ),
-        adds_rows=True,
-        written=written,
-    )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+    return _dv_update_table_body if mode == "dv" else _update_table_body
 
 
 def apply_changes_versioned(
@@ -5396,39 +5202,22 @@ def apply_changes_versioned(
     keys; everything else stays byte-identical. Buckets emptied by
     deletes drop from the manifest. One chain commit — readers never
     observe deletes without the matching upserts."""
-    import uuid
-
     manifest = _bucket_manifest(path, base_token)
-    token = uuid.uuid4().hex[:12]
+    token = _new_token()
     res = _apply_changes_to_table(
         spark, path, manifest, changes, f"gen-{token}"
     )
-    if res is None:
-        return _commit_meta_only(path, manifest, extra_meta)
-    ours, written = res
-    _enforce_constraints(spark, path, manifest, f"gen-{token}", written)
-    new_manifest = _commit_bucket_update(
-        path, manifest, dict(manifest["buckets"]), ours, token, extra_meta,
-        our_stats=(
-            _harvest_bucket_stats(
-                spark, path, f"gen-{token}", manifest, written
-            )
-            if _wants_stats(manifest)
-            else None
-        ),
-        adds_rows=True,
-        written=written,
+    return _commit_dml(
+        spark, path, manifest, {"": res}, token, extra_meta, adds_rows=True
     )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
 
 
 def _apply_changes_to_table(
     spark: SparkSession, root: str, t: dict, changes: DataFrame, gen: str
-) -> tuple[dict, StructType] | None:
+) -> _TableWrite | None:
     """Per-table CDC-apply body shared by both layouts: validates the
     feed, writes the affected buckets' new state under
-    ``<root>/<gen>``, and returns the ours bucket map (``None``
+    ``<root>/<gen>``, and returns the rewritten buckets (``None``
     generations mark emptied buckets) with the written schema, or
     ``None`` when no row of the feed touches this table (nothing
     written)."""
@@ -5473,7 +5262,7 @@ def _apply_changes_body(
     ch: DataFrame,
     gen: str,
     data_cols: list[str],
-) -> tuple[dict, StructType] | None:
+) -> _TableWrite | None:
     pk, n_buckets = t["pk"], t["n_buckets"]
     base_buckets = t["buckets"]
     # ONE grouped validation job replaces FIVE driver actions over the
@@ -5596,9 +5385,9 @@ def _apply_changes_body(
     )
     written = _write_generation(out, root, gen, t)
     present = set(_present_buckets(os.path.join(root, gen)))
-    return {
-        str(b): (gen if b in present else None) for b in affected
-    }, written
+    return _TableWrite(
+        {str(b): (gen if b in present else None) for b in affected}, written
+    )
 
 
 def replicate_versioned(
@@ -5645,57 +5434,18 @@ def delete_from_versioned_db(
     DV union, emptied-bucket drop, NULL/absent keys as no-ops) match
     the single-table DELETE, and concurrency follows the
     transactional MERGE rules."""
-    import uuid
-
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+    body = _delete_body(mode)
     manifest = _db_manifest(path, base_token)
-    for name in keys:
-        if name not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    written: dict = {}
-    if mode == "dv":
-        ours_dv: dict[str, dict] = {}
-        ours_patch: dict[str, dict] = {}
-        for name, keys_df in keys.items():
-            t = manifest["tables"][name]
-            res = _dv_delete_table_body(
-                spark, os.path.join(path, name), t, keys_df, gen
-            )
-            if res is not None:
-                ours_dv[name] = res[0]
-                if res[1]:
-                    ours_patch[name], written[name] = res[1], res[2]
-        if not ours_dv:
-            return _commit_db_meta_only(path, manifest, extra_meta)
-        new_manifest = _commit_db_update(
-            path, manifest, {}, token, extra_meta, ours_dv=ours_dv,
-            ours_patch=ours_patch or None, written=written,
+    _require_tables(path, manifest, keys)
+    token = _new_token()
+    writes = {
+        name: body(
+            spark, os.path.join(path, name), manifest["tables"][name],
+            keys_df, f"gen-{token}",
         )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    ours: dict[str, dict] = {}
-    for name, keys_df in keys.items():
-        t = manifest["tables"][name]
-        res = _delete_keys_from_table(
-            spark, os.path.join(path, name), t, keys_df, gen
-        )
-        if res is not None:
-            ours[name], written[name] = res
-    if not ours:
-        return _commit_db_meta_only(path, manifest, extra_meta)
-    new_manifest = _commit_db_update(
-        path, manifest, ours, token, extra_meta,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
-        written=written,
-    )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+        for name, keys_df in keys.items()
+    }
+    return _commit_dml(spark, path, manifest, writes, token, extra_meta)
 
 
 def update_versioned_db(
@@ -5718,18 +5468,10 @@ def update_versioned_db(
     follows the transactional MERGE rules. ``mode="dv"`` applies the
     merge-on-read path (DV + UPDATE overlay sidecars, no bucket
     rewrites) to every named table, all under one transaction."""
-    import uuid
-
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-
+    body = _update_body(mode)
     manifest = _db_manifest(path, base_token)
+    _require_tables(path, manifest, updates)
     for name, spec in updates.items():
-        if name not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
         if not isinstance(spec, dict) or "set" not in spec:
             raise ValueError(
                 f"{path}: update spec for {name!r} must be a dict "
@@ -5741,64 +5483,18 @@ def update_versioned_db(
                 f"{path}: unknown update spec key(s) {sorted(unknown)} "
                 f"for {name!r} (allowed: set, where, prune, eq)"
             )
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    written: dict = {}
-    if mode == "dv":
-        ours_dv: dict[str, dict] = {}
-        ours_patch: dict[str, dict] = {}
-        for name, spec in updates.items():
-            t = manifest["tables"][name]
-            res = _dv_update_table_body(
-                spark, os.path.join(path, name), t, spec["set"],
-                spec.get("where"), spec.get("prune"), spec.get("eq"),
-                gen,
-            )
-            if res is not None:
-                ours_dv[name], ours_patch[name], written[name] = res
-        if not ours_dv:
-            return _commit_db_meta_only(path, manifest, extra_meta)
-        for name in ours_patch:
-            _enforce_constraints(
-                spark, os.path.join(path, name),
-                manifest["tables"][name], gen, written[name],
-            )
-        new_manifest = _commit_db_update(
-            path, manifest, {}, token, extra_meta, adds_rows=True,
-            ours_dv=ours_dv, ours_patch=ours_patch, written=written,
+    token = _new_token()
+    writes = {
+        name: body(
+            spark, os.path.join(path, name), manifest["tables"][name],
+            spec["set"], spec.get("where"), spec.get("prune"),
+            spec.get("eq"), f"gen-{token}",
         )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    ours: dict[str, dict] = {}
-    for name, spec in updates.items():
-        t = manifest["tables"][name]
-        res = _update_table_body(
-            spark,
-            os.path.join(path, name),
-            t,
-            spec["set"],
-            spec.get("where"),
-            spec.get("prune"),
-            spec.get("eq"),
-            gen,
-        )
-        if res is not None:
-            ours[name], written[name] = res
-    if not ours:
-        return _commit_db_meta_only(path, manifest, extra_meta)
-    for name in ours:
-        _enforce_constraints(
-            spark, os.path.join(path, name), manifest["tables"][name], gen,
-            written[name],
-        )
-    new_manifest = _commit_db_update(
-        path, manifest, ours, token, extra_meta,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
-        adds_rows=True,
-        written=written,
+        for name, spec in updates.items()
+    }
+    return _commit_dml(
+        spark, path, manifest, writes, token, extra_meta, adds_rows=True
     )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
 
 
 def apply_changes_versioned_db(
@@ -5815,41 +5511,19 @@ def apply_changes_versioned_db(
     and ONE chain commit publishes every table's changes together —
     a replica never shows table A's state from a different transaction
     than table B's."""
-    import uuid
-
     manifest = _db_manifest(path, base_token)
-    for name in changes:
-        if name not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    ours: dict[str, dict] = {}
-    written: dict = {}
-    for name, ch in changes.items():
-        t = manifest["tables"][name]
-        res = _apply_changes_to_table(
-            spark, os.path.join(path, name), t, ch, gen
+    _require_tables(path, manifest, changes)
+    token = _new_token()
+    writes = {
+        name: _apply_changes_to_table(
+            spark, os.path.join(path, name), manifest["tables"][name], ch,
+            f"gen-{token}",
         )
-        if res is not None:
-            ours[name], written[name] = res
-    if not ours:
-        return _commit_db_meta_only(path, manifest, extra_meta)
-    for name in ours:
-        _enforce_constraints(
-            spark, os.path.join(path, name), manifest["tables"][name], gen,
-            written[name],
-        )
-    new_manifest = _commit_db_update(
-        path, manifest, ours, token, extra_meta,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
-        adds_rows=True,
-        written=written,
+        for name, ch in changes.items()
+    }
+    return _commit_dml(
+        spark, path, manifest, writes, token, extra_meta, adds_rows=True
     )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
 
 
 def replicate_versioned_db(
@@ -5888,26 +5562,9 @@ def replicate_versioned_db(
     )
 
 
-def _commit_db_meta_only(
-    path: str, manifest: dict, extra_meta: dict | None
-) -> dict:
-    """The db twin of :func:`_commit_meta_only`: commit caller
-    metadata as an empty transaction when no bucket changed, else
-    return the head unchanged."""
-    import uuid
-
-    if extra_meta:
-        new_manifest = _commit_db_update(
-            path, manifest, {}, uuid.uuid4().hex[:12], extra_meta
-        )
-        _publish_manifest(path, new_manifest)
-        return new_manifest
-    return manifest
-
-
 def _apply_extra_meta(out: dict, extra_meta: dict | None) -> None:
     """Merge caller metadata into a manifest about to be claimed —
-    shared by BOTH commit loops (single-table and db). extra_meta keys
+    run by the data-commit loop for both layouts. extra_meta keys
     DEEP-merge over dict values; the "streams" map is additionally
     MONOTONIC per stream — committing a batch marker at or below the
     head's is refused (:class:`StaleStreamBatch`), because blindly
@@ -5931,174 +5588,280 @@ def _apply_extra_meta(out: dict, extra_meta: dict | None) -> None:
             out[k] = v
 
 
-def _commit_bucket_update(
+class _TableWrite(NamedTuple):
+    """One table's part of a data commit, as every per-table DML body
+    returns it: ``buckets`` maps each rewritten bucket to its new
+    generation (``None`` drops a bucket a delete emptied), ``dv`` and
+    ``patch`` overlay deletion-vector and UPDATE-overlay entries (a
+    ``None`` patch entry drops the bucket's overlay), and ``written``
+    is the physical schema of the generation written (``None`` when
+    no data file was)."""
+
+    buckets: dict
+    written: StructType | None
+    dv: dict | None = None
+    patch: dict | None = None
+
+    def touched(self) -> set:
+        return set(self.buckets) | set(self.dv or {}) | set(self.patch or {})
+
+
+_NO_WRITE = _TableWrite({}, None)
+
+
+def _new_token() -> str:
+    import uuid
+
+    return uuid.uuid4().hex[:12]
+
+
+def _layout_tables(manifest: dict) -> dict:
+    """The ``{table: entry}`` view the commit core works on: a
+    database's ``tables`` map, or a single table as the one-table
+    database ``{"": manifest}`` (its manifest IS its entry, so the
+    on-disk format stays flat)."""
+    if manifest.get("kind") == "versioned-db":
+        return manifest["tables"]
+    return {"": manifest}
+
+
+def _table_root(path: str, name: str) -> str:
+    """A table's directory: the root itself for a single table,
+    ``<path>/<name>`` in a database."""
+    return os.path.join(path, name) if name else path
+
+
+def _require_tables(path: str, manifest: dict, names) -> None:
+    for name in names:
+        if name not in manifest["tables"]:
+            raise ValueError(
+                f"{path}: no table {name!r} in this snapshot "
+                f"(has: {sorted(manifest['tables'])})"
+            )
+
+
+def _live_buckets(base: dict, ours: dict) -> dict:
+    """Overlay rewritten buckets onto a base map; a ``None``
+    generation DROPS the bucket (a delete emptied it) — the
+    None-drop invariant of the commit core."""
+    out = {**base, **ours}
+    return {b: g for b, g in out.items() if g is not None}
+
+
+def _stamp_table(t: dict, w: _TableWrite, stats: dict | None) -> dict:
+    """Apply one table's writes to the entry being extended (the
+    snapshot, or a rebase head). A rewritten bucket SHEDS its DV and
+    UPDATE-overlay entries (the rewrite read the DV-composed frame, so
+    the physical and the metadata shed are one atomic commit); fresh
+    DV/overlay entries overlay. Bucket stats are purge-then-overlay
+    against the exact map being extended: a bucket rewritten without
+    a fresh harvest keeps NO stats (conservative read), never the
+    superseded entry, and a bucket gaining an overlay purges too (its
+    base stats describe superseded values). ``written`` is reconciled
+    with the recorded schema (:func:`_adopt_written_schema`), so a
+    widening commits atomically with the data."""
+    live = _live_buckets(t["buckets"], w.buckets)
+    out = {**t, "buckets": live}
+    for key, fresh in (("dv", w.dv), ("patch", w.patch)):
+        m = {
+            b: g for b, g in (t.get(key) or {}).items() if b not in w.buckets
+        }
+        m.update(fresh or {})
+        m = {b: g for b, g in m.items() if g is not None}
+        if m:
+            out[key] = m
+        else:
+            out.pop(key, None)
+    if "bucket_stats" in t or stats:
+        out["bucket_stats"] = _carry_bucket_stats(
+            t, set(w.buckets) | set(w.patch or {}), stats, live
+        )
+    return _adopt_written_schema(out, w.written)
+
+
+def _rebase_conflict(
+    path: str, base: dict, head: dict, head_seq: int,
+    writes: dict[str, _TableWrite], adds_rows: bool,
+) -> None:
+    """Raise :class:`ConcurrentMergeError` when a lost claim race
+    cannot rebase: for every table this commit wrote, any touched
+    bucket (rewritten, DV'd or overlaid) whose generation, DV entry or
+    overlay entry moved since the snapshot — both directions conflict
+    symmetrically: a rewrite racing a DV commit would resurrect the
+    deleted rows (its files predate the DV), and a DV commit racing a
+    rewrite may have unioned a superseded vector; a table an
+    intervening full rewrite removed; a changed CHECK constraint set
+    for a ROW-INTRODUCING commit (``adds_rows``: its rows were
+    validated against the snapshot's constraints only — the window
+    Delta leaves open; a relaxed set conflicts too, cheaper than
+    proving implication); and a RENAME, since this commit's stats and
+    evaluated expressions used the snapshot's logical names. One
+    table raising fails the whole transaction (a partial rebase would
+    tear it)."""
+    base_tables, head_tables = _layout_tables(base), _layout_tables(head)
+    for name in sorted(writes):
+        touched = writes[name].touched()
+        label = f"{path}: table {name!r}" if name else path
+        ht = head_tables.get(name)
+        if ht is None:
+            raise ConcurrentMergeError(
+                f"{label} was removed by a full rewrite (commits up to "
+                f"seq {head_seq}); re-run against the new head"
+            )
+        bt = base_tables[name]
+        for key, what in (
+            ("buckets", "bucket(s)"),
+            ("dv", "deletion vector(s) on bucket(s)"),
+            ("patch", "UPDATE overlay(s) on bucket(s)"),
+        ):
+            hm, bm = ht.get(key) or {}, bt.get(key) or {}
+            if any(hm.get(b) != bm.get(b) for b in touched):
+                raise ConcurrentMergeError(
+                    f"{label}: {what} {sorted(touched)} changed (commits "
+                    f"up to seq {head_seq}) after this write's snapshot; "
+                    "re-run against the new head"
+                )
+        if adds_rows and ht.get("constraints") != bt.get("constraints"):
+            raise ConcurrentMergeError(
+                f"{label}: the CHECK constraint set changed (commits up "
+                f"to seq {head_seq}) after this write validated its rows "
+                "against its snapshot's constraints; re-run against the "
+                "new head"
+            )
+        if ht.get("column_map") != bt.get("column_map"):
+            raise ConcurrentMergeError(
+                f"{label}: a column was renamed (commits up to seq "
+                f"{head_seq}) after this write's snapshot; re-run "
+                "against the new head"
+            )
+
+
+def _commit_tables(
     path: str,
-    base_manifest: dict,
-    base_buckets: dict[str, str],
-    ours: dict[str, str],
+    base: dict,
+    writes: dict[str, _TableWrite],
     token: str,
     extra_meta: dict | None = None,
-    our_stats: dict | None = None,
+    stats: dict[str, dict] | None = None,
     adds_rows: bool = False,
-    ours_dv: dict | None = None,
-    ours_patch: dict | None = None,
-    written: StructType | None = None,
 ) -> dict:
-    """The single-table CAS commit loop shared by MERGE, UPDATE,
-    OPTIMIZE, DELETE (both modes), and CDC-apply: claim the next seq;
-    on a lost race, rebase when every bucket we rewrote is untouched
-    since our snapshot, raise :class:`ConcurrentMergeError` when any
-    was rewritten (our files came from stale inputs).
+    """THE data-commit CAS loop of both layouts: stamp ``writes``
+    (``{table: _TableWrite}``, ``""`` for a single table) onto the
+    snapshot ``base``, claim the next seq; on a lost race rebase onto
+    the head when :func:`_rebase_conflict` finds nothing, else raise.
+    Every rebase re-stamps from the head, so newer ALTER metadata,
+    stream markers and stats carry over, and ``extra_meta`` (deep
+    merged, monotonic per stream — :func:`_apply_extra_meta`) is
+    checked against the exact manifest being extended. ``stats`` maps
+    table to its fresh bucket-stats harvest."""
 
-    DELETION VECTORS ride the same loop: a rewritten bucket SHEDS its
-    DV entry in the committed manifest (the rewrite read the
-    DV-filtered frame, so the physical shed and the metadata shed are
-    one atomic commit); ``ours_dv`` overlays fresh DV entries for a
-    merge-on-read delete. Both directions conflict symmetrically — a
-    rewrite racing a DV commit on the same bucket would resurrect the
-    deleted rows (its files predate the DV), and a DV commit racing a
-    rewrite may have unioned a superseded DV or suppress a
-    re-inserted key — so any touched bucket whose generation OR DV
-    entry moved since the snapshot raises.
-
-    CONSTRAINT-CHANGE conflicts are detected on the same rebase path:
-    a data writer validated its rows against its SNAPSHOT's CHECK
-    constraints — if the head it is rebasing onto carries a DIFFERENT
-    constraint set (a concurrent ADD CONSTRAINT), those rows were
-    never checked against it, so the commit raises instead of
-    publishing potentially-violating data (the optimistic window
-    Delta leaves open; re-run against the new head to close it).
-    Dropped/relaxed constraints conflict too — cheaper than proving
-    set-wise implication, and an ALTER racing a write is rare. Only
-    ROW-INTRODUCING writers opt in (``adds_rows=True``: MERGE,
-    UPDATE, CDC-apply); DELETE and OPTIMIZE only remove or re-arrange
-    rows that already passed, so they rebase freely.
-
-    An ``ours`` value of ``None`` DROPS that bucket from the manifest
-    (a delete emptied it, :func:`_live_buckets`) — still a touched
-    bucket for conflict detection, but the committed map carries no
-    entry, which is exactly how a zero-bucket init looks.
-
-    ``written`` is the physical schema of the generation the verb
-    wrote (:func:`_write_generation`); it is reconciled with the
-    recorded schema of the base AND of every rebase head
-    (:func:`_adopt_written_schema`), so a widening commits atomically
-    with the data and an incompatible type never commits."""
-    def stamped(src: dict, seq: int, buckets: dict) -> dict:
-        # carry every manifest field (kind/pk/n_buckets/added_columns/
-        # future metadata) from the newest known state; committed_at is
-        # re-stamped at publish. This runs on the base AND on every
-        # rebase, so the extra_meta merge always checks the exact
-        # manifest being extended.
-        out = {
-            **{k: v for k, v in src.items() if k != "committed_at"},
-            "token": token,
-            "seq": seq,
-            "buckets": buckets,
+    def stamped(src: dict, seq: int) -> dict:
+        tables = {
+            n: _stamp_table(t, writes.get(n, _NO_WRITE), (stats or {}).get(n))
+            for n, t in _layout_tables(src).items()
         }
-        dv = dict(src.get("dv") or {})
-        patch = dict(src.get("patch") or {})
-        for b in ours:
-            dv.pop(b, None)  # a rewritten bucket sheds its DV
-            patch.pop(b, None)  # ...and its UPDATE overlay
-        if ours_dv:
-            dv.update(ours_dv)
-        if ours_patch:
-            # a None patch entry DROPS the bucket's overlay (a DV
-            # delete erased its last patched row)
-            patch.update(ours_patch)
-            patch = {b: g for b, g in patch.items() if g is not None}
-        if dv:
-            out["dv"] = dv
+        if src.get("kind") == "versioned-db":
+            out = {**src, "tables": tables}
         else:
-            out.pop("dv", None)
-        if patch:
-            out["patch"] = patch
-        else:
-            out.pop("patch", None)
-        if "bucket_stats" in src or our_stats:
-            # purge-then-overlay runs per rebase too, against the exact
-            # stats map being extended — a committer that rewrote a
-            # bucket but harvested nothing leaves NO stats for it
-            # (conservative read), never the superseded entry. Buckets
-            # gaining an UPDATE overlay purge too: their base stats
-            # describe superseded values and would prune live rows.
-            out["bucket_stats"] = _carry_bucket_stats(
-                src, set(ours) | set(ours_patch or {}), our_stats, buckets
-            )
-        out = _adopt_written_schema(out, written)
+            out = tables[""]
+        out = {k: v for k, v in out.items() if k != "committed_at"}
+        out.update(token=token, seq=seq)
         _apply_extra_meta(out, extra_meta)
         return out
 
-    seq = int(base_manifest.get("seq", 0)) + 1
-    parent = base_manifest
-    new_manifest = stamped(base_manifest, seq, _live_buckets(base_buckets, ours))
+    seq, parent = int(base.get("seq", 0)) + 1, base
     while True:
+        new_manifest = stamped(parent, seq)
         try:
             _claim_commit(path, seq, new_manifest, parent=parent)
             return new_manifest
         except FileExistsError:
             head_seq, head = _commit_chain_head(path)
-            touched = set(ours) | set(ours_dv or {}) | set(ours_patch or {})
-            if any(
-                head["buckets"].get(b) != base_buckets.get(b)
-                for b in touched
-            ):
-                raise ConcurrentMergeError(
-                    f"{path}: bucket(s) {sorted(touched)} were rewritten by "
-                    f"commit(s) up to seq {head_seq} after this write's "
-                    "snapshot; re-run against the new head"
-                )
-            base_dv = base_manifest.get("dv") or {}
-            if any(
-                (head.get("dv") or {}).get(b) != base_dv.get(b)
-                for b in touched
-            ):
-                raise ConcurrentMergeError(
-                    f"{path}: deletion vector(s) on bucket(s) "
-                    f"{sorted(touched)} changed (seq up to {head_seq}) "
-                    "after this write's snapshot; re-run against the "
-                    "new head"
-                )
-            base_patch = base_manifest.get("patch") or {}
-            if any(
-                (head.get("patch") or {}).get(b) != base_patch.get(b)
-                for b in touched
-            ):
-                raise ConcurrentMergeError(
-                    f"{path}: UPDATE overlay(s) on bucket(s) "
-                    f"{sorted(touched)} changed (seq up to {head_seq}) "
-                    "after this write's snapshot; re-run against the "
-                    "new head"
-                )
-            if adds_rows and ours and head.get("constraints") != base_manifest.get(
-                "constraints"
-            ):
-                raise ConcurrentMergeError(
-                    f"{path}: the CHECK constraint set changed (seq up to "
-                    f"{head_seq}) after this write validated its rows "
-                    "against its snapshot's constraints; re-run against "
-                    "the new head"
-                )
-            if ours and head.get("column_map") != base_manifest.get(
-                "column_map"
-            ):
-                # a concurrent RENAME changed the logical namespace:
-                # this write's files carry the right PHYSICAL names
-                # either way, but its harvested stats / evaluated
-                # expressions used the snapshot's logical names —
-                # rebasing would mix two naming generations in one
-                # manifest
-                raise ConcurrentMergeError(
-                    f"{path}: a column was renamed (seq up to {head_seq}) "
-                    "after this write's snapshot; re-run against the "
-                    "new head"
-                )
-            # rebase onto the head's metadata too — it may carry newer
-            # ALTER commits than our snapshot
-            seq = head_seq + 1
-            parent = head
-            new_manifest = stamped(head, seq, _live_buckets(head["buckets"], ours))
+            _rebase_conflict(path, base, head, head_seq, writes, adds_rows)
+            seq, parent = head_seq + 1, head
+
+
+def _commit_dml(
+    spark: SparkSession,
+    path: str,
+    manifest: dict,
+    writes: dict[str, _TableWrite | None],
+    token: str,
+    extra_meta: dict | None = None,
+    adds_rows: bool = False,
+) -> dict:
+    """The DML driver of both layouts: ``writes`` holds each table's
+    body result (``None`` = nothing to change) for generation
+    ``gen-<token>``. Row-introducing verbs (``adds_rows``: MERGE,
+    UPDATE, CDC-apply) validate every written table against its CHECK
+    constraints; tables that opted into stats harvest their rewritten
+    buckets; then ONE commit publishes every table together. With
+    nothing written, caller metadata (a stream's batch marker) still
+    commits — "the marker rides with the data" must hold for batches
+    that matched nothing — and without it the snapshot is returned."""
+    writes = {n: w for n, w in writes.items() if w is not None}
+    if not writes and not extra_meta:
+        return manifest
+    tables = _layout_tables(manifest)
+    gen = f"gen-{token}"
+    if adds_rows:
+        for n, w in writes.items():
+            _enforce_constraints(
+                spark, _table_root(path, n), tables[n], gen, w.written
+            )
+    stats = {
+        n: _harvest_bucket_stats(
+            spark, _table_root(path, n), gen, tables[n], w.written
+        )
+        for n, w in writes.items()
+        if w.buckets and _wants_stats(tables[n])
+    }
+    new_manifest = _commit_tables(
+        path, manifest, writes, token, extra_meta, stats, adds_rows
+    )
+    _publish_manifest(path, new_manifest)
+    return new_manifest
+
+
+def _commit_meta_edit(
+    path: str, edit, table: str | None = None, db: bool = False
+) -> dict:
+    """THE metadata-commit loop of both layouts (ALTERs, constraints,
+    RESTORE): read the head, let ``edit(entry, root)`` build the new
+    entry — it validates and may raise to refuse — and claim the next
+    seq; a lost race starts over from the new head. The head IS the
+    base, so everything (validation included) is rebuilt per attempt:
+    committing a stale entry would revert concurrent merges or drop
+    concurrent ALTERs. ``table`` names a database table; without it
+    the edit gets the whole manifest (a single table, or a database
+    when ``db``)."""
+    db = db or table is not None
+    token = _new_token()
+    while True:
+        head = _db_manifest(path) if db else _bucket_manifest(path)
+        if table is None:
+            new_manifest = edit(head, path)
+        else:
+            _require_tables(path, head, [table])
+            new_manifest = {
+                **head,
+                "tables": {
+                    **head["tables"],
+                    table: edit(head["tables"][table], _table_root(path, table)),
+                },
+            }
+        new_manifest = {
+            **{k: v for k, v in new_manifest.items() if k != "committed_at"},
+            "token": token,
+            "seq": int(head.get("seq", 0)) + 1,
+        }
+        try:
+            _claim_commit(path, new_manifest["seq"], new_manifest, parent=head)
+            break
+        except FileExistsError:
+            continue
+    _publish_manifest(path, new_manifest)
+    return new_manifest
 
 
 def _mor_fraction(root: str, entry: dict, b: str) -> float | None:
@@ -6193,8 +5956,6 @@ def optimize_versioned(
     timestamp columns only (they cast to double for scaling; NULLs
     sort first as code 0); measured trade-offs in SCALE_NOTES
     §z-order."""
-    import uuid
-
     if cluster_by and zorder_by:
         raise ValueError("cluster_by and zorder_by are mutually exclusive")
     if files_per_bucket < 1:
@@ -6213,13 +5974,53 @@ def optimize_versioned(
         # unbounded write amplification, never idempotent
         raise ValueError(f"max_files must be >= 1, got {max_files}")
     manifest = _bucket_manifest(path, base_token)
+    token = _new_token()
+    res = _optimize_table_body(
+        spark, path, manifest, max_files, cluster_by, zorder_by,
+        files_per_bucket, min_dv_frac, f"gen-{token}",
+    )
+    if res is None:
+        return manifest, []
     if cluster_by or zorder_by:
-        candidates = sorted(int(b) for b in manifest["buckets"])
+        # cluster_kind is stamped on BOTH branches: extra_meta merges
+        # overlay-only, so a linear rewrite after a zorder one would
+        # otherwise keep the stale 'zorder' label
+        cluster_meta = {
+            "clustered_by": list(cluster_by or zorder_by),
+            "cluster_kind": "linear" if cluster_by else "zorder",
+        }
+    else:
+        cluster_meta = None
+    new_manifest = _commit_dml(
+        spark, path, manifest, {"": res}, token, cluster_meta
+    )
+    return new_manifest, sorted(int(b) for b in res.buckets)
+
+
+def _optimize_table_body(
+    spark: SparkSession,
+    root: str,
+    t: dict,
+    max_files: int,
+    cluster_by: list[str] | None,
+    zorder_by: list[str] | None,
+    files_per_bucket: int,
+    min_dv_frac: float,
+    gen: str,
+) -> _TableWrite | None:
+    """Per-table OPTIMIZE body shared by both layouts: pick the
+    candidate buckets (every live one for a clustering rewrite; else
+    those with more than ``max_files`` part files, or with a DV or
+    UPDATE overlay past the ``min_dv_frac`` floor) and rewrite them,
+    one file per bucket (or ``files_per_bucket`` range-split sorted
+    files), under ``<root>/<gen>``; ``None`` when nothing qualifies."""
+    if cluster_by or zorder_by:
+        candidates = sorted(int(b) for b in t["buckets"])
     else:
         candidates = []
-        dv = _dv_map(manifest)
-        for b, gen in manifest["buckets"].items():
-            bdir = os.path.join(path, gen, f"{MERGE_BUCKET_COL}={b}")
+        mor = set(_dv_map(t)) | set(_patch_map(t))
+        for b, g in t["buckets"].items():
+            bdir = os.path.join(root, g, f"{MERGE_BUCKET_COL}={b}")
             try:
                 n_files = sum(
                     1 for f in os.listdir(bdir)
@@ -6236,34 +6037,35 @@ def optimize_versioned(
             # conservatively.
             if n_files > max_files:
                 candidates.append(int(b))
-            elif b in dv or b in _patch_map(manifest):
+            elif b in mor:
                 if min_dv_frac <= 0.0:
                     candidates.append(int(b))
                 else:
-                    frac = _mor_fraction(path, manifest, b)
+                    frac = _mor_fraction(root, t, b)
                     if frac is None or frac >= min_dv_frac:
                         candidates.append(int(b))
+        candidates.sort()
     if not candidates:
-        return manifest, []
-    candidates.sort()
+        return None
     cur = [
-        os.path.join(path, manifest["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
+        os.path.join(root, t["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
         for b in candidates
     ]
-    pk, nb = manifest["pk"], manifest["n_buckets"]
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
+    pk, nb = t["pk"], t["n_buckets"]
     out = (
         # recorded-schema read: candidate buckets can span pre- and
         # post-ALTER generations — without the superset schema, a
         # column present only in newer files would be silently DROPPED
-        # from the compacted rewrite (physical data loss). Logical read so
-        # cluster_by/zorder_by take the user-facing (post-RENAME)
-        # names; the write translates back to physical. DV-filtered:
-        # compaction MATERIALIZES merge-on-read deletes (the commit
-        # sheds the rewritten buckets' DV entries).
+        # from the compacted rewrite (physical data loss). Logical read
+        # so cluster_by/zorder_by take the user-facing (post-RENAME)
+        # names; the write translates back to physical. Added columns
+        # are filled, so the rewrite materializes them like a MERGE
+        # rewrite does. DV-composed: compaction MATERIALIZES
+        # merge-on-read deletes and updates (the commit sheds the
+        # rewritten buckets' DV and overlay entries).
         _apply_dv(
-            spark, path, _read_logical(spark, manifest, *cur), manifest,
+            spark, root,
+            _fill_added_columns(_read_logical(spark, t, *cur), t), t,
             buckets={str(b) for b in candidates},
         )
         .withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
@@ -6305,33 +6107,8 @@ def optimize_versioned(
             )
         elif zorder_by:
             out = out.sortWithinPartitions(MERGE_BUCKET_COL, zkey)
-    written = _write_generation(out, path, gen, manifest)
-    ours = {str(b): gen for b in candidates}
-    if cluster_by:
-        # cluster_kind is stamped on BOTH branches: extra_meta merges
-        # overlay-only, so a linear rewrite after a zorder one would
-        # otherwise keep the stale 'zorder' label
-        cluster_meta = {
-            "clustered_by": list(cluster_by), "cluster_kind": "linear"
-        }
-    elif zorder_by:
-        cluster_meta = {
-            "clustered_by": list(zorder_by), "cluster_kind": "zorder"
-        }
-    else:
-        cluster_meta = None
-    new_manifest = _commit_bucket_update(
-        path, manifest, dict(manifest["buckets"]), ours, token,
-        extra_meta=cluster_meta,
-        our_stats=(
-            _harvest_bucket_stats(spark, path, gen, manifest, written)
-            if _wants_stats(manifest)
-            else None
-        ),
-        written=written,
-    )
-    _publish_manifest(path, new_manifest)
-    return new_manifest, candidates
+    written = _write_generation(out, root, gen, t)
+    return _TableWrite({str(b): gen for b in candidates}, written)
 
 
 _ZORDER_MAX_BITS = 16
@@ -6533,10 +6310,20 @@ def restore_versioned(path: str, token: str) -> dict:
     Raises if any generation the old snapshot references was already
     vacuumed (the restore would publish dangling buckets) — restores
     reach exactly as far back as the retention policy keeps."""
-    import uuid
+    return _restore(path, token, db=False)
 
+
+def restore_versioned_db(path: str, token: str) -> dict:
+    """The db twin of :func:`restore_versioned`: ONE metadata-only
+    commit rolls every table back to the same retained transaction —
+    the cross-table-consistent rollback (per-table restores taken
+    separately could tear a fact from its dims)."""
+    return _restore(path, token, db=True)
+
+
+def _restore(path: str, token: str, db: bool) -> dict:
     try:
-        target = _bucket_manifest(path, token)
+        target = (_db_manifest if db else _bucket_manifest)(path, token)
     except FileNotFoundError:
         raise ValueError(
             f"{path}: unknown snapshot {token!r} (never committed, or "
@@ -6545,10 +6332,13 @@ def restore_versioned(path: str, token: str) -> dict:
         ) from None
     missing = sorted(
         {
-            gen
-            for b, gen in target["buckets"].items()
+            os.path.join(name, gen)
+            for name, t in _layout_tables(target).items()
+            for b, gen in t["buckets"].items()
             if not os.path.isdir(
-                os.path.join(path, gen, f"{MERGE_BUCKET_COL}={b}")
+                os.path.join(
+                    _table_root(path, name), gen, f"{MERGE_BUCKET_COL}={b}"
+                )
             )
         }
     )
@@ -6557,78 +6347,14 @@ def restore_versioned(path: str, token: str) -> dict:
             f"{path}: cannot restore to {token!r}: generation(s) "
             f"{missing} were vacuumed; only retained snapshots restore"
         )
-    new_token = uuid.uuid4().hex[:12]
-    while True:
-        head = _bucket_manifest(path)
-        new_manifest = {
-            **{
-                k: v
-                for k, v in target.items()
-                if k not in ("committed_at", "streams")
-            },
-            "token": new_token,
-            "seq": int(head.get("seq", 0)) + 1,
-        }
+
+    def edit(head: dict, root: str) -> dict:
+        out = {k: v for k, v in target.items() if k != "streams"}
         if head.get("streams"):
-            new_manifest["streams"] = dict(head["streams"])
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=head)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+            out["streams"] = dict(head["streams"])
+        return out
 
-
-def restore_versioned_db(path: str, token: str) -> dict:
-    """The db twin of :func:`restore_versioned`: ONE metadata-only
-    commit rolls every table back to the same retained transaction —
-    the cross-table-consistent rollback (per-table restores taken
-    separately could tear a fact from its dims)."""
-    import uuid
-
-    try:
-        target = _db_manifest(path, token)
-    except FileNotFoundError:
-        raise ValueError(
-            f"{path}: unknown snapshot {token!r} (never committed, or "
-            "its history record was vacuumed — only retained snapshots "
-            "restore)"
-        ) from None
-    missing = sorted(
-        f"{name}/{gen}"
-        for name, t in target["tables"].items()
-        for b, gen in t["buckets"].items()
-        if not os.path.isdir(
-            os.path.join(path, name, gen, f"{MERGE_BUCKET_COL}={b}")
-        )
-    )
-    if missing:
-        raise ValueError(
-            f"{path}: cannot restore to {token!r}: generation(s) "
-            f"{missing} were vacuumed; only retained snapshots restore"
-        )
-    new_token = uuid.uuid4().hex[:12]
-    while True:
-        head = _db_manifest(path)
-        new_manifest = {
-            **{
-                k: v
-                for k, v in target.items()
-                if k not in ("committed_at", "streams")
-            },
-            "token": new_token,
-            "seq": int(head.get("seq", 0)) + 1,
-        }
-        if head.get("streams"):
-            new_manifest["streams"] = dict(head["streams"])
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=head)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+    return _commit_meta_edit(path, edit, db=db)
 
 
 def clone_versioned(src: str, dst: str, token: str | None = None) -> dict:
@@ -7036,35 +6762,11 @@ def read_versioned_db(
             raise ValueError("pass token OR as_of, not both")
         token = token_as_of(path, as_of)
     manifest = _db_manifest(path, token)
-    if table not in manifest["tables"]:
-        raise ValueError(
-            f"{path}: no table {table!r} in this snapshot "
-            f"(has: {sorted(manifest['tables'])})"
-        )
-    t = manifest["tables"][table]
-    keep = _skipping_keep(
-        spark, os.path.join(path, table), t, prune, pk_in, eq
+    _require_tables(path, manifest, [table])
+    return _read_entry(
+        spark, os.path.join(path, table), manifest["tables"][table],
+        prune, pk_in, eq,
     )
-    tpaths = _pruned_bucket_paths(
-        os.path.join(path, table), t, keep, prune, eq
-    )
-    if not tpaths:
-        # zero buckets is a legitimate EMPTY table (empty-frame init,
-        # a DELETE that removed every row, or skipping eliminated
-        # every bucket) — the shared typed-empty reader applies
-        df = _empty_versioned_frame(spark, os.path.join(path, table), t)
-    else:
-        # the table entry carries the same shape _read_physical /
-        # _fill_added_columns expect (its own added_columns map), so
-        # the single-table schema-evolution read path applies per table
-        df = _fill_added_columns(
-            _read_logical(spark, t, *tpaths).withColumn(
-                MERGE_BUCKET_COL, _bucket_expr(t["pk"], t["n_buckets"])
-            ),
-            t,
-        )
-        df = _apply_dv(spark, os.path.join(path, table), df, t, keep)
-    return _apply_skipping_residual(df, t, prune, pk_in, eq)
 
 
 def alter_versioned_db_add_columns(
@@ -7084,45 +6786,13 @@ def alter_versioned_db_add_columns(
     or a direct parquet footer) happens before anything commits.
     Other tables in the database are untouched; the ALTER is one
     transaction on the shared chain."""
-    import uuid
-
-    _parse_added_column_types(columns)
-    token = uuid.uuid4().hex[:12]
-    while True:
-        # the head IS the base — rebuild EVERYTHING per claim attempt,
-        # the collision set included (same CAS contract and same
-        # re-init race as the single-table ALTER)
-        manifest = _db_manifest(path)
-        if table not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {table!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
-        t = manifest["tables"][table]
-        physical = _alter_collision_columns(
-            os.path.join(path, table), t,
-            repair="write_versioned_db (at the database root)",
-        )
-        added = _merged_added_columns(
-            columns, t.get("added_columns", {}), physical,
-            dropped=set(t.get("dropped_columns") or []),
-        )
-        new_manifest = {
-            **{k: v for k, v in manifest.items() if k != "committed_at"},
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
-            "tables": {
-                **manifest["tables"],
-                table: {**t, "added_columns": added},
-            },
-        }
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+    return _commit_meta_edit(
+        path,
+        _add_columns_edit(
+            columns, repair="write_versioned_db (at the database root)"
+        ),
+        table,
+    )
 
 
 def alter_versioned_db_add_constraint(
@@ -7135,90 +6805,13 @@ def alter_versioned_db_add_constraint(
     this table), then a metadata-only transaction records it; every
     later data-writing transaction validates this table's written
     rows before committing."""
-    import uuid
-
-    if not isinstance(expr, str) or not expr.strip():
-        raise ValueError("constraint expression must be a non-empty SQL string")
-    token = uuid.uuid4().hex[:12]
-    validated: dict | None = None
-    while True:
-        manifest = _db_manifest(path)
-        if table not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {table!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
-        t = manifest["tables"][table]
-        cons = dict(t.get("constraints") or {})
-        if name in cons:
-            raise ValueError(
-                f"{path}/{table}: constraint {name!r} already exists "
-                f"({cons[name]})"
-            )
-        if validated != t["buckets"]:
-            _check_constraints_frame(
-                read_versioned_db(
-                    spark, path, table, token=manifest["token"]
-                ),
-                {name: expr},
-                os.path.join(path, table),
-            )
-            validated = dict(t["buckets"])
-        new_manifest = {
-            **{k: v for k, v in manifest.items() if k != "committed_at"},
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
-            "tables": {
-                **manifest["tables"],
-                table: {**t, "constraints": {**cons, name: expr}},
-            },
-        }
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+    return _add_constraint(spark, path, table, name, expr)
 
 
 def alter_versioned_db_drop_constraint(path: str, table: str, name: str) -> dict:
     """Drop a CHECK constraint from one table — metadata-only
     transaction; raises if the table or constraint does not exist."""
-    import uuid
-
-    token = uuid.uuid4().hex[:12]
-    while True:
-        manifest = _db_manifest(path)
-        if table not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {table!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
-        t = manifest["tables"][table]
-        cons = dict(t.get("constraints") or {})
-        if name not in cons:
-            raise ValueError(
-                f"{path}/{table}: no constraint {name!r} "
-                f"(has: {sorted(cons) or 'none'})"
-            )
-        del cons[name]
-        new_t = {k: v for k, v in t.items() if k != "constraints"}
-        if cons:
-            new_t["constraints"] = cons
-        new_manifest = {
-            **{k: v for k, v in manifest.items() if k != "committed_at"},
-            "token": token,
-            "seq": int(manifest.get("seq", 0)) + 1,
-            "tables": {**manifest["tables"], table: new_t},
-        }
-        try:
-            _claim_commit(path, new_manifest["seq"], new_manifest, parent=manifest)
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, new_manifest)
-    return new_manifest
+    return _commit_meta_edit(path, _drop_constraint_edit(name), table)
 
 
 def merge_into_versioned_db(
@@ -7246,255 +6839,28 @@ def merge_into_versioned_db(
     (committed atomically with the transaction; the streaming sink's
     progress-marker hook, monotonic per stream) mirror the
     single-table MERGE."""
-    import uuid
-
-    if not_matched not in ("ignore", "insert"):
-        raise ValueError(
-            f"not_matched must be 'ignore' or 'insert', got {not_matched!r}"
-        )
+    _check_not_matched(not_matched)
     manifest = _db_manifest(path, base_token)
     # validate the whole transaction BEFORE writing any generation —
     # a typo'd table name must not leave earlier tables' files behind
     # as orphans mid-loop
+    _require_tables(path, manifest, updates)
     for name in updates:
-        if name not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
         if name not in set_cols:
             raise ValueError(
                 f"{path}: updates for table {name!r} have no set_cols entry"
             )
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    ours: dict[str, dict[str, str]] = {}
-    written: dict = {}
-    for name, upd_df in updates.items():
-        t = manifest["tables"][name]
-        pk, nb = t["pk"], t["n_buckets"]
-        upd = upd_df.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
-        upd_buckets = _nonnull_update_buckets(upd, pk)
-        affected = (
-            upd_buckets
-            if not_matched == "insert"
-            else [b for b in upd_buckets if str(b) in t["buckets"]]
+    token = _new_token()
+    writes = {
+        name: _merge_table_body(
+            spark, os.path.join(path, name), manifest["tables"][name],
+            upd, set_cols[name], not_matched, f"gen-{token}",
         )
-        if not affected:
-            continue
-        cur = [
-            os.path.join(path, name, t["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
-            for b in affected
-            if str(b) in t["buckets"]
-        ]
-        table = _merge_target_frame(
-            spark, os.path.join(path, name), t, cur, upd, pk, set_cols[name]
-        )
-        merged = _apply_matched_updates(table, upd, pk, set_cols[name])
-        if not_matched == "insert":
-            merged = merged.unionByName(
-                _unmatched_inserts(table, upd, pk, set_cols[name])
-            )
-        written[name] = _write_generation(
-            merged, os.path.join(path, name), gen, t
-        )
-        # Same DV-emptied-bucket hole as the single-table merge: a
-        # bucket with zero logical rows after a not_matched='ignore'
-        # merge writes no partition dir — None-drop it from the
-        # manifest instead of committing a dangling pointer.
-        present = set(_present_buckets(os.path.join(path, name, gen)))
-        ours[name] = {str(b): (gen if b in present else None) for b in affected}
-    if not ours:
-        return _commit_db_meta_only(path, manifest, extra_meta)
-    for name in ours:
-        _enforce_constraints(
-            spark, os.path.join(path, name), manifest["tables"][name], gen,
-            written[name],
-        )
-    new_manifest = _commit_db_update(
-        path, manifest, ours, token, extra_meta,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
-        adds_rows=True,
-        written=written,
-    )
-    _publish_manifest(path, new_manifest)
-    return new_manifest
-
-
-def _commit_db_update(
-    path: str,
-    base_manifest: dict,
-    ours: dict[str, dict[str, str]],
-    token: str,
-    extra_meta: dict | None = None,
-    our_stats: dict[str, dict] | None = None,
-    adds_rows: bool = False,
-    ours_dv: dict[str, dict] | None = None,
-    ours_patch: dict[str, dict] | None = None,
-    written: dict[str, StructType] | None = None,
-) -> dict:
-    """The database-level CAS commit loop shared by transactional
-    MERGE, OPTIMIZE, and DELETE (both modes): claim the next seq; on
-    a lost race, rebase
-    when EVERY table's rewritten buckets are untouched since the
-    snapshot, and raise :class:`ConcurrentMergeError` when any table
-    conflicts or was dropped by an intervening full rewrite (a partial
-    rebase would tear the transaction). ``extra_meta`` deep-merges
-    into the committed manifest with the same monotonic-streams rule
-    as the single-table loop (:func:`_apply_extra_meta`) — checked
-    against the exact manifest being extended, on the base and on
-    every rebase. A ``None`` generation in ``ours`` DROPS that bucket
-    from its table's map (a delete emptied it), with the same
-    conflict-detection standing as a rewrite. ``written`` maps table
-    name to the physical schema of the generation written for it,
-    reconciled per table and per rebase exactly like the single-table
-    loop's."""
-    base_tables = {
-        n: dict(t["buckets"]) for n, t in base_manifest["tables"].items()
+        for name, upd in updates.items()
     }
-
-    def stamp_table(n: str, t: dict) -> dict:
-        live = _live_buckets(t["buckets"], ours.get(n, {}))
-        out = {**t, "buckets": live}
-        # DV + UPDATE-overlay shed/overlay: same contract as the
-        # single-table loop
-        dv = dict(t.get("dv") or {})
-        patch = dict(t.get("patch") or {})
-        for b in ours.get(n, {}):
-            dv.pop(b, None)
-            patch.pop(b, None)
-        dv.update((ours_dv or {}).get(n, {}))
-        patch.update((ours_patch or {}).get(n, {}))
-        patch = {b: g for b, g in patch.items() if g is not None}
-        if dv:
-            out["dv"] = dv
-        else:
-            out.pop("dv", None)
-        if patch:
-            out["patch"] = patch
-        else:
-            out.pop("patch", None)
-        t_stats = (our_stats or {}).get(n)
-        if "bucket_stats" in t or t_stats:
-            # same purge-then-overlay contract as the single-table
-            # loop, per table and per rebase: a rewritten bucket with
-            # no fresh harvest keeps NO stats (conservative read);
-            # overlay-gaining buckets purge too (base stats describe
-            # superseded values)
-            out["bucket_stats"] = _carry_bucket_stats(
-                t,
-                set(ours.get(n, {})) | set((ours_patch or {}).get(n, {})),
-                t_stats,
-                live,
-            )
-        return _adopt_written_schema(out, (written or {}).get(n))
-
-    def stamped(src: dict, seq: int) -> dict:
-        # the (head) snapshot defines the table set AND the top-level
-        # metadata (streams, future keys); our rewritten buckets
-        # overlay its tables — a table the head dropped and we did not
-        # touch simply stays dropped
-        out = {
-            **{k: v for k, v in src.items() if k != "committed_at"},
-            "token": token,
-            "seq": seq,
-            "tables": {
-                n: stamp_table(n, t) for n, t in src["tables"].items()
-            },
-        }
-        _apply_extra_meta(out, extra_meta)
-        return out
-
-    seq = int(base_manifest.get("seq", 0)) + 1
-    parent = base_manifest
-    new_manifest = stamped(base_manifest, seq)
-    while True:
-        try:
-            _claim_commit(path, seq, new_manifest, parent=parent)
-            return new_manifest
-        except FileExistsError:
-            head_seq, head = _commit_chain_head(path)
-            touched_tables = (
-                set(ours) | set(ours_dv or {}) | set(ours_patch or {})
-            )
-            for name in sorted(touched_tables):
-                buckets = (
-                    set(ours.get(name, {}))
-                    | set((ours_dv or {}).get(name, {}))
-                    | set((ours_patch or {}).get(name, {}))
-                )
-                ht = head["tables"].get(name)
-                if ht is None:
-                    # an intervening full rewrite dropped this table —
-                    # the transaction's premise is gone, same contract
-                    # as a bucket conflict
-                    raise ConcurrentMergeError(
-                        f"{path}: table {name!r} was removed by a full "
-                        f"rewrite (commits up to seq {head_seq}); "
-                        "re-run against the new head"
-                    )
-                if any(
-                    ht["buckets"].get(b) != base_tables[name].get(b)
-                    for b in buckets
-                ):
-                    raise ConcurrentMergeError(
-                        f"{path}: transaction touching "
-                        f"{sorted(touched_tables)} conflicts on table "
-                        f"{name!r} bucket(s) "
-                        f"{sorted(buckets)} (commits up to seq {head_seq}); "
-                        "re-run against the new head"
-                    )
-                base_t_dv = base_manifest["tables"][name].get("dv") or {}
-                if any(
-                    (ht.get("dv") or {}).get(b) != base_t_dv.get(b)
-                    for b in buckets
-                ):
-                    raise ConcurrentMergeError(
-                        f"{path}: deletion vector(s) on table {name!r} "
-                        f"bucket(s) {sorted(buckets)} changed (commits "
-                        f"up to seq {head_seq}); re-run against the "
-                        "new head"
-                    )
-                base_t_patch = (
-                    base_manifest["tables"][name].get("patch") or {}
-                )
-                if any(
-                    (ht.get("patch") or {}).get(b) != base_t_patch.get(b)
-                    for b in buckets
-                ):
-                    raise ConcurrentMergeError(
-                        f"{path}: UPDATE overlay(s) on table {name!r} "
-                        f"bucket(s) {sorted(buckets)} changed (commits "
-                        f"up to seq {head_seq}); re-run against the "
-                        "new head"
-                    )
-                if adds_rows and ht.get("constraints") != base_manifest[
-                    "tables"
-                ][name].get("constraints"):
-                    # same constraint-change conflict rule as the
-                    # single-table loop: this transaction's rows were
-                    # validated against the snapshot's constraints only
-                    raise ConcurrentMergeError(
-                        f"{path}: table {name!r}'s CHECK constraint set "
-                        f"changed (commits up to seq {head_seq}) after "
-                        "this transaction validated its rows; re-run "
-                        "against the new head"
-                    )
-                if ht.get("column_map") != base_manifest["tables"][
-                    name
-                ].get("column_map"):
-                    # same RENAME conflict rule as the single-table
-                    # loop: stats and expressions used the snapshot's
-                    # logical names
-                    raise ConcurrentMergeError(
-                        f"{path}: table {name!r} had a column renamed "
-                        f"(commits up to seq {head_seq}) after this "
-                        "transaction's snapshot; re-run against the "
-                        "new head"
-                    )
-            seq = head_seq + 1
-            parent = head
-            new_manifest = stamped(head, seq)
+    return _commit_dml(
+        spark, path, manifest, writes, token, extra_meta, adds_rows=True
+    )
 
 
 def optimize_versioned_db(
@@ -7520,8 +6886,6 @@ def optimize_versioned_db(
     db-level ``clustering`` map. Returns ``(manifest,
     ["table/bucket", ...])``; concurrency follows the transactional
     MERGE rules."""
-    import uuid
-
     if max_files < 1:
         raise ValueError(f"max_files must be >= 1, got {max_files}")
     cluster_by = cluster_by or {}
@@ -7533,124 +6897,62 @@ def optimize_versioned_db(
             f"table (both given for {sorted(both)})"
         )
     manifest = _db_manifest(path, base_token)
-    unknown = (
-        (set(cluster_by) | set(zorder_by))
-        | (set(files_per_bucket) if isinstance(files_per_bucket, dict) else set())
-    ) - set(manifest["tables"])
-    if unknown:
-        # a typo'd table key must fail loudly — silently degrading to
-        # plain compaction would let the caller believe the table was
-        # clustered (same rule as db_manifest_to_sql's prune/eq keys)
-        raise ValueError(
-            f"{path}: no table(s) {sorted(unknown)} in this snapshot "
-            f"(has: {sorted(manifest['tables'])})"
-        )
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    ours: dict[str, dict[str, str]] = {}
-    written: dict = {}
-    compacted: list[str] = []
-    clustering: dict[str, dict] = {}
-    for name, t in manifest["tables"].items():
-        t_cluster = cluster_by.get(name)
-        t_zorder = zorder_by.get(name)
-        fpb = (
+    # a typo'd table key must fail loudly — silently degrading to
+    # plain compaction would let the caller believe the table was
+    # clustered (same rule as db_manifest_to_sql's prune/eq keys)
+    _require_tables(
+        path, manifest,
+        sorted(
+            set(cluster_by) | set(zorder_by)
+            | (set(files_per_bucket) if isinstance(files_per_bucket, dict) else set())
+        ),
+    )
+    fpb = {
+        name: (
             files_per_bucket.get(name, 1)
             if isinstance(files_per_bucket, dict)
             else files_per_bucket
         )
-        if fpb < 1:
+        for name in manifest["tables"]
+    }
+    # every table validates BEFORE any generation is written
+    for name, k in fpb.items():
+        if k < 1:
             raise ValueError(f"{name}: files_per_bucket must be >= 1")
-        if fpb > 1 and not (t_cluster or t_zorder):
+        if k > 1 and not (cluster_by.get(name) or zorder_by.get(name)):
             raise ValueError(
                 f"{name}: files_per_bucket > 1 requires cluster_by or "
                 "zorder_by (splitting an unsorted bucket multiplies "
                 "files without making any file's stats selective)"
             )
-        if t_cluster or t_zorder:
-            candidates = sorted(int(b) for b in t["buckets"])
-        else:
-            candidates = []
-            t_dv = _dv_map(t)
-            for b, g in t["buckets"].items():
-                bdir = os.path.join(path, name, g, f"{MERGE_BUCKET_COL}={b}")
-                try:
-                    n_files = sum(
-                        1 for f in os.listdir(bdir)
-                        if f.endswith(".parquet") and not f.startswith(".")
-                    )
-                except FileNotFoundError:
-                    continue
-                # DV'd / UPDATE-overlaid buckets qualify under the
-                # same min_dv_frac materialization floor as the
-                # single-table OPTIMIZE
-                if n_files > max_files:
-                    candidates.append(int(b))
-                elif b in t_dv or b in _patch_map(t):
-                    if min_dv_frac <= 0.0:
-                        candidates.append(int(b))
-                    else:
-                        frac = _mor_fraction(
-                            os.path.join(path, name), t, b
-                        )
-                        if frac is None or frac >= min_dv_frac:
-                            candidates.append(int(b))
-            candidates.sort()
-        if not candidates:
-            continue
-        cur = [
-            os.path.join(path, name, t["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
-            for b in candidates
-        ]
-        pk, nb = t["pk"], t["n_buckets"]
-        # recorded-schema read: candidate buckets can span pre- and
-        # post-ALTER generations — without the superset schema, a
-        # column present only in newer files would be silently
-        # DROPPED from the compacted rewrite (physical data loss)
-        out = _apply_dv(
-            spark,
-            os.path.join(path, name),
-            _fill_added_columns(_read_logical(spark, t, *cur), t),
-            t,
-            buckets={str(b) for b in candidates},
-        ).withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
-        if t_zorder:
-            zkey = _zorder_expr(out, t_zorder)
-        if fpb > 1:
-            keys = (
-                [F.col(c) for c in t_cluster] if t_cluster else [zkey]
-            )
-            out = out.repartitionByRange(
-                len(candidates) * fpb, F.col(MERGE_BUCKET_COL), *keys
-            ).sortWithinPartitions(MERGE_BUCKET_COL, *keys)
-        else:
-            out = out.repartition(
-                len(candidates), F.col(MERGE_BUCKET_COL)
-            )
-            if t_cluster:
-                out = out.sortWithinPartitions(
-                    MERGE_BUCKET_COL, *[F.col(c) for c in t_cluster]
-                )
-            elif t_zorder:
-                out = out.sortWithinPartitions(MERGE_BUCKET_COL, zkey)
-        written[name] = _write_generation(
-            out, os.path.join(path, name), gen, t
+    token = _new_token()
+    writes = {
+        name: _optimize_table_body(
+            spark, os.path.join(path, name), t, max_files,
+            cluster_by.get(name), zorder_by.get(name), fpb[name],
+            min_dv_frac, f"gen-{token}",
         )
-        ours[name] = {str(b): gen for b in candidates}
-        compacted.extend(f"{name}/{b}" for b in candidates)
-        if t_cluster:
-            clustering[name] = {"by": list(t_cluster), "kind": "linear"}
-        elif t_zorder:
-            clustering[name] = {"by": list(t_zorder), "kind": "zorder"}
-    if not ours:
+        for name, t in manifest["tables"].items()
+    }
+    writes = {n: w for n, w in writes.items() if w is not None}
+    if not writes:
         return manifest, []
-    new_manifest = _commit_db_update(
-        path, manifest, ours, token,
-        extra_meta={"clustering": clustering} if clustering else None,
-        our_stats=_db_harvest_stats(spark, path, gen, manifest, ours, written),
-        written=written,
+    clustering = {
+        name: {"by": list(cluster_by[name]), "kind": "linear"}
+        if cluster_by.get(name)
+        else {"by": list(zorder_by[name]), "kind": "zorder"}
+        for name in writes
+        if cluster_by.get(name) or zorder_by.get(name)
+    }
+    new_manifest = _commit_dml(
+        spark, path, manifest, writes, token,
+        {"clustering": clustering} if clustering else None,
     )
-    _publish_manifest(path, new_manifest)
+    compacted = [
+        f"{name}/{b}"
+        for name, w in writes.items()
+        for b in sorted(w.buckets, key=int)
+    ]
     return new_manifest, compacted
 
 

@@ -202,6 +202,51 @@ def test_constraint_change_conflicts_row_adding_rebase(spark, tmp_path):
     assert 2 not in got and 1 in got
 
 
+@pytest.mark.parametrize("layout", ["table", "db"])
+def test_dv_update_does_not_rebase_past_add_constraint(
+    spark, tmp_path, layout
+):
+    """A merge-on-read UPDATE introduces rows (its overlay) exactly as
+    a rewrite does: validated against a snapshot without the new
+    constraint, it must not rebase past the ADD CONSTRAINT and
+    publish a violating value."""
+    from amaxa_spark.sources.catalog import (
+        ConcurrentMergeError,
+        _db_manifest,
+        update_versioned_db,
+    )
+
+    root = str(tmp_path / layout)
+    if layout == "table":
+        write_versioned_table(_frame(spark), root, "k", n_buckets=4)
+        t0 = _bucket_manifest(root)["token"]
+        alter_versioned_add_constraint(spark, root, "v_nonneg", "v >= 0")
+        head = _bucket_manifest(root)["token"]
+        with pytest.raises(ConcurrentMergeError, match="constraint set"):
+            update_versioned(
+                spark, root, {"v": "-1.0"}, where="k = 3", base_token=t0,
+                mode="dv",
+            )
+        assert _bucket_manifest(root)["token"] == head
+        got = read_versioned_table(spark, root)
+    else:
+        write_versioned_db(
+            spark, root, {"a": _frame(spark)}, {"a": "k"}, n_buckets=4
+        )
+        t0 = _db_manifest(root)["token"]
+        alter_versioned_db_add_constraint(spark, root, "a", "v_nonneg", "v >= 0")
+        head = _db_manifest(root)["token"]
+        with pytest.raises(ConcurrentMergeError, match="constraint set"):
+            update_versioned_db(
+                spark, root,
+                {"a": {"set": {"v": "-1.0"}, "where": "k = 3"}},
+                base_token=t0, mode="dv",
+            )
+        assert _db_manifest(root)["token"] == head
+        got = read_versioned_db(spark, root, "a")
+    assert {r.k: r.v for r in got.collect()}[3] == 3.0
+
+
 def test_db_add_constraint_validates_existing(spark, tmp_path):
     db = str(tmp_path / "db")
     write_versioned_db(

@@ -146,3 +146,41 @@ def test_lint_allows_scalar_broadcast(spark):
     s = a.agg(F.max("x").alias("mx"))
     df = a.crossJoin(F.broadcast(s)).where(F.col("x") == F.col("mx"))
     assert bnlj_violations(df) == []
+
+
+# the versioned commit core: the only functions allowed to claim a
+# chain seq. Every data commit goes through the CAS loop
+# (_commit_tables), every metadata commit through _commit_meta_edit;
+# the rest are the unconditional full-rewrite claims and the clone's
+# seq-0 claim. A new verb with its own claim loop fails here.
+_CLAIM_SITES = {
+    "_commit_tables",
+    "_commit_meta_edit",
+    "_claim_next_commit",
+    "write_versioned_table",
+    "write_versioned_db",
+    "clone_versioned",
+}
+
+
+def test_claims_only_in_commit_core():
+    import ast
+    import os
+
+    src = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "amaxa_spark", "sources", "catalog.py",
+    )
+    with open(src) as f:
+        tree = ast.parse(f.read())
+    callers = []
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "_claim_commit"
+            ):
+                callers.append(getattr(fn, "name", f"<line {fn.lineno}>"))
+    assert set(callers) <= _CLAIM_SITES, sorted(set(callers) - _CLAIM_SITES)
+    assert len(callers) <= len(_CLAIM_SITES), sorted(callers)
