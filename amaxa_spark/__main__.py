@@ -449,16 +449,16 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--merge-buckets",
         type=int,
-        help="load: write tables partitioned by a PK-hash bucket "
-        "(catalog.write_partitioned_table) so later dependent updates "
-        "can rewrite only affected buckets via merge_into_partitioned",
+        help="load: write each table in the manifest-versioned PK-hash "
+        "bucket layout (catalog.write_versioned_table) so later "
+        "merges (merge_into_versioned) rewrite only affected buckets, "
+        "commit atomically and time-travel per merge",
     )
     p.add_argument(
         "--versioned",
         action="store_true",
-        help="load with --merge-buckets: use the manifest-versioned "
-        "bucket layout (catalog.write_versioned_table) so later "
-        "merges commit atomically and time-travel per merge",
+        help="accepted for compatibility and ignored: --merge-buckets "
+        "always writes the versioned layout",
     )
     p.add_argument(
         "--merge-db",
@@ -701,7 +701,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.merge_db:
         # ONE transaction publishes every loaded table on the
         # versioned-db layout — cross-table atomicity (the multi-table
-        # twin of --merge-buckets --versioned)
+        # twin of --merge-buckets)
         from amaxa_spark.sources.catalog import write_versioned_db
 
         m = write_versioned_db(
@@ -734,30 +734,16 @@ def main(argv: list[str] | None = None) -> int:
     for table, (df, write_opts) in prepared.items():
         if not args.atomic and not args.merge_db:
             if args.merge_buckets:
-                if args.versioned:
-                    # manifest-versioned layout: later merges are
-                    # ATOMIC per commit (catalog.merge_into_versioned)
-                    from amaxa_spark.sources.catalog import (
-                        write_versioned_table,
-                    )
+                # manifest-versioned layout: later merges are ATOMIC
+                # per commit (catalog.merge_into_versioned)
+                from amaxa_spark.sources.catalog import write_versioned_table
 
-                    write_versioned_table(
-                        df,
-                        f"{args.out}/{table}.parquet",
-                        pk=registry[table].pk,
-                        n_buckets=args.merge_buckets,
-                    )
-                else:
-                    from amaxa_spark.sources.catalog import (
-                        write_partitioned_table,
-                    )
-
-                    write_partitioned_table(
-                        df,
-                        f"{args.out}/{table}.parquet",
-                        pk=registry[table].pk,
-                        n_buckets=args.merge_buckets,
-                    )
+                counts[table] = write_versioned_table(
+                    df,
+                    f"{args.out}/{table}.parquet",
+                    pk=registry[table].pk,
+                    n_buckets=args.merge_buckets,
+                )["rows"]
             else:
                 w = df.write.mode("overwrite")
                 for k, v in write_opts.items():

@@ -418,9 +418,9 @@ class LoadOperation:
         the table per DEPENDENT stage (each table passes through here
         exactly once). At 100 TB this is one shuffle-join + full
         rewrite of the sink; the partition-scoped variant (rewrite
-        only the PK-hash buckets containing updated rows) is
-        implemented as ``catalog.write_partitioned_table`` +
-        ``catalog.merge_into_partitioned`` — see SCALE_NOTES
+        only the PK-hash buckets containing updated rows) is the
+        versioned bucket layout, ``catalog.write_versioned_table`` +
+        ``catalog.merge_into_versioned`` — see SCALE_NOTES
         "Dependent-update MERGE at 100 TB" for when that, or a real
         MERGE table format (Delta/Iceberg), is the right sink."""
         table = step.table

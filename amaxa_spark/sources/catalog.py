@@ -534,55 +534,21 @@ def write_result_csv(df: DataFrame, path: str, append: bool = False) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Partition-scoped merge sink — the Delta-less MERGE that does NOT
-# rewrite the whole table (SCALE_NOTES "Dependent-update MERGE at
-# 100 TB"). The table is laid out partitioned by a PK-hash bucket;
-# merging updates rewrites ONLY the buckets that contain updated rows,
-# via dynamic partition overwrite.
+# The bucket layout: rows land in directories keyed by a PK hash
+# (`_bucket_expr`), so a merge rewrites only the buckets its keys hash
+# to. At 100 TB pick n_buckets so one bucket is the rewrite unit you
+# can afford (buckets rewrite independently and in parallel).
 
 MERGE_BUCKET_COL = "__mb"
-
-
-def write_partitioned_table(
-    df: DataFrame, path: str, pk: str, n_buckets: int = 64
-) -> None:
-    """Initial write of a merge-able table: rows land in
-    ``n_buckets`` directories keyed by a deterministic PK hash, so a
-    later merge can address exactly the buckets its updates touch.
-    At 100 TB pick n_buckets so one bucket ≈ the rewrite unit you can
-    afford (buckets rewrite independently and in parallel)."""
-    out = df.withColumn(
-        MERGE_BUCKET_COL,
-        F.pmod(F.xxhash64(F.col(pk).cast("string")), F.lit(n_buckets)).cast("int"),
-    )
-    out.write.mode("overwrite").partitionBy(MERGE_BUCKET_COL).parquet(path)
 
 
 def _apply_matched_updates(
     table: DataFrame, updates: DataFrame, pk: str, set_cols: list[str]
 ) -> DataFrame:
-    """Shared WHEN MATCHED THEN UPDATE body for both bucket layouts:
-    left join the updates on pk, coalesce each set column. Raises if
-    ``updates`` carries more than one row per pk — a fan-out there
-    would silently DUPLICATE target rows (Delta's MERGE errors on
-    multiple matches for the same reason). The check is one bounded
-    aggregation over the (small) update frame."""
-    dup = (
-        # NULL keys are exempt: they match nothing (SQL MERGE's ON
-        # equality never matches NULL), so several NULL-pk rows are
-        # harmless no-ops, not a fan-out hazard
-        updates.where(F.col(pk).isNotNull())
-        .groupBy(pk)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"updates contain multiple rows for pk {dup[0][0]!r}; "
-            "MERGE requires at most one update row per key"
-        )
+    """The WHEN MATCHED THEN UPDATE body of every MERGE: left join
+    the updates on pk, coalesce each set column. The updates must
+    carry at most one row per pk (:func:`_nonnull_update_buckets`
+    checks it)."""
     upd_renamed = updates.select(
         F.col(pk).alias("__u_pk"),
         *[F.col(c).alias(f"__u_{c}") for c in set_cols],
@@ -597,14 +563,34 @@ def _nonnull_update_buckets(upd: DataFrame, pk: str) -> list:
     """Distinct bucket ids of an update frame, NULL keys excluded:
     NULL-pk rows never merge, and xxhash64 is null-SAFE (a NULL key
     still hashes to a concrete bucket) — including their bucket would
-    make the manifest claim a path the write never produces."""
-    return sorted(
-        b
-        for (b,) in upd.where(F.col(pk).isNotNull())
-        .select(MERGE_BUCKET_COL)
-        .distinct()
+    make the manifest claim a path the write never produces.
+
+    Raises if the frame carries more than one row per pk — a fan-out
+    in the MERGE join would silently DUPLICATE target rows (Delta's
+    MERGE errors on multiple matches for the same reason). Both come
+    from ONE aggregation grouped by bucket: a key's rows share its
+    bucket, so a bucket counting more rows than distinct keys holds a
+    duplicate, and the plan shuffles once, on the bucket (so its
+    parallelism is the bucket count, as the rewrite's is)."""
+    nonnull = upd.where(F.col(pk).isNotNull())
+    per_bucket = (
+        nonnull.groupBy(MERGE_BUCKET_COL)
+        .agg(F.count(F.lit(1)).alias("__n"), F.countDistinct(pk).alias("__k"))
         .collect()
-        if b is not None
+    )
+    if any(r["__n"] > r["__k"] for r in per_bucket):
+        dup = (
+            nonnull.groupBy(pk).count().where(F.col("count") > 1)
+            .limit(1).collect()
+        )
+        raise ValueError(
+            f"updates contain multiple rows for pk {dup[0][0]!r}; "
+            "MERGE requires at most one update row per key"
+        )
+    return sorted(
+        r[MERGE_BUCKET_COL]
+        for r in per_bucket
+        if r[MERGE_BUCKET_COL] is not None
     )
 
 
@@ -656,19 +642,10 @@ def _merge_target_frame(
         )
     first = next(iter(sorted(meta["buckets"].items())), None)
     if first is None:
-        schema_json = meta.get("schema_json")
-        if schema_json is not None:
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            # an init frame read back from a versioned table recorded
-            # the bucket column too; the rewrite re-derives it
-            return _fill_added_columns(
-                spark.createDataFrame(
-                    [], StructType.fromJson(_json.loads(schema_json))
-                ).drop(MERGE_BUCKET_COL),
-                meta,
+        if meta.get("schema_json") is not None:
+            # the rewrite re-derives the bucket column
+            return _empty_versioned_frame(spark, root, meta).drop(
+                MERGE_BUCKET_COL
             )
         return _fill_added_columns(upd.select(pk, *set_cols).limit(0), meta)
     return _fill_added_columns(
@@ -711,59 +688,20 @@ def _unmatched_inserts(
     )
 
 
-def merge_into_partitioned(
-    spark,
-    path: str,
-    updates: DataFrame,
-    pk: str,
-    set_cols: list[str],
-    n_buckets: int = 64,
-) -> list[int]:
-    """MERGE ... WHEN MATCHED THEN UPDATE against a
-    :func:`write_partitioned_table` layout, rewriting only affected
-    buckets. Returns the bucket ids that were rewritten.
-
-    Shape: (1) bucket each update row by the same PK hash; (2) the
-    distinct bucket list is tiny (≤ n_buckets) — collect it; (3) read
-    ONLY those partitions (partition pruning keeps untouched buckets
-    off the scan entirely); (4) left join-and-replace inside them;
-    (5) write with ``partitionOverwriteMode=dynamic`` so untouched
-    bucket directories are left in place byte-for-byte.
-    """
-    upd = updates.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets))
-    affected = sorted(
-        r[0] for r in upd.select(MERGE_BUCKET_COL).distinct().collect()
-    )
-    if not affected:
-        return []
-    table = spark.read.parquet(path).where(
-        F.col(MERGE_BUCKET_COL).isin(affected)
-    )
-    merged = _apply_matched_updates(table, upd, pk, set_cols)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(MERGE_BUCKET_COL).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return affected
-
-
 # ---------------------------------------------------------------------------
 # Manifest-versioned bucket layout — ATOMIC partition-scoped MERGE with
-# no Delta/Iceberg jar. `merge_into_partitioned` keeps rewrites
-# bucket-local but mutates bucket directories in place (dynamic
-# partition overwrite), so a reader racing a merge — or a merge dying
-# mid-write — can observe a half-rewritten bucket. This layout closes
-# that hole with the SAME manifest protocol the extract/load commits
-# use: every merge writes ONLY the affected buckets' files under a
-# fresh generation directory and then publishes a manifest mapping
-# bucket -> generation; the manifest `os.replace` is the single atomic
-# commit. Readers resolve through the manifest, so they see the old
-# snapshot until the instant the new one is complete; a crash leaves an
-# orphan generation directory that no manifest references (invisible;
+# no Delta/Iceberg jar, and the only bucket layout. Rewriting bucket
+# directories in place would let a reader racing a merge, or a merge
+# dying mid-write, observe a half-rewritten bucket. So every merge
+# writes ONLY the affected buckets' files under a fresh generation
+# directory and then commits a manifest mapping bucket -> generation.
+# Readers resolve through the manifest, so they see the old snapshot
+# until the instant the new one is complete; a crash leaves an orphan
+# generation directory that no manifest references (invisible;
 # `vacuum_versioned` reclaims it). Time travel works per merge, not
-# just per full rewrite.
+# just per full rewrite. A single table is the one-table case of the
+# multi-table layout below (`_layout_tables`): every verb has one
+# body that works on `{table: entry}`.
 #
 # CONCURRENT WRITERS (the part a real Delta's commit log brings) are
 # arbitrated by a CAS commit chain: the authoritative table state is
@@ -1145,9 +1083,10 @@ def _chain_seqs(cdir: str) -> list[int]:
 
 def _claim_next_commit(path: str, manifest: dict) -> tuple[int, int]:
     """Claim the NEXT chain seq unconditionally, retrying lost races:
-    the read-head / set-seq / claim / retry loop shared by full-rewrite
-    commits (:func:`write_versioned_table`) and the stress harness
-    (tools/cas_stress.py). Mutates ``manifest["seq"]`` and returns
+    the read-head / set-seq / claim / retry loop of a full-rewrite
+    commit with a fixed payload (the init body, :func:`_write_tables`,
+    rebuilds its payload from each head instead). Mutates
+    ``manifest["seq"]`` and returns
     ``(seq, retries)``. Data commits use the commit core's CAS loop
     (:func:`_commit_tables`) instead, because their retries must first
     check the intervening commits for conflicts — a semantic this
@@ -1273,133 +1212,157 @@ def write_versioned_table(
     the complement of range stats: min/max discriminates only for
     bucket-correlated values, a Bloom answers point predicates on any
     distribution. Maintained and inherited exactly like
-    ``stats_cols`` (same commit loop, same purge-then-overlay)."""
-    import uuid
+    ``stats_cols`` (same commit loop, same purge-then-overlay).
 
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    out = df.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets))
-    out.write.mode("errorifexists").partitionBy(MERGE_BUCKET_COL).parquet(
-        os.path.join(path, gen)
+    ``_expect_head_seq`` refuses the commit unless the head is still
+    that seq (:func:`_write_tables`)."""
+
+    def one(v):
+        return None if v is None else {"": v}
+
+    return _write_tables(
+        df.sparkSession, path, {"": df}, {"": pk}, n_buckets, None,
+        one(stats_cols), one(bloom_cols), one(constraints), one(file_stats),
+        _expect_head_seq,
     )
-    if (
-        stats_cols is None
-        or bloom_cols is None
-        or constraints is None
-        or file_stats is None
-    ):
-        head0 = _commit_chain_head(path)
-        if head0 is not None:
-            if stats_cols is None:
-                stats_cols = head0[1].get("stats_cols")
-            if bloom_cols is None:
-                bloom_cols = head0[1].get("bloom_cols")
-            if constraints is None:
-                # a re-init INHERITS the table's CHECK constraints
-                # (enforcement silently stopping on re-init would be a
-                # correctness regression) unless the caller passes its
-                # own ({} disables explicitly)
-                constraints = head0[1].get("constraints")
-            if file_stats is None:
-                file_stats = head0[1].get("file_stats")
-    if file_stats and not stats_cols:
-        raise ValueError(
-            "file_stats=True requires stats_cols (the fine tier "
-            "describes the same columns as the bucket tier)"
-        )
-    if constraints:
-        # the new baseline must satisfy the constraints it will carry
-        _check_constraints_frame(
-            df.sparkSession.read.schema(out.drop(MERGE_BUCKET_COL).schema)
-            .parquet(os.path.join(path, gen)),
-            constraints,
-            path,
-        )
-    manifest = {
-        "token": token,
-        "kind": "versioned-buckets",
-        "pk": pk,
-        "n_buckets": n_buckets,
-        "seq": 0,
-        # the init frame's logical schema: the collision authority for
-        # ALTERs on ZERO-bucket tables, where no parquet footer exists
-        # to consult (an empty-frame init still has a schema); the
-        # full typed form types empty diffs and other no-data reads
-        "columns": list(df.columns),
-        "schema_json": df.schema.json(),
-        "buckets": {
-            str(b): gen for b in _present_buckets(os.path.join(path, gen))
-        },
-    }
-    if stats_cols:
-        manifest["stats_cols"] = list(stats_cols)
-    if bloom_cols:
-        manifest["bloom_cols"] = list(bloom_cols)
-    if constraints:
-        manifest["constraints"] = dict(constraints)
-    if file_stats:
-        manifest["file_stats"] = True
-    if _wants_stats(manifest):
-        manifest["bucket_stats"] = _harvest_bucket_stats(
-            df.sparkSession, path, gen, manifest
-        )
-    # re-initializing an existing table is a FULL-REWRITE commit on the
-    # same chain (every bucket points at the new generation; old
-    # snapshots stay time-travelable until vacuumed) — the pre-chain
-    # last-write-wins behavior, now with a linear history. A full
-    # rewrite supersedes whatever concurrent merges committed, so
-    # claiming the next seq unconditionally is the right semantics —
-    # but the payload is REBUILT from the head on every attempt:
-    # stream progress markers are PRESERVED across the rewrite (the
-    # streams' already-applied batches must stay skippable, or a
-    # restarting query would replay stale micro-batches onto the new
-    # baseline), and re-reading them per attempt means a marker
-    # committed while we raced is never regressed.
+
+
+def _write_tables(
+    spark: SparkSession,
+    path: str,
+    frames: dict[str, DataFrame],
+    pks: dict[str, str],
+    n_buckets: int | dict[str, int],
+    write_options: dict[str, dict] | None,
+    stats_cols: dict[str, list[str]] | None,
+    bloom_cols: dict[str, list[str]] | None,
+    constraints: dict[str, dict[str, str]] | None,
+    file_stats: dict[str, bool] | None,
+    expect_head_seq: int | None = None,
+) -> dict:
+    """THE init (full-rewrite) commit of both layouts: every table of
+    ``frames`` (``{"": df}`` for a single table) lands under one fresh
+    generation, then ONE chain commit publishes them all.
+
+    An option map left ``None`` is inherited, table by table, from
+    the head's entry of the same table (a re-init silently dropping
+    pruning or CHECK enforcement would be a regression no test
+    catches); a given map is taken as it is, an absent table key
+    opting out. Every table's options are checked before any file is
+    written. ``rows`` is observed on the write
+    itself (no extra job) and is true for this snapshot only: the
+    first data commit that touches the table drops it
+    (:func:`_stamp_table`).
+
+    Re-initializing an existing table is a FULL-REWRITE commit on the
+    same chain (old snapshots stay time-travelable until vacuumed): it
+    supersedes whatever concurrent merges committed, so it claims the
+    next seq unconditionally — but the carried-over state is REBUILT
+    from the head on every attempt. Stream progress markers survive
+    (live exactly-once streams must keep skipping applied batches),
+    and so do ALTER-added columns the new baseline does not carry
+    physically (stream set_cols may target them); one the baseline
+    carries leaves the metadata, or the new data's genuine NULLs would
+    read as the old default. Delete the directory for a truly clean
+    slate.
+
+    ``expect_head_seq`` is for SNAPSHOT-DERIVED re-inits
+    (:func:`rebucket_versioned`): their baseline was computed from the
+    table's own rows at that seq, so a commit landing after it would
+    be silently superseded — losing data, unlike a caller-supplied
+    rewrite where last-write-wins IS the semantics. Such a race raises
+    :class:`ConcurrentMergeError`; the written generation is an
+    invisible orphan that vacuum reclaims."""
+    from pyspark.sql import Observation
+
+    db = set(frames) != {""}
+    head0 = _commit_chain_head(path)
+    prev0 = _layout_tables(head0[1]) if head0 is not None else {}
+
+    def opt(given, name, key, kind):
+        if given is None:
+            return kind((prev0.get(name) or {}).get(key) or kind())
+        return kind(given.get(name) or kind())
+
+    specs: dict[str, dict] = {}
+    for name in frames:
+        specs[name] = spec = {
+            "stats_cols": opt(stats_cols, name, "stats_cols", list),
+            "bloom_cols": opt(bloom_cols, name, "bloom_cols", list),
+            "constraints": opt(constraints, name, "constraints", dict),
+            "file_stats": opt(file_stats, name, "file_stats", bool),
+        }
+        if spec["file_stats"] and not spec["stats_cols"]:
+            raise ValueError(
+                f"{_table_root(path, name)}: file_stats requires "
+                "stats_cols (the fine tier describes the same columns as "
+                "the bucket tier)"
+            )
+    token = _new_token()
+    gen = f"gen-{token}"
+    entries: dict[str, dict] = {}
+    for name, df in frames.items():
+        root = _table_root(path, name)
+        pk = pks[name]
+        nb = n_buckets[name] if isinstance(n_buckets, dict) else n_buckets
+        obs = Observation()
+        out = df.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
+        w = out.observe(obs, F.count(F.lit(1)).alias("rows")).write
+        for k, v in ((write_options or {}).get(name) or {}).items():
+            w = w.option(k, v)
+        tdir = os.path.join(root, gen)
+        w.mode("errorifexists").partitionBy(MERGE_BUCKET_COL).parquet(tdir)
+        entry = {
+            "pk": pk,
+            "n_buckets": nb,
+            # the init frame's logical schema: the collision authority
+            # for ALTERs on ZERO-bucket tables, where no parquet footer
+            # exists to consult (an empty-frame init still has a
+            # schema); the full typed form types empty diffs and other
+            # no-data reads
+            "columns": list(df.columns),
+            "schema_json": df.schema.json(),
+            "buckets": {str(b): gen for b in _present_buckets(tdir)},
+            "rows": obs.get["rows"],
+        }
+        entry.update((k, v) for k, v in specs[name].items() if v)
+        if entry.get("constraints"):
+            # the new baseline must satisfy the constraints it carries
+            _check_constraints_frame(
+                spark.read.schema(out.drop(MERGE_BUCKET_COL).schema)
+                .parquet(tdir),
+                entry["constraints"],
+                root,
+            )
+        if _wants_stats(entry):
+            entry["bucket_stats"] = _harvest_bucket_stats(
+                spark, root, gen, entry
+            )
+        entries[name] = entry
     while True:
         head = _commit_chain_head(path)
-        if _expect_head_seq is not None and (
-            head is None or head[0] != _expect_head_seq
+        if expect_head_seq is not None and (
+            head is None or head[0] != expect_head_seq
         ):
-            # SNAPSHOT-DERIVED re-init (rebucket_versioned): the new
-            # baseline was computed FROM the table's own rows, so a
-            # commit that landed after that snapshot would be silently
-            # superseded — its rows absent from the rewrite — if the
-            # claim proceeded. Unlike a caller-supplied full rewrite
-            # (where last-write-wins IS the semantics), losing the
-            # race here loses data: refuse, like every other
-            # stale-input rewrite verb. The written generation is an
-            # invisible orphan that vacuum_versioned reclaims.
             raise ConcurrentMergeError(
                 f"{path}: head advanced to seq "
                 f"{'<none>' if head is None else head[0]} after this "
-                f"snapshot-derived rewrite read seq {_expect_head_seq}; "
+                f"snapshot-derived rewrite read seq {expect_head_seq}; "
                 "re-run against the new head"
             )
-        manifest["seq"] = 0 if head is None else head[0] + 1
-        # rebuild carried-over state from THIS head (a retry may see a
-        # different head than the last attempt did)
-        manifest.pop("streams", None)
-        manifest.pop("added_columns", None)
-        if head is not None:
-            # stream markers AND schema-evolution metadata both
-            # survive a re-init: live exactly-once streams must keep
-            # skipping applied batches, and their set_cols may target
-            # ALTER-added columns the new baseline fills by default
-            # (delete the table directory for a truly clean slate).
-            # EXCEPT: an added column the new baseline carries
-            # PHYSICALLY is dropped from the metadata — the rewrite
-            # has materialized it, and keeping the entry would
-            # coalesce the new data's genuine NULLs to the old default
-            # on every read.
-            if head[1].get("streams"):
-                manifest["streams"] = dict(head[1]["streams"])
-            carried = {
-                c: spec
-                for c, spec in head[1].get("added_columns", {}).items()
-                if c not in df.columns
-            }
-            if carried:
-                manifest["added_columns"] = carried
+        prev = _layout_tables(head[1]) if head is not None else {}
+        tables = {}
+        for name, entry in entries.items():
+            added = (prev.get(name) or {}).get("added_columns") or {}
+            carried = {c: v for c, v in added.items() if c not in entry["columns"]}
+            tables[name] = {**entry, "added_columns": carried} if carried else entry
+        manifest = (
+            {"kind": "versioned-db", "tables": tables} if db
+            else {**tables[""], "kind": "versioned-buckets"}
+        )
+        manifest.update(token=token, seq=0 if head is None else head[0] + 1)
+        if head is not None and head[1].get("streams"):
+            manifest["streams"] = dict(head[1]["streams"])
         try:
             _claim_commit(
                 path, manifest["seq"], manifest,
@@ -1413,23 +1376,33 @@ def write_versioned_table(
 
 
 def _bucket_manifest(path: str, token: str | None = None) -> dict:
+    return _layout_manifest(path, token, db=False)
+
+
+def _layout_manifest(path: str, token: str | None, db: bool) -> dict:
+    """The committed manifest of a single table (``db=False``) or a
+    database: the chain head, or the snapshot ``token`` names."""
     import json
 
     if token is None:
         # the CAS commit chain is authoritative (the _MANIFEST.json
-        # mirror can lag under concurrent writers); fall back to the
-        # mirror only for chainless layouts
+        # mirror can lag under concurrent writers); a single table
+        # falls back to the mirror only for chainless layouts
         head = _commit_chain_head(path)
         if head is not None:
             manifest = head[1]
+        elif db:
+            raise FileNotFoundError(f"{path}: no versioned database commit")
         else:
             with open(os.path.join(path, MANIFEST_NAME)) as f:
                 manifest = json.load(f)
     else:
         with open(os.path.join(path, HISTORY_DIR, f"{token}.json")) as f:
             manifest = json.load(f)
-    if manifest.get("kind") != "versioned-buckets":
-        raise ValueError(f"{path}: not a versioned bucket table")
+    if manifest.get("kind") != ("versioned-db" if db else "versioned-buckets"):
+        raise ValueError(
+            f"{path}: not a versioned {'database' if db else 'bucket table'}"
+        )
     return manifest
 
 
@@ -1698,14 +1671,26 @@ def read_versioned_table(
       only; blooms index non-null values). False positives read extra
       buckets, never rows: the residual equality still applies.
     """
+    return _read_table(spark, path, "", False, token, as_of, prune, pk_in, eq)
+
+
+def _read_table(
+    spark: SparkSession, path: str, table: str, db: bool, token, as_of,
+    prune, pk_in, eq,
+) -> DataFrame:
+    """The read of both layouts: ``table`` (``""`` for a single
+    table) of the head, the ``token`` snapshot, or the snapshot live
+    ``as_of`` a time (TIMESTAMP AS OF, :func:`token_as_of`)."""
     if as_of is not None:
-        # TIMESTAMP AS OF: resolve to the snapshot live at that time
-        # (token_as_of), then read exactly like a token read
         if token is not None:
             raise ValueError("pass token OR as_of, not both")
         token = token_as_of(path, as_of)
-    manifest = _bucket_manifest(path, token)
-    return _read_entry(spark, path, manifest, prune, pk_in, eq)
+    manifest = _layout_manifest(path, token, db)
+    _require_tables(path, manifest, [table])
+    return _read_entry(
+        spark, _table_root(path, table), _layout_tables(manifest)[table],
+        prune, pk_in, eq,
+    )
 
 
 def _read_entry(
@@ -1728,10 +1713,8 @@ def _read_entry(
         # every bucket) — the shared typed-empty reader applies
         df = _empty_versioned_frame(spark, root, t)
     else:
-        # Reading the leaf `<bucket>=N` dirs directly loses the partition
-        # column — re-derive it so the versioned and non-versioned merge
-        # layouts expose the SAME schema (it is a pure pk-hash expression,
-        # so re-deriving is exact, no directory-name parsing needed)
+        # reading the leaf `<bucket>=N` dirs loses the bucket column;
+        # it is a pure pk-hash expression, so re-deriving it is exact
         df = _read_logical(spark, t, *paths).withColumn(
             MERGE_BUCKET_COL, _bucket_expr(t["pk"], t["n_buckets"])
         )
@@ -3644,25 +3627,16 @@ def _diff_snapshot_tables(spark: SparkSession, root: str, tf: dict, tt: dict):
             "— rows cannot be matched across them"
         )
 
-    def pk_type(meta):
-        sj = meta.get("schema_json")
-        if sj is None:
-            return None
-        import json as _json
-
-        for fld in _json.loads(sj)["fields"]:
-            if fld["name"] == meta["pk"]:
-                return fld["type"]
-        return None
-
     # same-name pk with a re-init-changed TYPE joins on garbage (or
     # throws a cast error deep in ANSI mode) — catch it up front while
     # both recorded schemas are at hand; pre-format manifests skip
-    tpf, tpt = pk_type(tf), pk_type(tt)
+    tpf = _recorded_col_type(tf, tf["pk"])
+    tpt = _recorded_col_type(tt, tt["pk"])
     if tpf is not None and tpt is not None and tpf != tpt:
         raise ValueError(
             f"{root}: primary key {tt['pk']!r} changed type across the "
-            f"snapshots ({tpf!r} vs {tpt!r}; a re-init changed it) "
+            f"snapshots ({tpf.simpleString()!r} vs "
+            f"{tpt.simpleString()!r}; a re-init changed it) "
             "— rows cannot be matched across them"
         )
     pk = tt["pk"]
@@ -3722,21 +3696,8 @@ def _diff_snapshot_tables(spark: SparkSession, root: str, tf: dict, tt: dict):
         # (tf is never newer: the callers enforce seq order).
         any_side = side(tt, sorted(tt["buckets"])[:1])
         if any_side is None:
-            schema_json = tt.get("schema_json")
-            if schema_json is None:
-                raise FileNotFoundError(
-                    f"{root}: both snapshots are empty and predate the "
-                    "recorded-schema manifest format"
-                )
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            any_side = _fill_added_columns(
-                spark.createDataFrame(
-                    [], StructType.fromJson(_json.loads(schema_json))
-                ),
-                tt,
+            any_side = _empty_versioned_frame(spark, root, tt).drop(
+                MERGE_BUCKET_COL
             )
         return (
             any_side.limit(0)
@@ -3818,14 +3779,10 @@ def diff_versioned(
     side — at 100 TB a CDC pass over a merge that touched 3 of 4096
     buckets reads 3 buckets twice, nothing more. See
     :func:`_diff_snapshot_tables` for the output contract."""
-    tf = _bucket_manifest(path, from_token)
-    tt = _bucket_manifest(path, to_token)
-    if int(tf.get("seq", 0)) > int(tt.get("seq", 0)):
-        raise ValueError(
-            f"{path}: from-snapshot seq {tf.get('seq')} is newer than "
-            f"to-snapshot seq {tt.get('seq')} — swap the tokens"
-        )
-    return _diff_snapshot_tables(spark, path, tf, tt)
+    return _diff_table(
+        spark, path, "",
+        _bucket_manifest(path, from_token), _bucket_manifest(path, to_token),
+    )
 
 
 def diff_versioned_db(
@@ -3839,23 +3796,38 @@ def diff_versioned_db(
     between two TRANSACTIONS — because both sides come from db-level
     manifests, diffing several tables with the same token pair yields
     a cross-table-consistent change set."""
-    mf = _db_manifest(path, from_token)
-    mt = _db_manifest(path, to_token)
+    return _diff_table(
+        spark, path, table,
+        _db_manifest(path, from_token), _db_manifest(path, to_token),
+    )
+
+
+def _diff_table(
+    spark: SparkSession, path: str, table: str, mf: dict, mt: dict
+) -> DataFrame:
+    """The diff of both layouts: ``table``'s changes from snapshot
+    ``mf`` to snapshot ``mt`` (``""`` for a single table)."""
     if int(mf.get("seq", 0)) > int(mt.get("seq", 0)):
         raise ValueError(
-            f"{path}: from-transaction seq {mf.get('seq')} is newer than "
-            f"to-transaction seq {mt.get('seq')} — swap the tokens"
+            f"{path}: from-snapshot seq {mf.get('seq')} is newer than "
+            f"to-snapshot seq {mt.get('seq')} — swap the tokens"
         )
-    for name, m in (("from", mf), ("to", mt)):
-        if table not in m["tables"]:
-            raise ValueError(
-                f"{path}: no table {table!r} in the {name} snapshot "
-                f"(has: {sorted(m['tables'])})"
-            )
+    _require_tables(path, mf, [table])
+    _require_tables(path, mt, [table])
     return _diff_snapshot_tables(
-        spark, os.path.join(path, table), mf["tables"][table],
-        mt["tables"][table],
+        spark, _table_root(path, table), _layout_tables(mf)[table],
+        _layout_tables(mt)[table],
     )
+
+
+def _leaf_files(leaf: str) -> list[str]:
+    """The data files of one bucket directory (or any parquet
+    directory), sorted: Spark's hidden and metadata files excluded."""
+    return [
+        os.path.join(leaf, f)
+        for f in sorted(os.listdir(leaf))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
 
 
 def _export_bucket_files(
@@ -3869,37 +3841,34 @@ def _export_bucket_files(
     exported: list[str] = []
     for b, gen in sorted(buckets.items(), key=lambda kv: int(kv[0])):
         bdir = os.path.join(src_root, gen, f"{MERGE_BUCKET_COL}={b}")
-        for f in sorted(os.listdir(bdir)):
-            if not f.endswith(".parquet") or f.startswith((".", "_")):
-                continue
-            name = f"b{int(b):05d}-{f}"
-            os.link(os.path.join(bdir, f), os.path.join(out, name))
+        for f in _leaf_files(bdir):
+            name = f"b{int(b):05d}-{os.path.basename(f)}"
+            os.link(f, os.path.join(out, name))
             exported.append(name)
     return exported
 
 
+def _needs_materialize(meta: dict) -> bool:
+    """A table whose raw files are NOT the logical table: metadata-only
+    schema evolution (ADD, DROP, RENAME's column mapping) or
+    merge-on-read deletes. A zero-bucket table has no rows to
+    materialize."""
+    return bool(meta["buckets"]) and any(
+        meta.get(k)
+        for k in ("added_columns", "dropped_columns", "column_map", "dv")
+    )
+
+
 def _export_table_entry(src_root: str, meta: dict, out_dir: str, materialize) -> dict:
-    """One table's export body, shared by both layouts: zero-bucket
-    tables export as ``"empty"``; ALTER-carrying tables materialize
-    via ``materialize()`` (callers validate the session up front, so
-    this is never reached without one); everything else hard-links
-    zero-copy."""
+    """One table's export: zero-bucket tables export as ``"empty"``;
+    tables that need it materialize via ``materialize()`` (the caller
+    validates the session up front, so this is never reached without
+    one); everything else hard-links zero-copy."""
     if not meta["buckets"]:
         return {"mode": "empty", "files": []}
-    if (
-        meta.get("added_columns")
-        or meta.get("dropped_columns")
-        or meta.get("column_map")
-        or meta.get("dv")
-    ):
-        # metadata-only schema evolution (ADD, DROP, RENAME's column
-        # mapping) or merge-on-read deletes mean the raw files are
-        # NOT the logical table — materialize instead
+    if _needs_materialize(meta):
         materialize().write.mode("append").parquet(out_dir)
-        files = sorted(
-            f for f in os.listdir(out_dir)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
+        files = [os.path.basename(f) for f in _leaf_files(out_dir)]
         return {"mode": "materialized", "files": files}
     return {
         "mode": "linked",
@@ -3931,52 +3900,7 @@ def export_snapshot(
     ``<out>/_EXPORT.json``; the bucket partition column is NOT
     exported (it is a pure pk-hash derivation, internal to the merge
     layout)."""
-    import json
-
-    manifest = _bucket_manifest(path, token)
-    # validate BEFORE creating the output directory: a refused export
-    # must leave nothing behind (a partial dir would block the retry
-    # on makedirs(exist_ok=False)). A zero-bucket table has no rows to
-    # materialize, so it exports as "empty" regardless of ALTERs.
-    if (
-        manifest["buckets"]
-        and (
-            manifest.get("added_columns")
-            or manifest.get("dropped_columns")
-            or manifest.get("column_map")
-            or manifest.get("dv")
-        )
-        and spark is None
-    ):
-        raise ValueError(
-            f"{path}: table has metadata-only ALTER columns or "
-            "deletion vectors "
-            f"(added: {sorted(manifest.get('added_columns') or {})}, "
-            f"dropped: {sorted(manifest.get('dropped_columns') or [])}, "
-            f"renamed: {sorted(manifest.get('column_map') or {})}, "
-            f"dv buckets: {sorted(manifest.get('dv') or {})}); "
-            "pass spark= so the export can materialize the logical "
-            "table (a raw file export would mis-represent it)"
-        )
-    os.makedirs(out, exist_ok=False)
-    entry = _export_table_entry(
-        path,
-        manifest,
-        out,
-        lambda: read_versioned_table(spark, path, token).drop(
-            MERGE_BUCKET_COL
-        ),
-    )
-    record = {
-        "source": os.path.abspath(path),
-        "kind": manifest.get("kind"),
-        "token": manifest["token"],
-        "seq": manifest.get("seq"),
-        **entry,
-    }
-    with open(os.path.join(out, "_EXPORT.json"), "w") as f:
-        json.dump(record, f, indent=1, sort_keys=True)
-    return record
+    return _export_tables(path, out, None, spark, _bucket_manifest(path, token))
 
 
 def export_db_snapshot(
@@ -3991,65 +3915,64 @@ def export_db_snapshot(
     tables come from the same manifest, the export is a cross-table-
     consistent snapshot, which per-table exports taken at different
     times cannot guarantee."""
+    return _export_tables(path, out, tables, spark, _db_manifest(path, token))
+
+
+def _export_tables(
+    path: str,
+    out: str,
+    names: list[str] | None,
+    spark: SparkSession | None,
+    manifest: dict,
+) -> dict:
+    """The export of both layouts: each of ``names`` (default: every
+    table) exports under ``<out>/<table>/`` — ``out`` itself for a
+    single table, whose record carries its entry at the top level."""
     import json
 
-    manifest = _db_manifest(path, token)
-    names = (
-        sorted(manifest["tables"])
-        if tables is None
-        # dedup while preserving the caller's order — a duplicate name
-        # would otherwise fail mid-loop on the second makedirs, leaving
-        # the partial output the up-front validation exists to prevent
-        else list(dict.fromkeys(tables))
-    )
-    # validate the WHOLE export before creating any output: a mid-loop
-    # refusal must not leave a partial marker-less directory behind
+    tables = _layout_tables(manifest)
+    # dedup while preserving the caller's order — a duplicate name
+    # would otherwise fail mid-loop on the second makedirs
+    names = sorted(tables) if names is None else list(dict.fromkeys(names))
+    # validate the WHOLE export before creating any output: a refused
+    # export must leave nothing behind (a partial dir would block the
+    # retry on makedirs(exist_ok=False))
+    _require_tables(path, manifest, names)
     for name in names:
-        if name not in manifest["tables"]:
+        t = tables[name]
+        if _needs_materialize(t) and spark is None:
             raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
-        t = manifest["tables"][name]
-        if (
-            t["buckets"]
-            and (
-                t.get("added_columns")
-                or t.get("dropped_columns")
-                or t.get("column_map")
-                or t.get("dv")
-            )
-            and spark is None
-        ):
-            raise ValueError(
-                f"{path}/{name}: table has metadata-only ALTER "
-                f"columns (added: {sorted(t.get('added_columns') or {})}, "
+                f"{_table_root(path, name)}: table has metadata-only "
+                "ALTER columns or deletion vectors "
+                f"(added: {sorted(t.get('added_columns') or {})}, "
                 f"dropped: {sorted(t.get('dropped_columns') or [])}, "
-                f"renamed: {sorted(t.get('column_map') or {})}) or "
-                f"deletion vectors (dv buckets: {sorted(t.get('dv') or {})}); "
-                "pass spark= so the export can materialize them"
+                f"renamed: {sorted(t.get('column_map') or {})}, "
+                f"dv buckets: {sorted(t.get('dv') or {})}); "
+                "pass spark= so the export can materialize the logical "
+                "table (a raw file export would mis-represent it)"
             )
     os.makedirs(out, exist_ok=False)
     entries: dict[str, dict] = {}
     for name in names:
-        t = manifest["tables"][name]
-        tdir = os.path.join(out, name)
-        os.makedirs(tdir)
+        tdir = _table_root(out, name)
+        os.makedirs(tdir, exist_ok=True)
+        src = _table_root(path, name)
         entries[name] = _export_table_entry(
-            os.path.join(path, name),
-            t,
-            tdir,
-            lambda name=name: read_versioned_db(
-                spark, path, name, token
-            ).drop(MERGE_BUCKET_COL),
+            src, tables[name], tdir,
+            lambda src=src, t=tables[name]: _read_entry(spark, src, t).drop(
+                MERGE_BUCKET_COL
+            ),
         )
     record = {
         "source": os.path.abspath(path),
         "kind": manifest.get("kind"),
         "token": manifest["token"],
         "seq": manifest.get("seq"),
-        "tables": entries,
     }
+    if manifest.get("kind") == "versioned-db":
+        record["tables"] = entries
+    else:
+        record.update(entries[""])
     with open(os.path.join(out, "_EXPORT.json"), "w") as f:
         json.dump(record, f, indent=1, sort_keys=True)
     return record
@@ -4161,7 +4084,6 @@ def _table_manifest_sql(
     prune: list[tuple] | None = None,
     eq: list[tuple] | None = None,
     eq_keep: set[str] | None = None,
-    _scan_paths: list[str] | None = None,
 ) -> str:
     """The per-table body of :func:`manifest_to_sql`: one SELECT over
     exactly this manifest's parquet files, with ALTER-added columns
@@ -4176,48 +4098,18 @@ def _table_manifest_sql(
     tier too."""
     import json as _json
 
-    if prune or eq:
-        keep = set(manifest["buckets"])
-        if prune:
-            keep &= set(stats_prune_buckets(manifest, prune))
-        if eq_keep is not None:
-            keep &= eq_keep
-        # UPDATE-overlaid buckets are exempt from stats/bloom pruning
-        # (base stats and blooms describe superseded values) — same
-        # rule as the native reader's _skipping_keep
-        keep |= set(_patch_map(manifest)) & set(manifest["buckets"])
-        pruned = {
-            b: g for b, g in manifest["buckets"].items() if b in keep
-        }
-        scan_paths = None
-        if pruned and manifest.get("file_stats"):
-            scan_paths = _pruned_bucket_paths(
-                root, {**manifest, "buckets": pruned}, set(pruned),
-                prune, eq,
-            )
-            if not scan_paths:
-                # the file tier refuted every file of every surviving
-                # bucket: emit the typed-empty SELECT (only possible
-                # when the recorded schema exists; pre-format
-                # manifests never carry file_stats)
-                pruned = {}
-                scan_paths = None
-        inner = _table_manifest_sql(
-            root, {**manifest, "buckets": pruned}, _scan_paths=scan_paths
-        )
-        if not pruned:
-            return inner  # typed-empty branch already carries WHERE 1=0
-        # the residual must filter the PROJECTED columns (ALTER-added
-        # columns are reconstructed as coalesce-to-default aliases) —
-        # appended directly to the inner SELECT, DuckDB would bind the
-        # raw read_parquet column and drop every row whose value IS
-        # the default
-        conds = []
-        if prune:
-            conds.append(_prune_where_sql(prune))
-        if eq:
-            conds.append(_eq_where_sql(eq))
-        return f"SELECT * FROM ({inner}) WHERE {' AND '.join(conds)}"
+    keep = set(manifest["buckets"])
+    if prune:
+        keep &= set(stats_prune_buckets(manifest, prune))
+    if eq_keep is not None:
+        keep &= eq_keep
+    # UPDATE-overlaid buckets are exempt from stats/bloom pruning
+    # (base stats and blooms describe superseded values) — same rule
+    # as the native reader's _skipping_keep
+    keep |= set(_patch_map(manifest)) & set(manifest["buckets"])
+    # bucket dirs, or single files where the file tier applies; empty
+    # when it refuted every file of every surviving bucket
+    scan_paths = _pruned_bucket_paths(root, manifest, keep, prune, eq)
 
     added = manifest.get("added_columns", {})
     dropped = set(manifest.get("dropped_columns") or [])
@@ -4231,9 +4123,9 @@ def _table_manifest_sql(
         c for c in schema_cols if c != MERGE_BUCKET_COL and c not in dropped
     ]
 
-    if not manifest["buckets"]:
-        # typed-empty read of a zero-bucket snapshot (same contract as
-        # read_versioned_table's empty branch)
+    if not scan_paths:
+        # typed-empty read (same contract as read_versioned_table's
+        # empty branch): a zero-bucket snapshot, or every bucket skipped
         if sj is None:
             raise FileNotFoundError(f"{root}: empty versioned table")
         types = {
@@ -4252,34 +4144,15 @@ def _table_manifest_sql(
     files: list[str] = []
     gen_leaf: dict[str, str] = {}
     scanned: set[str] = set()  # bucket ids in the emitted scan set
-    if _scan_paths is not None:
-        # file-tier-pruned scan set: entries are either whole bucket
-        # dirs (conservative fallback) or individual parquet files
-        for p in _scan_paths:
-            if p.endswith(".parquet"):
-                leaf = os.path.dirname(p)
-                files.append(p)
-            else:
-                leaf = p
-                files.extend(
-                    os.path.join(leaf, f)
-                    for f in sorted(os.listdir(leaf))
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                )
-            gen_leaf.setdefault(os.path.basename(os.path.dirname(leaf)), leaf)
-            scanned.add(os.path.basename(leaf).rsplit("=", 1)[1])
-    else:
-        for b, gen in sorted(
-            manifest["buckets"].items(), key=lambda kv: int(kv[0])
-        ):
-            leaf = os.path.join(root, gen, f"{MERGE_BUCKET_COL}={b}")
-            gen_leaf.setdefault(gen, leaf)
-            scanned.add(b)
-            files.extend(
-                os.path.join(leaf, f)
-                for f in sorted(os.listdir(leaf))
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
+    for p in scan_paths:
+        if p.endswith(".parquet"):
+            leaf = os.path.dirname(p)
+            files.append(p)
+        else:
+            leaf = p
+            files.extend(_leaf_files(leaf))
+        gen_leaf.setdefault(os.path.basename(os.path.dirname(leaf)), leaf)
+        scanned.add(os.path.basename(leaf).rsplit("=", 1)[1])
     # the physical union across generations: one footer per generation
     # is representative (a generation is one write, one frame schema) —
     # this also catches columns a re-init materialized physically after
@@ -4330,24 +4203,26 @@ def _table_manifest_sql(
                 f"CAST({_sql_literal(default)} AS "
                 f"{_duckdb_type(spec['type'])}) AS {_sql_ident(col)}"
             )
-    file_list = ", ".join("'" + f.replace("'", "''") + "'" for f in files)
+
+    def sidecar_list(sidecars: dict) -> str:
+        # the files of the DV or overlay generations of the scanned
+        # buckets, as a SQL list
+        return ", ".join(
+            _sql_literal(f)
+            for b, gen in sorted(sidecars.items())
+            if b in scanned
+            for f in _leaf_files(
+                os.path.join(root, gen, f"{MERGE_BUCKET_COL}={b}")
+            )
+        )
+
+    file_list = ", ".join(map(_sql_literal, files))
     # merge-on-read deletes: the external engine anti-joins the same
     # DV sidecars the native reader does (pk is never renamed, so no
     # column-mapping translation applies here)
     dv_clause = ""
-    dv = manifest.get("dv") or {}
-    if dv:
-        dv_files = []
-        for b, gen in sorted(dv.items()):
-            leaf = os.path.join(root, gen, f"{MERGE_BUCKET_COL}={b}")
-            dv_files.extend(
-                os.path.join(leaf, f)
-                for f in sorted(os.listdir(leaf))
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-        dv_list = ", ".join(
-            "'" + f.replace("'", "''") + "'" for f in dv_files
-        )
+    dv_list = sidecar_list(manifest.get("dv") or {})
+    if dv_list:
         # NOT EXISTS, not NOT IN: NOT IN over a non-empty subquery is
         # NULL (filtered) for NULL-pk rows, but the native reader's
         # left_anti join KEEPS NULL-pk rows — NOT EXISTS with an
@@ -4369,27 +4244,23 @@ def _table_manifest_sql(
     # superseded base versions; the overlay files carry the current
     # ones — union them with the SAME projection, no DV clause
     # (read contract: (base \ DV) ∪ patch, _apply_dv's twin)
-    patch = manifest.get("patch") or {}
-    patch_files = []
-    for b, gen in sorted(patch.items()):
-        if b not in scanned:
-            continue
-        leaf = os.path.join(root, gen, f"{MERGE_BUCKET_COL}={b}")
-        patch_files.extend(
-            os.path.join(leaf, f)
-            for f in sorted(os.listdir(leaf))
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    if patch_files:
-        patch_list = ", ".join(
-            "'" + f.replace("'", "''") + "'" for f in patch_files
-        )
+    patch_list = sidecar_list(manifest.get("patch") or {})
+    if patch_list:
         sql = (
             f"{sql} UNION ALL SELECT {', '.join(exprs)} FROM "
             f"read_parquet([{patch_list}], union_by_name=true, "
             f"hive_partitioning=false)"
         )
-    return sql
+    if not (prune or eq):
+        return sql
+    # the residual must filter the PROJECTED columns (ALTER-added
+    # columns are reconstructed as coalesce-to-default aliases) —
+    # appended directly to the inner SELECT, DuckDB would bind the raw
+    # read_parquet column and drop every row whose value IS the default
+    conds = [_prune_where_sql(prune)] if prune else []
+    if eq:
+        conds.append(_eq_where_sql(eq))
+    return f"SELECT * FROM ({sql}) WHERE {' AND '.join(conds)}"
 
 
 def manifest_to_sql(
@@ -4430,11 +4301,11 @@ def manifest_to_sql(
     differ between engines (DuckDB errors casting non-numeric
     varchars where Spark yields NULL), so those raise instead of
     silently diverging."""
-    manifest = _bucket_manifest(path, token)
-    eq_keep = _external_eq_keep(spark, path, manifest, eq)
-    return _table_manifest_sql(
-        path, manifest, prune=prune, eq=eq, eq_keep=eq_keep
-    )
+    return _tables_to_sql(
+        path, _bucket_manifest(path, token), None,
+        None if prune is None else {"": prune},
+        None if eq is None else {"": eq}, spark,
+    )[""]
 
 
 def _external_eq_keep(
@@ -4509,18 +4380,25 @@ def db_manifest_to_sql(
     to that table's ``(col, lo, hi)`` conjuncts — stats-disjoint
     buckets drop out of the emitted file list and the residual WHERE
     wraps the projection, exactly like the single-table emission."""
-    manifest = _db_manifest(path, token)
-    names = (
-        sorted(manifest["tables"])
-        if tables is None
-        else list(dict.fromkeys(tables))
+    return _tables_to_sql(
+        path, _db_manifest(path, token), tables, prune, eq, spark
     )
-    for name in names:
-        if name not in manifest["tables"]:
-            raise ValueError(
-                f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
-            )
+
+
+def _tables_to_sql(
+    path: str,
+    manifest: dict,
+    names: list[str] | None,
+    prune: dict[str, list[tuple]] | None,
+    eq: dict[str, list[tuple]] | None,
+    spark: SparkSession | None,
+) -> dict[str, str]:
+    """The external-SQL emission of both layouts: one query per table
+    of ``names`` (default: every table; ``""`` for a single table),
+    all from the one ``manifest``."""
+    tables = _layout_tables(manifest)
+    names = sorted(tables) if names is None else list(dict.fromkeys(names))
+    _require_tables(path, manifest, names)
     unknown = (set(prune or {}) | set(eq or {})) - set(names)
     if unknown:
         # a typo'd prune key must fail loudly — silently emitting
@@ -4530,21 +4408,15 @@ def db_manifest_to_sql(
             f"{path}: prune/eq keys {sorted(unknown)} match no emitted "
             f"table (emitting: {names})"
         )
-    return {
-        name: _table_manifest_sql(
-            os.path.join(path, name),
-            manifest["tables"][name],
-            prune=(prune or {}).get(name),
-            eq=(eq or {}).get(name),
-            eq_keep=_external_eq_keep(
-                spark,
-                os.path.join(path, name),
-                manifest["tables"][name],
-                (eq or {}).get(name),
-            ),
+    out = {}
+    for name in names:
+        root, t = _table_root(path, name), tables[name]
+        t_eq = (eq or {}).get(name)
+        out[name] = _table_manifest_sql(
+            root, t, prune=(prune or {}).get(name), eq=t_eq,
+            eq_keep=_external_eq_keep(spark, root, t, t_eq),
         )
-        for name in names
-    }
+    return out
 
 
 def merge_into_versioned(
@@ -4644,6 +4516,11 @@ def _merge_table_body(
     merged = _apply_matched_updates(table, upd, pk, set_cols)
     if not_matched == "insert":
         merged = merged.unionByName(_unmatched_inserts(table, upd, pk, set_cols))
+    # each affected bucket's rows go to ONE task, as in OPTIMIZE: the
+    # files a bucket gets are a function of the input, not of the
+    # scan's split count or the session's cores
+    merged = merged.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
+    merged = merged.repartition(len(affected), F.col(MERGE_BUCKET_COL))
     written = _write_generation(merged, root, gen, t)
     # Deletion vectors break the "affected bucket has >=1 logical row"
     # invariant: a mode='dv' delete can empty a bucket logically, and a
@@ -5202,13 +5079,32 @@ def apply_changes_versioned(
     keys; everything else stays byte-identical. Buckets emptied by
     deletes drop from the manifest. One chain commit — readers never
     observe deletes without the matching upserts."""
-    manifest = _bucket_manifest(path, base_token)
-    token = _new_token()
-    res = _apply_changes_to_table(
-        spark, path, manifest, changes, f"gen-{token}"
+    return _apply_changes_tables(
+        spark, path, _bucket_manifest(path, base_token), {"": changes},
+        extra_meta,
     )
+
+
+def _apply_changes_tables(
+    spark: SparkSession,
+    path: str,
+    manifest: dict,
+    changes: dict[str, DataFrame],
+    extra_meta: dict | None,
+) -> dict:
+    """The CDC-apply of both layouts: each table's feed applies onto
+    snapshot ``manifest`` and ONE commit publishes them together."""
+    _require_tables(path, manifest, changes)
+    tables = _layout_tables(manifest)
+    token = _new_token()
+    writes = {
+        name: _apply_changes_to_table(
+            spark, _table_root(path, name), tables[name], ch, f"gen-{token}"
+        )
+        for name, ch in changes.items()
+    }
     return _commit_dml(
-        spark, path, manifest, {"": res}, token, extra_meta, adds_rows=True
+        spark, path, manifest, writes, token, extra_meta, adds_rows=True
     )
 
 
@@ -5407,11 +5303,8 @@ def replicate_versioned(
     buckets from the target's manifest), but must share the key and
     column schema, and must hold the source's ``from_token`` state for
     the result to equal the source's ``to_token`` state."""
-    return apply_changes_versioned(
-        spark,
-        dst_path,
-        diff_versioned(spark, src_path, from_token, to_token),
-        extra_meta=extra_meta,
+    return _replicate(
+        spark, src_path, dst_path, from_token, to_token, None, extra_meta, False
     )
 
 
@@ -5511,18 +5404,8 @@ def apply_changes_versioned_db(
     and ONE chain commit publishes every table's changes together —
     a replica never shows table A's state from a different transaction
     than table B's."""
-    manifest = _db_manifest(path, base_token)
-    _require_tables(path, manifest, changes)
-    token = _new_token()
-    writes = {
-        name: _apply_changes_to_table(
-            spark, os.path.join(path, name), manifest["tables"][name], ch,
-            f"gen-{token}",
-        )
-        for name, ch in changes.items()
-    }
-    return _commit_dml(
-        spark, path, manifest, writes, token, extra_meta, adds_rows=True
+    return _apply_changes_tables(
+        spark, path, _db_manifest(path, base_token), changes, extra_meta
     )
 
 
@@ -5543,22 +5426,34 @@ def replicate_versioned_db(
     both source snapshots); a table the source re-init added or
     dropped between the tokens cannot be diffed and must be synced by
     a full rewrite instead."""
-    mf = _db_manifest(src_path, from_token)
-    mt = _db_manifest(src_path, to_token)
+    return _replicate(
+        spark, src_path, dst_path, from_token, to_token, tables, extra_meta, True
+    )
+
+
+def _replicate(
+    spark: SparkSession,
+    src_path: str,
+    dst_path: str,
+    from_token: str,
+    to_token: str | None,
+    tables: list[str] | None,
+    extra_meta: dict | None,
+    db: bool,
+) -> dict:
+    """The replication of both layouts: diff every table (default:
+    every table in both source snapshots) over ONE resolved snapshot
+    pair — re-resolving the head per table would let a concurrent
+    source commit tear the replica — and apply the feeds to the
+    target's head in one commit."""
+    mf = _layout_manifest(src_path, from_token, db)
+    mt = _layout_manifest(src_path, to_token, db)
     if tables is None:
-        tables = sorted(set(mf["tables"]) & set(mt["tables"]))
-    # diff every table against the SAME resolved token pair: passing a
-    # raw to_token=None through would re-resolve the head per table,
-    # and a concurrent source commit in between would produce exactly
-    # the torn cross-table replica this function exists to prevent
-    feeds = {
-        name: diff_versioned_db(
-            spark, src_path, name, mf["token"], mt["token"]
-        )
-        for name in tables
-    }
-    return apply_changes_versioned_db(
-        spark, dst_path, feeds, extra_meta=extra_meta
+        tables = sorted(set(_layout_tables(mf)) & set(_layout_tables(mt)))
+    feeds = {name: _diff_table(spark, src_path, name, mf, mt) for name in tables}
+    return _apply_changes_tables(
+        spark, dst_path, _layout_manifest(dst_path, None, db), feeds,
+        extra_meta,
     )
 
 
@@ -5632,11 +5527,12 @@ def _table_root(path: str, name: str) -> str:
 
 
 def _require_tables(path: str, manifest: dict, names) -> None:
+    tables = _layout_tables(manifest)
     for name in names:
-        if name not in manifest["tables"]:
+        if name not in tables:
             raise ValueError(
                 f"{path}: no table {name!r} in this snapshot "
-                f"(has: {sorted(manifest['tables'])})"
+                f"(has: {sorted(tables)})"
             )
 
 
@@ -5659,9 +5555,14 @@ def _stamp_table(t: dict, w: _TableWrite, stats: dict | None) -> dict:
     superseded entry, and a bucket gaining an overlay purges too (its
     base stats describe superseded values). ``written`` is reconciled
     with the recorded schema (:func:`_adopt_written_schema`), so a
-    widening commits atomically with the data."""
+    widening commits atomically with the data. The init's ``rows``
+    count goes with the first write that touches the table: a count
+    the commit cannot vouch for must not ride on (it would be false
+    for the new snapshot)."""
     live = _live_buckets(t["buckets"], w.buckets)
     out = {**t, "buckets": live}
+    if w.touched():
+        out.pop("rows", None)
     for key, fresh in (("dv", w.dv), ("patch", w.patch)):
         m = {
             b: g for b, g in (t.get(key) or {}).items() if b not in w.buckets
@@ -5838,7 +5739,7 @@ def _commit_meta_edit(
     db = db or table is not None
     token = _new_token()
     while True:
-        head = _db_manifest(path) if db else _bucket_manifest(path)
+        head = _layout_manifest(path, None, db)
         if table is None:
             new_manifest = edit(head, path)
         else:
@@ -6323,7 +6224,7 @@ def restore_versioned_db(path: str, token: str) -> dict:
 
 def _restore(path: str, token: str, db: bool) -> dict:
     try:
-        target = (_db_manifest if db else _bucket_manifest)(path, token)
+        target = _layout_manifest(path, token, db)
     except FileNotFoundError:
         raise ValueError(
             f"{path}: unknown snapshot {token!r} (never committed, or "
@@ -6446,11 +6347,20 @@ def clone_versioned(src: str, dst: str, token: str | None = None) -> dict:
     return new_manifest
 
 
-def _versioned_retention(path: str, keep_last: int, gens_of):
-    """Shared retention computation for both versioned layouts:
-    ``(retained tokens, live generation ids, chain head)``.
-    ``gens_of(manifest)`` yields the generation ids a manifest pins
-    (plain ``gen-*`` names for tables, ``table/gen-*`` for databases).
+def _manifest_gens(manifest: dict):
+    """The generation ids a manifest pins, in either layout:
+    ``<table>/gen-*`` (plain ``gen-*`` for a single table). DV and
+    UPDATE-overlay sidecar generations are live exactly like data
+    generations."""
+    for name, t in _layout_tables(manifest).items():
+        for m in (t["buckets"], t.get("dv") or {}, t.get("patch") or {}):
+            for gen in m.values():
+                yield os.path.join(name, gen)
+
+
+def _versioned_retention(path: str, keep_last: int):
+    """Retention for both versioned layouts: ``(retained tokens, live
+    generation ids)``.
 
     The advisory history feeds the keep_last window; the CAS chain
     head is ALWAYS added on top — it is the authoritative current
@@ -6467,14 +6377,14 @@ def _versioned_retention(path: str, keep_last: int, gens_of):
     for token in retained:
         try:
             with open(os.path.join(hist_dir, f"{token}.json")) as f:
-                live |= set(gens_of(json.load(f)))
+                live |= set(_manifest_gens(json.load(f)))
         except FileNotFoundError:
             pass  # advisory record missing — the head below covers it
     head = _commit_chain_head(path)
     if head is not None:
         retained.add(head[1]["token"])
-        live |= set(gens_of(head[1]))
-    return retained, live, head
+        live |= set(_manifest_gens(head[1]))
+    return retained, live
 
 
 def _prune_history(path: str, retained: set[str]) -> None:
@@ -6521,28 +6431,35 @@ def vacuum_versioned(
     Set it above your longest merge duration (the 0 default preserves
     stop-the-world cleanup semantics). Commit files are never deleted
     (:func:`_prune_history` explains why)."""
+    return _vacuum_tables(path, keep_last, min_age_s, dry_run, [""])
+
+
+def _vacuum_tables(
+    path: str, keep_last: int, min_age_s: float, dry_run: bool,
+    names: list[str],
+) -> list[str]:
+    """The vacuum of both layouts over the table directories ``names``
+    (``[""]``: a single table is the one table directory at the root).
+    Generation ids are ``<table>/gen-*`` (plain ``gen-*`` for a single
+    table), both in the live set and in the returned list."""
     import shutil
     import time
 
-    retained, live_gens, _head = _versioned_retention(
-        path, keep_last,
-        # DV and UPDATE-overlay sidecar generations are live exactly
-        # like data generations: referenced by any retained manifest
-        lambda m: list(m["buckets"].values())
-        + list((m.get("dv") or {}).values())
-        + list((m.get("patch") or {}).values()),
-    )
+    retained, live = _versioned_retention(path, keep_last)
     now = time.time()
     removed = []
-    for entry in os.listdir(path):
-        if not entry.startswith("gen-") or entry in live_gens:
-            continue
-        full = os.path.join(path, entry)
-        if not _old_enough(full, now, min_age_s):
-            continue  # young enough to be an in-flight writer's
-        if not dry_run:
-            shutil.rmtree(full)
-        removed.append(entry)
+    for name in names:
+        tdir = _table_root(path, name)
+        for entry in os.listdir(tdir):
+            gid = os.path.join(name, entry)
+            if not entry.startswith("gen-") or gid in live:
+                continue
+            full = os.path.join(tdir, entry)
+            if not _old_enough(full, now, min_age_s):
+                continue  # young enough to be an in-flight writer's
+            if not dry_run:
+                shutil.rmtree(full)
+            removed.append(gid)
     if not dry_run:
         _prune_history(path, retained)
     return removed
@@ -6588,153 +6505,16 @@ def write_versioned_db(
     consumed by ``read_versioned_db(prune=/pk_in=)``. A re-init over
     an existing stats-enabled database inherits each table's setting
     unless the caller passes its own (same no-silent-regression rule
-    as the single-table twin)."""
-    import uuid
-
-    token = uuid.uuid4().hex[:12]
-    gen = f"gen-{token}"
-    if (
-        stats_cols is None
-        or bloom_cols is None
-        or constraints is None
-        or file_stats is None
-    ):
-        head0 = _commit_chain_head(path)
-        if head0 is not None:
-            if stats_cols is None:
-                stats_cols = {
-                    n: t["stats_cols"]
-                    for n, t in head0[1].get("tables", {}).items()
-                    if t.get("stats_cols")
-                }
-            if bloom_cols is None:
-                bloom_cols = {
-                    n: t["bloom_cols"]
-                    for n, t in head0[1].get("tables", {}).items()
-                    if t.get("bloom_cols")
-                }
-            if file_stats is None:
-                file_stats = {
-                    n: True
-                    for n, t in head0[1].get("tables", {}).items()
-                    if t.get("file_stats")
-                }
-            if constraints is None:
-                # re-init inherits each table's CHECK constraints —
-                # same no-silent-regression rule as stats/blooms
-                constraints = {
-                    n: t["constraints"]
-                    for n, t in head0[1].get("tables", {}).items()
-                    if t.get("constraints")
-                }
-    entry: dict[str, dict] = {}
-    for name, df in tables.items():
-        nb = n_buckets[name] if isinstance(n_buckets, dict) else n_buckets
-        pk = pks[name]
-        out = df.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
-        tdir = os.path.join(path, name, gen)
-        w = out.write.mode("errorifexists")
-        for k, v in ((write_options or {}).get(name) or {}).items():
-            w = w.option(k, v)
-        w.partitionBy(MERGE_BUCKET_COL).parquet(tdir)
-        written = out.drop(MERGE_BUCKET_COL).schema
-        entry[name] = {
-            "pk": pk,
-            "n_buckets": nb,
-            "columns": list(df.columns),
-            "schema_json": df.schema.json(),
-            "buckets": {str(b): gen for b in _present_buckets(tdir)},
-            # counting the WRITTEN parquet is footer-metadata-only —
-            # callers report row counts without re-running load lineage
-            "rows": spark.read.schema(written).parquet(tdir).count(),
-        }
-        t_stats = (stats_cols or {}).get(name)
-        t_blooms = (bloom_cols or {}).get(name)
-        t_cons = (constraints or {}).get(name)
-        if t_stats:
-            entry[name]["stats_cols"] = list(t_stats)
-        if t_blooms:
-            entry[name]["bloom_cols"] = list(t_blooms)
-        if (file_stats or {}).get(name):
-            if not t_stats:
-                raise ValueError(
-                    f"{name}: file_stats requires stats_cols"
-                )
-            entry[name]["file_stats"] = True
-        if t_cons:
-            entry[name]["constraints"] = dict(t_cons)
-            # the new baseline must satisfy the constraints it carries
-            _check_constraints_frame(
-                spark.read.schema(written).parquet(tdir),
-                t_cons,
-                os.path.join(path, name),
-            )
-        if _wants_stats(entry[name]):
-            entry[name]["bucket_stats"] = _harvest_bucket_stats(
-                spark, os.path.join(path, name), gen, entry[name]
-            )
-    manifest = {
-        "token": token,
-        "kind": "versioned-db",
-        "seq": 0,
-        "tables": entry,
-    }
-    # re-initializing an existing database is a FULL-REWRITE commit on
-    # the same chain; like the single-table twin, the payload is
-    # REBUILT from the head on every claim attempt so that stream
-    # progress markers (live exactly-once streams must keep skipping
-    # applied batches) and per-table schema-evolution metadata (their
-    # set_cols may target ALTER-added columns) survive the rewrite —
-    # delete the directory for a truly clean slate.
-    while True:
-        head = _commit_chain_head(path)
-        manifest["seq"] = 0 if head is None else head[0] + 1
-        # rebuild the carried-over state from THIS head (a retry may
-        # see a different head than the last attempt did)
-        manifest.pop("streams", None)
-        for name, t in manifest["tables"].items():
-            t.pop("added_columns", None)
-        if head is not None:
-            if head[1].get("streams"):
-                manifest["streams"] = dict(head[1]["streams"])
-            for name, t in manifest["tables"].items():
-                prev = head[1].get("tables", {}).get(name, {})
-                # same physically-materialized filter as the
-                # single-table re-init: an added column the new
-                # baseline carries physically leaves the metadata
-                carried = {
-                    c: spec
-                    for c, spec in prev.get("added_columns", {}).items()
-                    if c not in t.get("columns", [])
-                }
-                if carried:
-                    t["added_columns"] = carried
-        try:
-            _claim_commit(
-                path, manifest["seq"], manifest,
-                parent=None if head is None else head[1],
-            )
-            break
-        except FileExistsError:
-            continue
-    _publish_manifest(path, manifest)
-    return manifest
+    as the single-table twin). One body serves both layouts
+    (:func:`_write_tables`)."""
+    return _write_tables(
+        spark, path, tables, pks, n_buckets, write_options, stats_cols,
+        bloom_cols, constraints, file_stats,
+    )
 
 
 def _db_manifest(path: str, token: str | None = None) -> dict:
-    import json
-
-    if token is None:
-        head = _commit_chain_head(path)
-        if head is None:
-            raise FileNotFoundError(f"{path}: no versioned database commit")
-        manifest = head[1]
-    else:
-        with open(os.path.join(path, HISTORY_DIR, f"{token}.json")) as f:
-            manifest = json.load(f)
-    if manifest.get("kind") != "versioned-db":
-        raise ValueError(f"{path}: not a versioned database")
-    return manifest
+    return _layout_manifest(path, token, db=True)
 
 
 def read_versioned_db(
@@ -6757,16 +6537,7 @@ def read_versioned_db(
     parameters, applied against THIS table's manifest entry (stats
     opt-in via ``write_versioned_db(stats_cols=...)``); both are
     exact — the predicate is re-applied to the surviving rows."""
-    if as_of is not None:
-        if token is not None:
-            raise ValueError("pass token OR as_of, not both")
-        token = token_as_of(path, as_of)
-    manifest = _db_manifest(path, token)
-    _require_tables(path, manifest, [table])
-    return _read_entry(
-        spark, os.path.join(path, table), manifest["tables"][table],
-        prune, pk_in, eq,
-    )
+    return _read_table(spark, path, table, True, token, as_of, prune, pk_in, eq)
 
 
 def alter_versioned_db_add_columns(
@@ -6969,35 +6740,11 @@ def vacuum_versioned_db(
     that no retained transaction mentions any more (dropped by a full
     rewrite, or a pre-claim crash of a brand new table) are reclaimed
     too, not leaked."""
-    import shutil
-    import time
-
-    retained, live, _head = _versioned_retention(
-        path,
-        keep_last,
-        lambda m: (
-            f"{name}/{gen}"
-            for name, t in m["tables"].items()
-            for gen in list(t["buckets"].values())
-            + list((t.get("dv") or {}).values())
-            + list((t.get("patch") or {}).values())
-        ),
+    return _vacuum_tables(
+        path, keep_last, min_age_s, dry_run,
+        [
+            name for name in os.listdir(path)
+            if name not in (COMMITS_DIR, HISTORY_DIR)
+            and os.path.isdir(os.path.join(path, name))
+        ],
     )
-    now = time.time()
-    removed = []
-    for name in os.listdir(path):
-        tdir = os.path.join(path, name)
-        if name in (COMMITS_DIR, HISTORY_DIR) or not os.path.isdir(tdir):
-            continue
-        for entry in os.listdir(tdir):
-            if not entry.startswith("gen-") or f"{name}/{entry}" in live:
-                continue
-            full = os.path.join(tdir, entry)
-            if not _old_enough(full, now, min_age_s):
-                continue
-            if not dry_run:
-                shutil.rmtree(full)
-            removed.append(f"{name}/{entry}")
-    if not dry_run:
-        _prune_history(path, retained)
-    return removed

@@ -452,10 +452,15 @@ def test_cli_load_resume_appends_results(spark, tmp_path):
     assert ids == ["A1", "A2", "A3"]  # no duplicates re-appended
 
 
-def test_cli_load_merge_buckets_layout(spark, tmp_path):
-    """--merge-buckets writes loaded tables in the PK-hash bucket
-    layout so later dependent updates can use merge_into_partitioned."""
-    from amaxa_spark.sources.catalog import MERGE_BUCKET_COL
+def test_cli_load_merge_buckets_layout(spark, tmp_path, capsys):
+    """--merge-buckets writes loaded tables in the manifest-versioned
+    PK-hash bucket layout (without --versioned, which is accepted and
+    ignored), and the printed count is the init's observed one."""
+    from amaxa_spark.sources.catalog import (
+        MERGE_BUCKET_COL,
+        _bucket_manifest,
+        read_versioned_table,
+    )
 
     reg_path, acc_csv, _ = _load_fixture(tmp_path)
     op = {
@@ -477,14 +482,12 @@ def test_cli_load_merge_buckets_layout(spark, tmp_path):
         ]
     )
     assert rc == 0
-    import os
-
-    dirs = [
-        d for d in os.listdir(out / "Account.parquet")
-        if d.startswith(f"{MERGE_BUCKET_COL}=")
-    ]
-    assert 1 <= len(dirs) <= 4
-    got = spark.read.parquet(str(out / "Account.parquet"))
+    assert "loaded Account: 2 records" in capsys.readouterr().out
+    tbl = str(out / "Account.parquet")
+    m = _bucket_manifest(tbl)
+    assert m["n_buckets"] == 4 and 1 <= len(m["buckets"]) <= 4
+    assert m["rows"] == 2
+    got = read_versioned_table(spark, tbl)
     assert got.count() == 2 and MERGE_BUCKET_COL in got.columns
 
 

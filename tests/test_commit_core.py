@@ -1,10 +1,17 @@
 """The versioned commit core: one CAS loop and one DML driver serve
 both layouts, a single table being the one-table transaction
-``{"": manifest}``. These tests pin what that promises:
+``{"": manifest}``; so does one body per verb outside it (init,
+export, vacuum, diff, external SQL, replicate). These tests pin what
+that promises:
 
-- every data verb gives the same rows and the same per-table
-  manifest on a single table and on a one-table database built from
-  the same frame (an ALTER-added column with a default included);
+- every verb gives the same rows, the same per-table manifest and the
+  same result on a single table and on a one-table database built
+  from the same frame (an ALTER-added column with a default
+  included);
+- no committed manifest carries a row count that is false for its
+  snapshot;
+- a MERGE writes the same files per bucket whatever the session's
+  split and shuffle widths;
 - the conflict rules are one matrix: a stale ``base_token`` rebases
   past a disjoint-bucket commit (both writes visible) and raises
   ``ConcurrentMergeError`` on an overlapping one (head unmoved), for
@@ -13,6 +20,10 @@ both layouts, a single table being the one-table transaction
   is refused, through the verb and the streaming sink alike.
 """
 
+import os
+import shutil
+
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -123,7 +134,89 @@ def _layout_verbs(spark):
             lambda p: C.optimize_versioned_db(spark, p, **db_kw)[0],
         )
 
+    def both(fn):
+        return (lambda p: fn(p, False), lambda p: fn(p, True))
+
+    def merge_upd(p, db):
+        merge("insert")[db](p)
+
+    def reinit(p, db):
+        # the set-up opted into blooms and file stats too; a stream
+        # marker and a second ALTER land, then a re-init that passes no
+        # option at all must inherit every one, carry the marker and
+        # keep both added columns (its frame has neither)
+        if db:
+            C.merge_into_versioned_db(
+                spark, p, {"t": upd.limit(0)}, {"t": ["v"]},
+                extra_meta={"streams": {"s1": 4}},
+            )
+            C.alter_versioned_db_add_columns(p, "t", {"c2": ("string", "x")})
+        else:
+            C.merge_into_versioned(
+                spark, p, upd.limit(0), "k", ["v"],
+                extra_meta={"streams": {"s1": 4}},
+            )
+            C.alter_versioned_add_columns(p, {"c2": ("string", "x")})
+        _write(spark, p, db)
+        return _head(p, db).get("streams")
+
+    def export(p, db):
+        # materialized (ALTER-added column and DV from the set-up),
+        # then linked after a re-init that carries the column
+        # physically
+        got = []
+        for n, df in enumerate((None, _frame(spark).withColumn("c", F.lit(7)))):
+            if df is not None:
+                _write(spark, p, db, df=df)
+            out = f"{p}-export{n}"
+            if db:
+                rec = C.export_db_snapshot(p, out, spark=spark)
+                rec, out = rec["tables"]["t"], os.path.join(out, "t")
+            else:
+                rec = C.export_snapshot(p, out, spark=spark)
+            got.append((rec["mode"], _frame_rows(spark.read.parquet(out))))
+        return got
+
+    def diff_replicate_vacuum(p, db):
+        # a byte copy of the snapshot is a replica at t0; after a
+        # MERGE, the diff t0 -> head replayed onto it gives the head;
+        # vacuum then reclaims a crashed writer's orphan generation
+        prefix = "t/" if db else ""
+        os.makedirs(os.path.join(p, prefix, "gen-deadbeef", "__mb=0"))
+        replica = f"{p}-replica"
+        shutil.copytree(p, replica)
+        t0 = _head(p, db)["token"]
+        merge_upd(p, db)
+        if db:
+            feed = C.diff_versioned_db(spark, p, "t", t0)
+            C.replicate_versioned_db(spark, p, replica, t0)
+        else:
+            feed = C.diff_versioned(spark, p, t0)
+            C.replicate_versioned(spark, p, replica, t0)
+        assert _rows(spark, replica, db) == _rows(spark, p, db)
+        vac = C.vacuum_versioned_db if db else C.vacuum_versioned
+        dry = vac(p, dry_run=True)
+        real = vac(p)
+        assert prefix + "gen-deadbeef" in dry
+        assert sorted(dry) == sorted(real) and vac(p, dry_run=True) == []
+        return _frame_rows(feed), sorted(g[len(prefix):] for g in real)
+
+    def sql(p, db):
+        prune, eq = [("v", 0.0, 20.0)], [("g", 2)]
+        if db:
+            q = C.db_manifest_to_sql(
+                p, ["t"], prune={"t": prune}, eq={"t": eq}, spark=spark
+            )["t"]
+        else:
+            q = C.manifest_to_sql(p, prune=prune, eq=eq, spark=spark)
+        rel = duckdb.sql(q)
+        return sorted(rel.columns), sorted(map(repr, rel.fetchall()))
+
     return {
+        "init": both(reinit),
+        "export": both(export),
+        "manifest_to_sql": both(sql),
+        "diff_replicate_vacuum": both(diff_replicate_vacuum),
         "merge_ignore": merge("ignore"),
         "merge_insert": merge("insert"),
         "delete_rewrite": delete("rewrite"),
@@ -142,7 +235,10 @@ def _layout_verbs(spark):
     }
 
 
-LAYOUT_VERBS = [
+# verbs whose own result (not only the table they leave) must match
+RESULT_VERBS = ["init", "export", "manifest_to_sql", "diff_replicate_vacuum"]
+
+LAYOUT_VERBS = RESULT_VERBS + [
     "merge_ignore", "merge_insert", "delete_rewrite", "delete_dv",
     "update_rewrite", "update_dv", "apply_changes", "optimize",
     "optimize_cluster_by", "optimize_zorder_by", "optimize_min_dv_frac",
@@ -153,26 +249,113 @@ LAYOUT_VERBS = [
 def test_layouts_match(spark, tmp_path, verb):
     single, db = _layout_verbs(spark)[verb]
     dv_keys = spark.createDataFrame([(7,), (8,), (12,)], "k long")
+    results = []
     for is_db, run in ((False, single), (True, db)):
         root = str(tmp_path / ("db" if is_db else "t"))
+        extra = {"bloom_cols": ["g"], "file_stats": True} if verb == "init" else {}
         _write(spark, root, is_db, stats_cols=["v"],
-               constraints={"v_big": "v > -1000"})
+               constraints={"v_big": "v > -1000"}, **extra)
         if is_db:
             C.alter_versioned_db_add_columns(root, "t", {"c": ("int", 7)})
             C.delete_from_versioned_db(spark, root, {"t": dv_keys}, mode="dv")
         else:
             C.alter_versioned_add_columns(root, {"c": ("int", 7)})
             C.delete_from_versioned(spark, root, dv_keys, "k", mode="dv")
-        run(root)
+        results.append(run(root))
     t, d = str(tmp_path / "t"), str(tmp_path / "db")
+    if verb in RESULT_VERBS:
+        assert results[0] == results[1]
     assert _rows(spark, t, False) == _rows(spark, d, True)
     et, ed = _entry(t, False), _entry(d, True)
     assert sorted(et["buckets"]) == sorted(ed["buckets"])
     for key in ("dv", "patch"):
         assert sorted(et.get(key) or {}) == sorted(ed.get(key) or {}), key
     for key in ("bucket_stats", "schema_json", "constraints",
-                "added_columns"):
+                "added_columns", "stats_cols", "bloom_cols", "file_stats",
+                "rows"):
         assert et.get(key) == ed.get(key), key
+    assert _head(t, False).get("streams") == _head(d, True).get("streams")
+    if verb == "init":
+        assert results[0] == {"s1": 4}
+        assert et["bloom_cols"] == ["g"] and et["file_stats"] is True
+        assert et["stats_cols"] == ["v"] and "v_big" in et["constraints"]
+        assert sorted(et["added_columns"]) == ["c", "c2"]
+        assert et["rows"] == len(_rows(spark, t, False))
+
+
+def _frame_rows(df):
+    df = df.drop(C.MERGE_BUCKET_COL)
+    rows = df.select(*sorted(df.columns)).collect()
+    return sorted(df.columns), sorted(map(repr, rows))
+
+
+@pytest.mark.parametrize("db", [False, True], ids=["table", "db"])
+def test_row_count_is_true_for_its_snapshot(spark, tmp_path, db):
+    """The init records the row count it observed on its write; a
+    later data commit must not carry it on once it is false."""
+    root = str(tmp_path / "t")
+    _write(spark, root, db, df=_frame(spark, 10))
+    assert _entry(root, db)["rows"] == 10
+    ins = spark.createDataFrame(
+        [(k, 1.0) for k in range(100, 105)], "k long, v double"
+    )
+    if db:
+        C.merge_into_versioned_db(
+            spark, root, {"t": ins}, {"t": ["v"]}, not_matched="insert"
+        )
+    else:
+        C.merge_into_versioned(spark, root, ins, "k", ["v"], not_matched="insert")
+    n = len(_rows(spark, root, db))
+    assert n == 15
+    assert _entry(root, db).get("rows", n) == n
+
+
+def test_merge_files_per_bucket_do_not_depend_on_scan_splits(spark, tmp_path):
+    """The same MERGE on two byte-identical copies writes the same
+    files per bucket, even when the sessions split scans and size
+    shuffles differently (one packs the small files into few splits
+    and shuffles into 1 partition, the other opens each file as its
+    own split and shuffles into 7)."""
+    import os
+
+    base = str(tmp_path / "base")
+    # four part files per bucket
+    C.write_versioned_table(_frame(spark).repartition(4), base, "k", N_BUCKETS)
+    upd = spark.createDataFrame(
+        [(1, 5.0), (2, 6.0), (3, 7.0), (500, 8.0)], "k long, v double"
+    )
+    per = []
+    for name, conf in (
+        ("a", {"files.openCostInBytes": "1", "shuffle.partitions": "1"}),
+        ("b", {"files.openCostInBytes": str(64 << 20), "shuffle.partitions": "7"}),
+    ):
+        root = str(tmp_path / name)
+        shutil.copytree(base, root)
+        prev = {k: spark.conf.get(f"spark.sql.{k}", None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(f"spark.sql.{k}", v)
+        try:
+            m = C.merge_into_versioned(
+                spark, root, upd, "k", ["v"], not_matched="insert"
+            )
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(f"spark.sql.{k}")
+                else:
+                    spark.conf.set(f"spark.sql.{k}", v)
+        gen = f"gen-{m['token']}"
+        per.append({
+            b: len([
+                f for f in os.listdir(
+                    os.path.join(root, gen, f"{C.MERGE_BUCKET_COL}={b}")
+                )
+                if f.endswith(".parquet")
+            ])
+            for b, g in sorted(m["buckets"].items())
+            if g == gen
+        })
+    assert per[0] and per[0] == per[1]
 
 
 def test_optimize_materializes_added_columns(spark, tmp_path):

@@ -115,69 +115,6 @@ def test_bucket_spec_for_operation(spark, sf_dir):
     assert fk_spec["orders"] == ("o_custkey", 8)  # child: descendent FK
 
 
-def test_merge_into_partitioned_rewrites_only_affected_buckets(spark, tmp_path):
-    """Partition-scoped Delta-less MERGE: updating rows in a few
-    PK-hash buckets must leave every other bucket directory untouched
-    on disk (dynamic partition overwrite), and merged values must be
-    correct."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-
-    from amaxa_spark.sources.catalog import (
-        MERGE_BUCKET_COL,
-        merge_into_partitioned,
-        write_partitioned_table,
-    )
-
-    path = str(tmp_path / "tbl")
-    n_buckets = 8
-    df = spark.range(200).select(
-        F.col("id").cast("string").alias("Id"),
-        F.lit("old").alias("status"),
-        (F.col("id") * 2).alias("v"),
-    )
-    write_partitioned_table(df, path, pk="Id", n_buckets=n_buckets)
-
-    def bucket_mtimes():
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith(f"{MERGE_BUCKET_COL}="):
-                full = os.path.join(path, d)
-                out[d] = max(
-                    os.path.getmtime(os.path.join(full, f))
-                    for f in os.listdir(full)
-                    if not f.startswith(".")
-                )
-        return out
-
-    before = bucket_mtimes()
-    assert len(before) == n_buckets
-    time.sleep(1.1)  # mtime resolution guard
-
-    updates = spark.createDataFrame(
-        [("7", "new"), ("11", "new")], "Id: string, status: string"
-    )
-    touched = merge_into_partitioned(
-        spark, path, updates, pk="Id", set_cols=["status"], n_buckets=n_buckets
-    )
-    assert 1 <= len(touched) <= 2
-
-    after = bucket_mtimes()
-    touched_dirs = {f"{MERGE_BUCKET_COL}={b}" for b in touched}
-    for d in before:
-        if d in touched_dirs:
-            assert after[d] > before[d], f"{d} should have been rewritten"
-        else:
-            assert after[d] == before[d], f"{d} must be untouched"
-
-    got = spark.read.parquet(path)
-    assert got.count() == 200
-    rows = {r.Id: r.status for r in got.collect()}
-    assert rows["7"] == "new" and rows["11"] == "new" and rows["0"] == "old"
-
-
 def test_zorder_key_interleaves_bits(spark):
     from amaxa_spark.operators.layout import zorder_key
 

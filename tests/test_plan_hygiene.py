@@ -151,14 +151,14 @@ def test_lint_allows_scalar_broadcast(spark):
 # the versioned commit core: the only functions allowed to claim a
 # chain seq. Every data commit goes through the CAS loop
 # (_commit_tables), every metadata commit through _commit_meta_edit;
-# the rest are the unconditional full-rewrite claims and the clone's
-# seq-0 claim. A new verb with its own claim loop fails here.
+# the rest are the unconditional full-rewrite claims (one init body,
+# _write_tables, for both layouts) and the clone's seq-0 claim. A new
+# verb with its own claim loop fails here.
 _CLAIM_SITES = {
     "_commit_tables",
     "_commit_meta_edit",
     "_claim_next_commit",
-    "write_versioned_table",
-    "write_versioned_db",
+    "_write_tables",
     "clone_versioned",
 }
 
@@ -184,3 +184,80 @@ def test_claims_only_in_commit_core():
                 callers.append(getattr(fn, "name", f"<line {fn.lineno}>"))
     assert set(callers) <= _CLAIM_SITES, sorted(set(callers) - _CLAIM_SITES)
     assert len(callers) <= len(_CLAIM_SITES), sorted(callers)
+
+
+def _package_dir(*parts):
+    import os
+
+    return os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "amaxa_spark", *parts,
+    )
+
+
+def _bucket_hash_sites(tree) -> list[str]:
+    """Names of the functions holding a ``pmod`` over ``xxhash64``:
+    a Column call chain, or SQL text that spells it."""
+    import ast
+    import re
+
+    sql = re.compile(r"pmod\s*\(\s*xxhash64", re.IGNORECASE)
+
+    def called(node, name):
+        f = node.func if isinstance(node, ast.Call) else None
+        return (isinstance(f, ast.Attribute) and f.attr == name) or (
+            isinstance(f, ast.Name) and f.id == name
+        )
+
+    sites = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        hit = (
+            called(node, "pmod")
+            and any(called(n, "xxhash64") for n in ast.walk(node))
+        ) or (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and sql.search(node.value)
+        )
+        if hit:
+            sites.append(fn or f"<module line {node.lineno}>")
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return sites
+
+
+def test_bucket_hash_only_in_bucket_expr():
+    """One bucket layout, one hash: the bucket of a key is computed
+    only by ``_bucket_expr``. A second inline copy of the pmod/xxhash64
+    chain could drift in its casts and file rows under buckets that no
+    reader or merge looks in."""
+    import ast
+    import os
+
+    sites = {}
+    for sub in ("sources", "streaming"):
+        d = _package_dir(sub)
+        for name in sorted(os.listdir(d)):
+            if name.endswith(".py"):
+                with open(os.path.join(d, name)) as f:
+                    found = _bucket_hash_sites(ast.parse(f.read()))
+                if found:
+                    sites[f"{sub}/{name}"] = found
+    assert sites == {"sources/catalog.py": ["_bucket_expr"]}, sites
+
+
+def test_bucket_hash_lint_has_teeth():
+    import ast
+
+    src = (
+        "def write(df, n):\n"
+        "    return df.withColumn('b', F.pmod(F.xxhash64(F.col('k')), F.lit(n)))\n"
+        "def sql(t):\n"
+        "    return f'SELECT pmod(xxhash64(k), 4) FROM {t}'\n"
+    )
+    assert _bucket_hash_sites(ast.parse(src)) == ["write", "sql"]
