@@ -1872,7 +1872,7 @@ def q_versioned_dv_scan(spark, sf_dir):
     deterministic key set (o_orderkey % 97 = 0) is deleted with
     mode="dv" — NO data file rewrites; one small pk sidecar per
     affected bucket and the manifest's dv map (catalog.py _apply_dv /
-    _dv_delete_table_body). Replays are naturally idempotent (the
+    _merge_on_read). Replays are naturally idempotent (the
     DV-filtered match set is empty, so the re-run commits nothing).
     The final read range-prunes on price — stats harvested BEFORE the
     delete stay sound because the DV anti-join applies after
@@ -1914,7 +1914,7 @@ def q_versioned_update_dv_scan(spark, sf_dir):
     overlay-carry union into one file per bucket) and ONE ``mode="dv"``
     DELETE whose keys include patched rows (exercising the
     overlay-shrink path) — ZERO data files rewritten throughout
-    (catalog.py _dv_update_table_body / _apply_dv: read =
+    (catalog.py _merge_on_read / _apply_dv: read =
     (base \\ DV) ∪ patch). The final read range-prunes on price:
     overlaid buckets are pruning-exempt (their base stats describe
     superseded values), everything else skips normally. The oracle

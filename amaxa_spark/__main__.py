@@ -743,6 +743,7 @@ def main(argv: list[str] | None = None) -> int:
                     f"{args.out}/{table}.parquet",
                     pk=registry[table].pk,
                     n_buckets=args.merge_buckets,
+                    write_options=write_opts,
                 )["rows"]
             else:
                 w = df.write.mode("overwrite")

@@ -615,31 +615,19 @@ def _ckpt_with_buckets(df: DataFrame, *extra) -> tuple[DataFrame, dict]:
 
 
 def _merge_target_frame(
-    spark, root: str, meta: dict, cur_paths: list[str], upd, pk, set_cols
+    spark, root: str, meta: dict, buckets: list[int], upd, pk, set_cols
 ):
     """The frame a MERGE rewrites (shared by both layouts): the
-    affected buckets' current rows (recorded-schema read + added-column
-    fill — the rewrite MATERIALIZES metadata-added columns, the
-    deferred ALTER backfill), or a SCHEMA-ONLY frame when every
-    affected bucket is brand new — taken from any existing bucket if
+    current rows of those of ``buckets`` that exist
+    (:func:`_bucket_rows`), or a SCHEMA-ONLY frame when every one is
+    brand new — taken from any existing bucket if
     one exists, else from the manifest's recorded ``schema_json``
     (zero-bucket empty-frame init: the DECLARED schema, so the first
     insert keeps init-declared columns as NULL instead of silently
     narrowing the table to pk + set_cols), falling back to the updates
     frame only for pre-format manifests that recorded no schema."""
-    if cur_paths:
-        # DV-filtered: a rewrite must not resurrect merge-on-read
-        # deletes (the rewritten bucket sheds its DV in the commit,
-        # so the physical shed and the metadata shed are atomic).
-        # Restricted to the paths' own buckets so UPDATE overlay rows
-        # of buckets this rewrite does NOT touch cannot leak in.
-        return _apply_dv(
-            spark,
-            root,
-            _fill_added_columns(_read_logical(spark, meta, *cur_paths), meta),
-            meta,
-            buckets={p.rsplit("=", 1)[1] for p in cur_paths},
-        )
+    if any(str(b) in meta["buckets"] for b in buckets):
+        return _bucket_rows(spark, root, meta, buckets)
     first = next(iter(sorted(meta["buckets"].items())), None)
     if first is None:
         if meta.get("schema_json") is not None:
@@ -1081,30 +1069,6 @@ def _chain_seqs(cdir: str) -> list[int]:
         return []
 
 
-def _claim_next_commit(path: str, manifest: dict) -> tuple[int, int]:
-    """Claim the NEXT chain seq unconditionally, retrying lost races:
-    the read-head / set-seq / claim / retry loop of a full-rewrite
-    commit with a fixed payload (the init body, :func:`_write_tables`,
-    rebuilds its payload from each head instead). Mutates
-    ``manifest["seq"]`` and returns
-    ``(seq, retries)``. Data commits use the commit core's CAS loop
-    (:func:`_commit_tables`) instead, because their retries must first
-    check the intervening commits for conflicts — a semantic this
-    unconditional claim does not have."""
-    retries = 0
-    while True:
-        head = _commit_chain_head(path)
-        manifest["seq"] = 0 if head is None else head[0] + 1
-        try:
-            _claim_commit(
-                path, manifest["seq"], manifest,
-                parent=None if head is None else head[1],
-            )
-            return manifest["seq"], retries
-        except FileExistsError:
-            retries += 1
-
-
 def _claim_commit(
     path: str, seq: int, manifest: dict, parent: dict | None = None
 ) -> None:
@@ -1191,11 +1155,14 @@ def write_versioned_table(
     bloom_cols: list[str] | None = None,
     constraints: dict[str, str] | None = None,
     file_stats: bool | None = None,
+    write_options: dict | None = None,
     _expect_head_seq: int | None = None,
 ) -> dict:
     """Initial commit of a versioned bucket table. Data lands under
     ``<path>/gen-<token>/<bucket>=N/``; the published manifest maps
-    every present bucket to that generation.
+    every present bucket to that generation. ``write_options`` are
+    DataFrameWriter options for the write (advisory parquet tuning
+    like ``maxRecordsPerFile``, as in :func:`write_versioned_db`).
 
     ``stats_cols`` opts the table into manifest-level data skipping:
     per-bucket min/max/null stats for those columns ride every commit
@@ -1221,7 +1188,7 @@ def write_versioned_table(
         return None if v is None else {"": v}
 
     return _write_tables(
-        df.sparkSession, path, {"": df}, {"": pk}, n_buckets, None,
+        df.sparkSession, path, {"": df}, {"": pk}, n_buckets, one(write_options),
         one(stats_cols), one(bloom_cols), one(constraints), one(file_stats),
         _expect_head_seq,
     )
@@ -1549,23 +1516,15 @@ def _apply_dv(
         patch = {b: g for b, g in patch.items() if b in buckets}
     pk = entry["pk"]
     if dv:
-        paths = [
-            os.path.join(root, g, f"{MERGE_BUCKET_COL}={b}")
-            for b, g in sorted(dv.items())
-        ]
         dead = (
-            _read_dv(spark, entry, *paths)
+            _read_dv(spark, entry, *_bucket_dirs(root, dv))
             .select(F.col(DV_PK_COL).alias(pk))
             .distinct()
         )
         df = df.join(dead, pk, "left_anti")
     if patch:
-        pdirs = [
-            os.path.join(root, g, f"{MERGE_BUCKET_COL}={b}")
-            for b, g in sorted(patch.items())
-        ]
         prows = _fill_added_columns(
-            _read_logical(spark, entry, *pdirs), entry
+            _read_logical(spark, entry, *_bucket_dirs(root, patch)), entry
         )
         if MERGE_BUCKET_COL in df.columns:
             prows = prows.withColumn(
@@ -1574,6 +1533,43 @@ def _apply_dv(
             )
         df = df.unionByName(prows.select(*df.columns))
     return df
+
+
+def _bucket_dirs(root: str, m: dict, buckets=None) -> list[str]:
+    """The leaf directories ``<root>/<gen>/__mb=<b>`` that map ``m``
+    (``{bucket: gen}`` — the buckets, DV or overlay map) holds for
+    ``buckets`` (default: all of them, in bucket-key order)."""
+    if buckets is None:
+        buckets = sorted(m)
+    return [
+        os.path.join(root, m[str(b)], f"{MERGE_BUCKET_COL}={b}")
+        for b in buckets
+        if str(b) in m
+    ]
+
+
+def _bucket_rows(
+    spark: SparkSession, root: str, t: dict, buckets
+) -> DataFrame:
+    """The current logical rows of ``buckets`` (those the snapshot
+    holds; at least one), as every rewrite reads them: the
+    recorded-schema read (buckets can span pre- and post-ALTER
+    generations — without the superset schema a column only newer
+    files carry would be silently DROPPED), ALTER-added columns
+    filled (the rewrite MATERIALIZES them, the deferred ALTER
+    backfill), and the DVs and overlays of these buckets only
+    composed in (a rewrite must not resurrect merge-on-read deletes
+    — it sheds the DV in the same commit — and the overlay rows of a
+    bucket it does not touch must not leak in)."""
+    return _apply_dv(
+        spark, root,
+        _fill_added_columns(
+            _read_logical(spark, t, *_bucket_dirs(root, t["buckets"], buckets)),
+            t,
+        ),
+        t,
+        buckets={str(b) for b in buckets},
+    )
 
 
 def _manifest_logical_columns(manifest: dict) -> set | None:
@@ -3656,20 +3652,9 @@ def _diff_snapshot_tables(spark: SparkSession, root: str, tf: dict, tt: dict):
     )
 
     def side(meta, buckets):
-        paths = [
-            os.path.join(root, meta["buckets"][b], f"{MERGE_BUCKET_COL}={b}")
-            for b in buckets
-            if b in meta["buckets"]
-        ]
-        if not paths:
+        if not any(b in meta["buckets"] for b in buckets):
             return None
-        df = _apply_dv(
-            spark,
-            root,
-            _fill_added_columns(_read_logical(spark, meta, *paths), meta),
-            meta,
-            set(buckets),
-        )
+        df = _bucket_rows(spark, root, meta, buckets)
         if meta is tf and _column_map(tf) != _column_map(tt):
             # a RENAME landed between the snapshots: express the FROM
             # side in the TO side's logical namespace via the shared
@@ -4494,8 +4479,8 @@ def _merge_table_body(
 ) -> _TableWrite | None:
     """Per-table MERGE body shared by both layouts: rewrites the
     buckets the update keys hash to (only existing ones unless
-    ``not_matched="insert"``) under ``<root>/<gen>``, keyed on the
-    manifest's own pk, or returns ``None`` when no bucket is
+    ``not_matched="insert"``) through the copy-on-write writer, keyed
+    on the manifest's own pk, or returns ``None`` when no bucket is
     affected."""
     pk, nb = t["pk"], t["n_buckets"]
     upd = updates.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
@@ -4507,31 +4492,125 @@ def _merge_table_body(
     )
     if not affected:
         return None
-    cur = [
-        os.path.join(root, t["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
-        for b in affected
-        if str(b) in t["buckets"]
-    ]
-    table = _merge_target_frame(spark, root, t, cur, upd, pk, set_cols)
+    table = _merge_target_frame(spark, root, t, affected, upd, pk, set_cols)
     merged = _apply_matched_updates(table, upd, pk, set_cols)
     if not_matched == "insert":
         merged = merged.unionByName(_unmatched_inserts(table, upd, pk, set_cols))
-    # each affected bucket's rows go to ONE task, as in OPTIMIZE: the
-    # files a bucket gets are a function of the input, not of the
-    # scan's split count or the session's cores
-    merged = merged.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
-    merged = merged.repartition(len(affected), F.col(MERGE_BUCKET_COL))
-    written = _write_generation(merged, root, gen, t)
-    # Deletion vectors break the "affected bucket has >=1 logical row"
-    # invariant: a mode='dv' delete can empty a bucket logically, and a
-    # not_matched='ignore' merge touching it writes NO partition dir for
-    # it — mapping it to `gen` anyway would commit a dangling pointer
-    # (and shed the DV), making every subsequent read PATH_NOT_FOUND.
-    # Absent-from-gen buckets map to None, which the commit drops.
+    return _copy_on_write(merged, root, t, affected, gen)
+
+
+def _copy_on_write(
+    rows: DataFrame, root: str, t: dict, affected: list[int], gen: str
+) -> _TableWrite:
+    """THE copy-on-write writer of the row-level verbs (MERGE, DELETE,
+    UPDATE, CDC-apply): ``rows`` is the new state of the ``affected``
+    buckets — callers read exactly those (:func:`_bucket_rows`), so a
+    candidate bucket without a match is not identity-rewritten. Each
+    bucket's rows go to ONE task, as in OPTIMIZE, so the files a
+    bucket gets are a function of the input, not of the scan's split
+    count or the session's cores. Returns each bucket mapped to
+    ``gen``, or to ``None`` when it was emptied: a delete can empty a
+    bucket, and so can a DV that emptied it logically before a MERGE
+    touched it — no partition directory is written then, and a
+    dangling pointer would make every later read PATH_NOT_FOUND (the
+    commit drops ``None``)."""
+    out = rows.withColumn(
+        MERGE_BUCKET_COL, _bucket_expr(t["pk"], t["n_buckets"])
+    ).repartition(len(affected), F.col(MERGE_BUCKET_COL))
+    written = _write_generation(out, root, gen, t)
     present = set(_present_buckets(os.path.join(root, gen)))
     return _TableWrite(
         {str(b): (gen if b in present else None) for b in affected}, written
     )
+
+
+def _merge_on_read(
+    spark: SparkSession,
+    root: str,
+    t: dict,
+    dead: DataFrame,
+    new: DataFrame | None,
+    affected: list[int],
+    gen: str,
+) -> _TableWrite:
+    """THE merge-on-read writer (DV DELETE, DV UPDATE): ``dead`` holds
+    the pks whose current versions die in the ``affected`` buckets,
+    ``new`` the row versions that replace them (``None`` for a
+    delete). No data file is written. Per affected bucket:
+
+    - the DV sidecar becomes the prior DV ∪ ``dead``, under a fresh
+      generation;
+    - the UPDATE overlay becomes (prior overlay \\ ``dead``) ∪ ``new``
+      under ``<root>/<gen>``, the generation
+      :func:`_enforce_constraints` checks, and is dropped when empty.
+
+    Each is one file per bucket whatever the session's split and
+    shuffle widths, so reads never chain sidecars. At 100 TB a 10-key
+    erasure or a 100-row reprice costs KB-scale sidecars where the
+    copy-on-write writer rewrites whole buckets; OPTIMIZE materializes
+    both later. Overlay rows are rows updated since the bucket's last
+    rewrite, carried forward into its one file."""
+    pk, nb = t["pk"], t["n_buckets"]
+    mb = F.col(MERGE_BUCKET_COL)
+    dv = dead.select(F.col(pk).alias(DV_PK_COL))
+    old = _bucket_dirs(root, _dv_map(t), affected)
+    if old:
+        dv = dv.unionByName(_read_dv(spark, t, *old))
+    dv_gen = f"gen-{_new_token()}"
+    (
+        # the distinct reuses the bucket partitioning: one shuffle
+        dv.withColumn(MERGE_BUCKET_COL, _bucket_expr(DV_PK_COL, nb))
+        .repartition(len(affected), mb)
+        .distinct()
+        .write.mode("errorifexists")
+        .partitionBy(MERGE_BUCKET_COL)
+        .parquet(os.path.join(root, dv_gen))
+    )
+    dvs = {str(b): dv_gen for b in affected}
+    patch = _patch_map(t)
+    old = _bucket_dirs(root, patch, affected)
+    rows = new
+    if old:
+        carry = _fill_added_columns(
+            _read_logical(spark, t, *old), t
+        ).join(dead, pk, "left_anti")
+        rows = (
+            carry if rows is None
+            else rows.unionByName(carry.select(*rows.columns))
+        )
+    if rows is None:
+        return _TableWrite({}, None, dv=dvs)
+    out = rows.withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb)).repartition(
+        len(affected), mb
+    )
+    written = _write_generation(out, root, gen, t)
+    present = set(_present_buckets(os.path.join(root, gen)))
+    return _TableWrite(
+        {}, written, dv=dvs,
+        patch={
+            str(b): (gen if b in present else None)
+            for b in affected
+            if b in present or str(b) in patch
+        },
+    )
+
+
+def _check_mode(mode: str) -> None:
+    if mode not in ("rewrite", "dv"):
+        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+
+
+def _match_buckets(df: DataFrame, pk: str, n_buckets: int) -> list[int]:
+    """The sorted buckets holding a row of ``df``, observed on one
+    scan that writes nothing: no shuffle, nothing materialized, and
+    the set is bounded by ``n_buckets``."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df.observe(
+        obs, F.collect_set(_bucket_expr(pk, n_buckets)).alias("b")
+    ).write.format("noop").mode("overwrite").save()
+    return sorted(obs.get["b"])
 
 
 def delete_from_versioned(
@@ -4565,7 +4644,7 @@ def delete_from_versioned(
     DELETE's equality never matches NULL). Concurrency and
     ``extra_meta`` follow the MERGE rules (same CAS commit loop; DV
     and rewrite commits on the same bucket conflict symmetrically)."""
-    body = _delete_body(mode)
+    _check_mode(mode)
     manifest = _bucket_manifest(path, base_token)
     if pk != manifest["pk"]:
         raise ValueError(
@@ -4573,309 +4652,56 @@ def delete_from_versioned(
             f"({manifest['pk']!r})"
         )
     token = _new_token()
-    res = body(spark, path, manifest, keys, f"gen-{token}")
+    res = _delete_table_body(spark, path, manifest, keys, mode, f"gen-{token}")
     return _commit_dml(spark, path, manifest, {"": res}, token, extra_meta)
 
 
-def _delete_body(mode: str):
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-    return _dv_delete_table_body if mode == "dv" else _delete_keys_from_table
-
-
-def _delete_keys_from_table(
-    spark: SparkSession, root: str, t: dict, keys: DataFrame, gen: str
+def _delete_table_body(
+    spark: SparkSession, root: str, t: dict, keys: DataFrame, mode: str,
+    gen: str,
 ) -> _TableWrite | None:
-    """Per-table DELETE body shared by both layouts: writes the
-    affected buckets' remaining rows under ``<root>/<gen>`` and
-    returns them (``None`` generations mark emptied buckets), or
-    ``None`` when no key matched (nothing written)."""
-    pk, n_buckets = t["pk"], t["n_buckets"]
-    base_buckets = t["buckets"]
-    # fused materialize + bucket set (see _ckpt_with_buckets): the
-    # affected probe and the rewrite anti-join reuse the checkpoint
+    """Per-table DELETE body of both layouts and both modes: find the
+    keys that match a live row, then hand them to the copy-on-write
+    writer (the affected buckets minus those keys) or the
+    merge-on-read writer (the keys join the buckets' DVs and leave
+    their overlays). ``None`` when no key matched (nothing written).
+    Only buckets that CONTAIN a key are touched: a candidate bucket
+    whose keys all miss is not identity-rewritten (no wasted IO, no
+    phantom changed-bucket in the change feed), and a DV holds only
+    rows actually deleted, so a replayed or miss-heavy key feed does
+    not bloat it."""
+    pk, nb = t["pk"], t["n_buckets"]
+    # ONE job materializes the key frame with its bucket set; the
+    # matched probe reads the checkpoint, not the caller's lineage
     k, km = _ckpt_with_buckets(
         keys.select(pk)
         .where(F.col(pk).isNotNull())
         .distinct()
-        .withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets))
-    )
-    candidates = [b for b in km["buckets"] if str(b) in base_buckets]
-    if not candidates:
-        return None
-    cur_paths = [
-        os.path.join(root, base_buckets[str(b)], f"{MERGE_BUCKET_COL}={b}")
-        for b in candidates
-    ]
-    # cur_paths is non-empty here, so this is exactly the shared
-    # existing-buckets read (recorded schema + added-column fill)
-    table = _merge_target_frame(spark, root, t, cur_paths, k, pk, [])
-    # rewrite only buckets that actually CONTAIN a key to delete — a
-    # candidate bucket whose keys all miss would otherwise be
-    # identity-rewritten (wasted IO, spurious generation churn, and a
-    # phantom changed-bucket in the change feed)
-    affected = sorted(
-        r.b
-        for r in table.join(k.select(pk), pk, "left_semi")
-        .select(_bucket_expr(pk, n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return None
-    remaining = table.where(
-        _bucket_expr(pk, n_buckets).isin(affected)
-    ).join(k.select(pk), pk, "left_anti")
-    written = _write_generation(remaining, root, gen, t)
-    present = set(_present_buckets(os.path.join(root, gen)))
-    return _TableWrite(
-        {str(b): (gen if b in present else None) for b in affected}, written
-    )
-
-
-def _dv_delete_table_body(
-    spark: SparkSession, root: str, t: dict, keys: DataFrame, gen: str
-) -> _TableWrite | None:
-    """Per-table merge-on-read DELETE body shared by both layouts:
-    writes ONE small parquet per affected bucket under
-    ``<root>/<gen>/<bucket dir>`` holding the UNION of that bucket's
-    previously-committed DV pks and the newly matched keys (column
-    ``__dv_pk``), and returns the DV map ``{bucket: gen}`` — or
-    ``None`` when no key matched. No data file is read beyond the
-    candidate buckets and no data file is WRITTEN at all: at 100 TB a
-    10-key erasure costs a candidate-bucket read plus a few-KB
-    sidecar write, versus the rewrite path's full bucket rewrite.
-    The matched-keys refinement keeps DV size proportional to rows
-    actually deleted (a replayed or miss-heavy key feed does not
-    bloat the vector). Also returns the overlay map of the UPDATE
-    overlays it rewrote and their written schema (``None`` if none)."""
-    pk, n_buckets = t["pk"], t["n_buckets"]
-    # ONE job materializes the key frame and yields its bucket set
-    # (the old distinct-collect action, fused); every later consumer
-    # (matched probe, DV write, overlay anti-join) reads the
-    # checkpoint instead of re-running the caller's key lineage
-    k, km = _ckpt_with_buckets(
-        keys.select(pk)
-        .where(F.col(pk).isNotNull())
-        .distinct()
-        .withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets))
+        .withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
     )
     candidates = [b for b in km["buckets"] if str(b) in t["buckets"]]
     if not candidates:
         return None
-    cur_paths = [
-        os.path.join(root, t["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
-        for b in candidates
-    ]
-    # DV-filtered target: keys already deleted by an earlier DV must
-    # not re-match (idempotent replays add nothing to the vector).
-    # The matched sliver materializes with its affected-bucket set on
-    # the same job (replays stop here after exactly TWO jobs total);
-    # the DV union write below reads the checkpoint, not the
-    # candidate-bucket scan again.
-    table = _merge_target_frame(spark, root, t, cur_paths, k, pk, [])
-    matched, mm = _ckpt_with_buckets(
+    # the DV-composed read: keys an earlier DV deleted do not match
+    # again, and keys living in an UPDATE overlay do
+    table = _bucket_rows(spark, root, t, candidates)
+    # the matched keys materialize with their bucket set on one job
+    # (a replay stops here); the DV and the overlay carry read them
+    dead, dm = _ckpt_with_buckets(
         table.join(k.select(pk), pk, "left_semi").select(
-            F.col(pk), _bucket_expr(pk, n_buckets).alias(MERGE_BUCKET_COL)
+            F.col(pk), _bucket_expr(pk, nb).alias(MERGE_BUCKET_COL)
         )
     )
-    affected = mm["buckets"]
+    affected = dm["buckets"]
     if not affected:
         return None
-    dv = _dv_map(t)
-    old_paths = [
-        os.path.join(root, dv[str(b)], f"{MERGE_BUCKET_COL}={b}")
-        for b in affected
-        if str(b) in dv
-    ]
-    out = matched.select(F.col(pk).alias(DV_PK_COL))
-    if old_paths:
-        out = out.unionByName(_read_dv(spark, t, *old_paths)).distinct()
-    (
-        out.withColumn(
-            MERGE_BUCKET_COL,
-            _bucket_expr(DV_PK_COL, n_buckets),
+    if mode == "dv":
+        return _merge_on_read(
+            spark, root, t, dead.select(pk), None, affected, gen
         )
-        .write.mode("errorifexists")
-        .partitionBy(MERGE_BUCKET_COL)
-        .parquet(os.path.join(root, gen))
-    )
-    # a deleted key living in a bucket's UPDATE overlay must leave it:
-    # the DV only kills BASE versions, so the overlay file of every
-    # affected patched bucket is rewritten minus the deleted keys
-    # (dropped entirely when emptied)
-    ours_patch: dict = {}
-    written = None
-    patch = _patch_map(t)
-    patched_aff = [b for b in affected if str(b) in patch]
-    if patched_aff:
-        patch_gen = f"gen-{_new_token()}"
-        prior = _fill_added_columns(
-            _read_logical(
-                spark,
-                t,
-                *[
-                    os.path.join(
-                        root, patch[str(b)], f"{MERGE_BUCKET_COL}={b}"
-                    )
-                    for b in patched_aff
-                ],
-            ),
-            t,
-        )
-        remaining = prior.join(k.select(pk), pk, "left_anti")
-        written = _write_generation(remaining, root, patch_gen, t)
-        present = set(_present_buckets(os.path.join(root, patch_gen)))
-        ours_patch = {
-            str(b): (patch_gen if b in present else None)
-            for b in patched_aff
-        }
-    return _TableWrite(
-        {}, written, dv={str(b): gen for b in affected},
-        patch=ours_patch or None,
-    )
-
-
-def _dv_update_table_body(
-    spark: SparkSession,
-    root: str,
-    t: dict,
-    set_exprs: dict,
-    where,
-    prune,
-    eq,
-    gen: str,
-) -> _TableWrite | None:
-    """Per-table merge-on-read UPDATE body shared by both layouts
-    (``update_versioned(mode="dv")``): instead of rewriting whole
-    buckets for a few matched rows, write per affected bucket (a) a
-    DV sidecar adding the matched pks (union of the bucket's prior
-    DV — the base versions are dead) and (b) an UPDATE OVERLAY file
-    under ``<root>/<gen>/<bucket dir>`` holding the NEW row versions
-    plus the bucket's carried-over prior overlay rows, then return
-    the DV and overlay maps with the overlay's written schema — or
-    ``None`` when nothing matched. Readers compose
-    ``(base \\ DV) ∪ patch`` (:func:`_apply_dv`); any rewrite
-    materializes and sheds both.
-
-    At 100 TB this is the UPDATE twin of the DV DELETE: a 100-row
-    reprice costs a candidate-bucket read plus KB-scale sidecars,
-    versus the rewrite path's full bucket rewrites. Write cost is
-    proportional to rows updated since the bucket's last rewrite
-    (prior overlay rows carry forward into one file per bucket), so
-    long-lived merge-on-read buckets want OPTIMIZE, which always
-    selects DV'd buckets.
-
-    NULL-pk rows cannot be DV-updated (a NULL key anti-joins nothing,
-    so the superseded base version would survive next to its
-    replacement) — matching one raises; use the rewrite mode."""
-    pk, n_buckets = t["pk"], t["n_buckets"]
-    bad = {pk, MERGE_BUCKET_COL} & set(set_exprs)
-    if bad:
-        raise ValueError(
-            f"UPDATE cannot set {sorted(bad)}: the key determines the "
-            "row's bucket (delete + insert to re-key)"
-        )
-    logical = _manifest_logical_columns(t)
-    if logical is not None:
-        unknown = sorted(set(set_exprs) - logical)
-        if unknown:
-            raise ValueError(
-                f"UPDATE set column(s) {unknown} do not exist "
-                f"(table has: {sorted(logical)})"
-            )
-    keep = _skipping_keep(spark, root, t, prune, None, eq)
-    cur_paths = [
-        os.path.join(root, g, f"{MERGE_BUCKET_COL}={b}")
-        for b, g in sorted(t["buckets"].items())
-        if b in keep
-    ]
-    if not cur_paths:
-        return None
-    table = _apply_dv(
-        spark, root,
-        _fill_added_columns(_read_logical(spark, t, *cur_paths), t), t,
-        buckets=keep,
-    )
-    unknown = sorted(set(set_exprs) - set(table.columns))
-    if unknown:
-        raise ValueError(
-            f"UPDATE set column(s) {unknown} do not exist "
-            f"(table has: {sorted(table.columns)})"
-        )
-    pred = _update_predicate(prune, eq, where)
-    # ONE job materializes the matched sliver with BOTH driver
-    # scalars observed on it (the null-pk guard and the affected
-    # bucket set — previously two actions, each re-running the
-    # DV-composed candidate read); the SET projection and the
-    # overlay carry anti-join below reuse the checkpoint
-    matched, mm = _ckpt_with_buckets(
-        table.where(pred).withColumn(
-            MERGE_BUCKET_COL, _bucket_expr(pk, n_buckets)
-        ),
-        F.count_if(F.col(pk).isNull()).alias("__nulls"),
-    )
-    matched = matched.drop(MERGE_BUCKET_COL)
-    if int(mm["__nulls"]):
-        raise ValueError(
-            f"{root}: UPDATE mode='dv' matched a NULL-{pk} row — a "
-            "NULL key cannot be deletion-vectored (its superseded "
-            "version would survive); use mode='rewrite'"
-        )
-    affected = mm["buckets"]
-    if not affected:
-        return None
-    # the SET select evaluates every expression against the PRE-update
-    # row with the column's declared type enforced — identical
-    # assignment-cast semantics to the rewrite body
-    cols = []
-    for c in table.columns:
-        if c in set_exprs:
-            e = set_exprs[c]
-            expr = F.expr(e) if isinstance(e, str) else e
-            cols.append(expr.cast(table.schema[c].dataType).alias(c))
-        else:
-            cols.append(F.col(c))
-    updated = matched.select(*cols)
-    # carry forward the affected buckets' prior overlay rows that did
-    # NOT match (one overlay file per bucket — same union-into-one
-    # shape as the DV sidecar, so reads never chain overlay files)
-    patch = _patch_map(t)
-    prior_dirs = [
-        os.path.join(root, patch[str(b)], f"{MERGE_BUCKET_COL}={b}")
-        for b in affected
-        if str(b) in patch
-    ]
-    new_patch = updated
-    if prior_dirs:
-        carry = _fill_added_columns(
-            _read_logical(spark, t, *prior_dirs), t
-        ).join(matched.select(pk).distinct(), pk, "left_anti")
-        new_patch = new_patch.unionByName(carry.select(*new_patch.columns))
-    written = _write_generation(new_patch, root, gen, t)
-    # DV union: matched pks (base versions now dead; pks matched via
-    # a prior overlay are already in the vector — union dedups) plus
-    # the affected buckets' existing vectors
-    dv_gen = f"gen-{_new_token()}"
-    dvm = _dv_map(t)
-    out = matched.select(F.col(pk).alias(DV_PK_COL))
-    old_paths = [
-        os.path.join(root, dvm[str(b)], f"{MERGE_BUCKET_COL}={b}")
-        for b in affected
-        if str(b) in dvm
-    ]
-    if old_paths:
-        out = out.unionByName(_read_dv(spark, t, *old_paths))
-    (
-        out.distinct()
-        .withColumn(MERGE_BUCKET_COL, _bucket_expr(DV_PK_COL, n_buckets))
-        .write.mode("errorifexists")
-        .partitionBy(MERGE_BUCKET_COL)
-        .parquet(os.path.join(root, dv_gen))
-    )
-    return _TableWrite(
-        {}, written, dv={str(b): dv_gen for b in affected},
-        patch={str(b): gen for b in affected},
+    rows = _bucket_rows(spark, root, t, affected)
+    return _copy_on_write(
+        rows.join(k.select(pk), pk, "left_anti"), root, t, affected, gen
     )
 
 
@@ -4907,6 +4733,30 @@ def _update_predicate(prune, eq, where):
     return F.lit(True) if pred is None else pred
 
 
+def _set_columns(table: DataFrame, set_exprs: dict, pred=None) -> list:
+    """The UPDATE projection: ONE select evaluates every SET
+    expression against the PRE-update row (SQL UPDATE semantics —
+    sequential withColumn would let a later expression, or the
+    predicate itself, re-resolve against an already-updated column, so
+    ``{"a": "b", "b": "a"}`` would fail to swap), cast to the column's
+    declared type (SQL UPDATE's implicit assignment cast, so a literal
+    cannot silently widen the physical schema). With ``pred``, rows it
+    does not match keep their values."""
+    cols = []
+    for c in table.columns:
+        if c not in set_exprs:
+            cols.append(F.col(c))
+            continue
+        e = set_exprs[c]
+        expr = (F.expr(e) if isinstance(e, str) else e).cast(
+            table.schema[c].dataType
+        )
+        if pred is not None:
+            expr = F.when(pred, expr).otherwise(F.col(c))
+        cols.append(expr.alias(c))
+    return cols
+
+
 def _update_table_body(
     spark: SparkSession,
     root: str,
@@ -4915,19 +4765,25 @@ def _update_table_body(
     where,
     prune,
     eq,
+    mode: str,
     gen: str,
 ) -> _TableWrite | None:
-    """Per-table UPDATE body shared by both layouts: rewrites the
-    buckets that CONTAIN a matching row (non-matching rows in those
-    buckets are carried unchanged) under ``<root>/<gen>`` and returns
-    the rewritten buckets with the written schema, or ``None`` when
-    nothing matched (nothing written). Bucket targeting is two-tier:
+    """Per-table UPDATE body of both layouts and both modes: find the
+    buckets that CONTAIN a matching row, then hand them to the
+    copy-on-write writer (those buckets with the SET applied to the
+    matching rows) or the merge-on-read writer (the matched pks die,
+    their new versions go to the overlay). ``None`` when nothing
+    matched (nothing written). Bucket targeting is two-tier:
     manifest-level skipping first (stats ranges, Bloom equalities —
-    buckets PROVEN free of matches are never opened), then an exact
-    contains-a-match refinement so a candidate bucket whose rows all
+    buckets PROVEN free of matches are never opened), then the exact
+    contains-a-match refinement, so a candidate bucket whose rows all
     miss is not identity-rewritten (no wasted IO, no phantom
-    change-feed entry)."""
-    pk, n_buckets = t["pk"], t["n_buckets"]
+    change-feed entry).
+
+    NULL-pk rows cannot be DV-updated (a NULL key anti-joins nothing,
+    so the superseded base version would survive next to its
+    replacement) — matching one in ``mode="dv"`` raises."""
+    pk, nb = t["pk"], t["n_buckets"]
     bad = {pk, MERGE_BUCKET_COL} & set(set_exprs)
     if bad:
         raise ValueError(
@@ -4948,19 +4804,10 @@ def _update_table_body(
                 f"UPDATE set column(s) {unknown} do not exist "
                 f"(table has: {sorted(logical)})"
             )
-    keep = _skipping_keep(spark, root, t, prune, None, eq)
-    cur_paths = [
-        os.path.join(root, g, f"{MERGE_BUCKET_COL}={b}")
-        for b, g in sorted(t["buckets"].items())
-        if b in keep
-    ]
-    if not cur_paths:
+    keep = sorted(_skipping_keep(spark, root, t, prune, None, eq))
+    if not keep:
         return None
-    table = _apply_dv(
-        spark, root,
-        _fill_added_columns(_read_logical(spark, t, *cur_paths), t), t,
-        buckets=keep,
-    )
+    table = _bucket_rows(spark, root, t, keep)
     unknown = sorted(set(set_exprs) - set(table.columns))
     if unknown:
         raise ValueError(
@@ -4968,39 +4815,39 @@ def _update_table_body(
             f"(table has: {sorted(table.columns)})"
         )
     pred = _update_predicate(prune, eq, where)
-    affected = sorted(
-        r.b
-        for r in table.where(pred)
-        .select(_bucket_expr(pk, n_buckets).alias("b"))
-        .distinct()
-        .collect()
+    if mode == "rewrite":
+        # the matched rows stay lazy (a full-table UPDATE must not
+        # checkpoint the table): the bucket set is observed on one
+        # scan, and the write re-reads only the buckets it found
+        affected = _match_buckets(table.where(pred), pk, nb)
+        if not affected:
+            return None
+        rows = _bucket_rows(spark, root, t, affected)
+        return _copy_on_write(
+            rows.select(*_set_columns(rows, set_exprs, pred)),
+            root, t, affected, gen,
+        )
+    # ONE job materializes the matched sliver with BOTH driver scalars
+    # observed on it (the null-pk guard and the affected bucket set);
+    # the SET projection, the DV and the overlay carry read the
+    # checkpoint, not the DV-composed candidate read again
+    matched, mm = _ckpt_with_buckets(
+        table.where(pred).withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb)),
+        F.count_if(F.col(pk).isNull()).alias("__nulls"),
     )
-    if not affected:
+    matched = matched.drop(MERGE_BUCKET_COL)
+    if int(mm["__nulls"]):
+        raise ValueError(
+            f"{root}: UPDATE mode='dv' matched a NULL-{pk} row — a "
+            "NULL key cannot be deletion-vectored (its superseded "
+            "version would survive); use mode='rewrite'"
+        )
+    if not mm["buckets"]:
         return None
-    # ONE select evaluates the predicate AND every SET expression
-    # against the PRE-update row (SQL UPDATE semantics): sequential
-    # withColumn would let a later expression — or the predicate
-    # itself — re-resolve against an already-updated column, so
-    # {"a": "b", "b": "a"} would fail to swap and a predicate on a
-    # SET column would mis-select for every column after the first
-    cols = []
-    for c in table.columns:
-        if c in set_exprs:
-            e = set_exprs[c]
-            expr = F.expr(e) if isinstance(e, str) else e
-            # cast to the column's declared type (SQL UPDATE's
-            # implicit assignment cast) so a literal cannot silently
-            # widen the physical schema of the rewritten buckets
-            cols.append(
-                F.when(pred, expr.cast(table.schema[c].dataType))
-                .otherwise(F.col(c))
-                .alias(c)
-            )
-        else:
-            cols.append(F.col(c))
-    out = table.where(_bucket_expr(pk, n_buckets).isin(affected)).select(*cols)
-    written = _write_generation(out, root, gen, t)
-    return _TableWrite({str(b): gen for b in affected}, written)
+    return _merge_on_read(
+        spark, root, t, matched.select(pk),
+        matched.select(*_set_columns(table, set_exprs)), mm["buckets"], gen,
+    )
 
 
 def update_versioned(
@@ -5037,23 +4884,20 @@ def update_versioned(
     whole buckets, matched pks join the buckets' deletion vectors
     (killing the base versions) and the new row versions land in an
     UPDATE OVERLAY sidecar — KB-scale writes for a few-row UPDATE on
-    a 100 TB table (:func:`_dv_update_table_body`); OPTIMIZE
+    a 100 TB table (:func:`_merge_on_read`); OPTIMIZE
     materializes both back to pure files; its overlay generation
     holds every NEW row version, so it gets the same write-side CHECK
     enforcement as a rewrite commit."""
-    body = _update_body(mode)
+    _check_mode(mode)
     manifest = _bucket_manifest(path, base_token)
     token = _new_token()
-    res = body(spark, path, manifest, set_exprs, where, prune, eq, f"gen-{token}")
+    res = _update_table_body(
+        spark, path, manifest, set_exprs, where, prune, eq, mode,
+        f"gen-{token}",
+    )
     return _commit_dml(
         spark, path, manifest, {"": res}, token, extra_meta, adds_rows=True
     )
-
-
-def _update_body(mode: str):
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-    return _dv_update_table_body if mode == "dv" else _update_table_body
 
 
 def apply_changes_versioned(
@@ -5244,15 +5088,8 @@ def _apply_changes_body(
     candidates = sorted(upsert_buckets | del_candidates)
     if not candidates:
         return None
-    cur_paths = [
-        os.path.join(root, base_buckets[str(b)], f"{MERGE_BUCKET_COL}={b}")
-        for b in candidates
-        if str(b) in base_buckets
-    ]
-    table = _merge_target_frame(
-        spark, root, t, cur_paths, upserts, pk,
-        [c for c in data_cols if c != pk],
-    )
+    set_cols = [c for c in data_cols if c != pk]
+    table = _merge_target_frame(spark, root, t, candidates, upserts, pk, set_cols)
     if set(table.columns) != set(data_cols):
         raise ValueError(
             f"{root}: changes columns {sorted(data_cols)} do not match "
@@ -5264,25 +5101,16 @@ def _apply_changes_body(
     # stale feed whose deletes all miss must not identity-rewrite
     # buckets (wasted IO and phantom changed-buckets in the next diff)
     matched_del = set(
-        r.b
-        for r in table.join(dels, pk, "left_semi")
-        .select(_bucket_expr(pk, n_buckets).alias("b"))
-        .distinct()
-        .collect()
+        _match_buckets(table.join(dels, pk, "left_semi"), pk, n_buckets)
     ) if (del_candidates - upsert_buckets) else set()
     affected = sorted(upsert_buckets | (matched_del & del_candidates))
     if not affected:
         return None
     keys = upserts.select(pk).unionByName(dels).distinct()
-    out = (
-        table.where(_bucket_expr(pk, n_buckets).isin(affected))
-        .join(keys, pk, "left_anti")
-        .unionByName(upserts)
-    )
-    written = _write_generation(out, root, gen, t)
-    present = set(_present_buckets(os.path.join(root, gen)))
-    return _TableWrite(
-        {str(b): (gen if b in present else None) for b in affected}, written
+    rows = _merge_target_frame(spark, root, t, affected, upserts, pk, set_cols)
+    return _copy_on_write(
+        rows.join(keys, pk, "left_anti").unionByName(upserts),
+        root, t, affected, gen,
     )
 
 
@@ -5327,14 +5155,14 @@ def delete_from_versioned_db(
     DV union, emptied-bucket drop, NULL/absent keys as no-ops) match
     the single-table DELETE, and concurrency follows the
     transactional MERGE rules."""
-    body = _delete_body(mode)
+    _check_mode(mode)
     manifest = _db_manifest(path, base_token)
     _require_tables(path, manifest, keys)
     token = _new_token()
     writes = {
-        name: body(
+        name: _delete_table_body(
             spark, os.path.join(path, name), manifest["tables"][name],
-            keys_df, f"gen-{token}",
+            keys_df, mode, f"gen-{token}",
         )
         for name, keys_df in keys.items()
     }
@@ -5361,7 +5189,7 @@ def update_versioned_db(
     follows the transactional MERGE rules. ``mode="dv"`` applies the
     merge-on-read path (DV + UPDATE overlay sidecars, no bucket
     rewrites) to every named table, all under one transaction."""
-    body = _update_body(mode)
+    _check_mode(mode)
     manifest = _db_manifest(path, base_token)
     _require_tables(path, manifest, updates)
     for name, spec in updates.items():
@@ -5378,10 +5206,10 @@ def update_versioned_db(
             )
     token = _new_token()
     writes = {
-        name: body(
+        name: _update_table_body(
             spark, os.path.join(path, name), manifest["tables"][name],
             spec["set"], spec.get("where"), spec.get("prune"),
-            spec.get("eq"), f"gen-{token}",
+            spec.get("eq"), mode, f"gen-{token}",
         )
         for name, spec in updates.items()
     }
@@ -5948,28 +5776,13 @@ def _optimize_table_body(
         candidates.sort()
     if not candidates:
         return None
-    cur = [
-        os.path.join(root, t["buckets"][str(b)], f"{MERGE_BUCKET_COL}={b}")
-        for b in candidates
-    ]
     pk, nb = t["pk"], t["n_buckets"]
-    out = (
-        # recorded-schema read: candidate buckets can span pre- and
-        # post-ALTER generations — without the superset schema, a
-        # column present only in newer files would be silently DROPPED
-        # from the compacted rewrite (physical data loss). Logical read
-        # so cluster_by/zorder_by take the user-facing (post-RENAME)
-        # names; the write translates back to physical. Added columns
-        # are filled, so the rewrite materializes them like a MERGE
-        # rewrite does. DV-composed: compaction MATERIALIZES
-        # merge-on-read deletes and updates (the commit sheds the
-        # rewritten buckets' DV and overlay entries).
-        _apply_dv(
-            spark, root,
-            _fill_added_columns(_read_logical(spark, t, *cur), t), t,
-            buckets={str(b) for b in candidates},
-        )
-        .withColumn(MERGE_BUCKET_COL, _bucket_expr(pk, nb))
+    # logical read, so cluster_by/zorder_by take the user-facing
+    # (post-RENAME) names; the write translates back to physical.
+    # Compaction MATERIALIZES merge-on-read deletes and updates (the
+    # commit sheds the rewritten buckets' DV and overlay entries).
+    out = _bucket_rows(spark, root, t, candidates).withColumn(
+        MERGE_BUCKET_COL, _bucket_expr(pk, nb)
     )
     if zorder_by:
         # bounds come from the PRE-repartition frame (a projection of

@@ -491,6 +491,54 @@ def test_cli_load_merge_buckets_layout(spark, tmp_path, capsys):
     assert got.count() == 2 and MERGE_BUCKET_COL in got.columns
 
 
+def test_cli_load_merge_buckets_applies_write_options(spark, tmp_path):
+    """--merge-buckets applies the per-table advisory write options as
+    --atomic and --merge-db do: bulk-api-batch-size caps the rows of
+    every file (maxRecordsPerFile), even when Serial mode puts both
+    rows of the one bucket in a single task."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from amaxa_spark.sources.catalog import _bucket_manifest
+
+    reg_path, acc_csv, _ = _load_fixture(tmp_path)
+    op = {
+        "version": 1,
+        "operation": [
+            {
+                "sobject": "Account",
+                "file": str(acc_csv),
+                "options": {"bulk-api-batch-size": 1, "bulk-api-mode": "Serial"},
+            }
+        ],
+    }
+    op_path = tmp_path / "load.yml"
+    op_path.write_text(yaml.safe_dump(op))
+    out = tmp_path / "out"
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    rc = main(
+        [
+            "load", str(op_path),
+            "--data-dir", str(empty),
+            "--registry", str(reg_path),
+            "--out", str(out),
+            "--merge-buckets", "1",
+        ]
+    )
+    assert rc == 0
+    tbl = str(out / "Account.parquet")
+    m = _bucket_manifest(tbl)
+    leaf = os.path.join(tbl, m["buckets"]["0"], "__mb=0")
+    rows = [
+        pq.ParquetFile(os.path.join(leaf, f)).metadata.num_rows
+        for f in os.listdir(leaf)
+        if f.endswith(".parquet")
+    ]
+    assert rows == [1, 1]
+
+
 def test_cli_load_versioned_layout(spark, tmp_path):
     """--merge-buckets --versioned writes the manifest-versioned
     layout: a committed manifest exists and merge_into_versioned can

@@ -151,19 +151,27 @@ def test_lint_allows_scalar_broadcast(spark):
 # the versioned commit core: the only functions allowed to claim a
 # chain seq. Every data commit goes through the CAS loop
 # (_commit_tables), every metadata commit through _commit_meta_edit;
-# the rest are the unconditional full-rewrite claims (one init body,
+# the rest are the unconditional full-rewrite claim (one init body,
 # _write_tables, for both layouts) and the clone's seq-0 claim. A new
 # verb with its own claim loop fails here.
 _CLAIM_SITES = {
     "_commit_tables",
     "_commit_meta_edit",
-    "_claim_next_commit",
     "_write_tables",
     "clone_versioned",
 }
 
+# the only functions allowed to write a generation of bucket files:
+# the copy-on-write writer (MERGE, DELETE, UPDATE, CDC-apply), the
+# merge-on-read writer (DV DELETE, DV UPDATE) and OPTIMIZE, whose
+# clustered and range-split layouts the writers do not make. A verb
+# with its own write tail fails here.
+_WRITE_SITES = {"_copy_on_write", "_merge_on_read", "_optimize_table_body"}
 
-def test_claims_only_in_commit_core():
+
+def _assert_only_in(name: str, sites: set) -> None:
+    """Only the top-level catalog functions in ``sites`` call
+    ``name``, once each."""
     import ast
     import os
 
@@ -179,11 +187,19 @@ def test_claims_only_in_commit_core():
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Name)
-                and node.func.id == "_claim_commit"
+                and node.func.id == name
             ):
                 callers.append(getattr(fn, "name", f"<line {fn.lineno}>"))
-    assert set(callers) <= _CLAIM_SITES, sorted(set(callers) - _CLAIM_SITES)
-    assert len(callers) <= len(_CLAIM_SITES), sorted(callers)
+    assert set(callers) <= sites, sorted(set(callers) - sites)
+    assert len(callers) <= len(sites), sorted(callers)
+
+
+def test_claims_only_in_commit_core():
+    _assert_only_in("_claim_commit", _CLAIM_SITES)
+
+
+def test_generation_writes_only_in_the_writers():
+    _assert_only_in("_write_generation", _WRITE_SITES)
 
 
 def _package_dir(*parts):
